@@ -231,11 +231,11 @@ object Bench {
       // batches can agree mid-climb, so the floor is raised to 12
       // batches (36k calls, a few seconds) before the detector may stop
       steady5("query_qps_cold", 3000, minWarm = 12)(i =>
-        { engine.queryCached(q(i)); () })
+        { engine.serve(graft.tsdb.PointReq(q(i))); () })
       // cached = repeated identical query (result-cache hit path): ~1 µs
       // steady-state, so small samples measured ONLY keyOf's JIT warmup
       val cq = q(0)
-      steady5("query_qps_cached", 200000)(_ => { engine.queryCached(cq); () })
+      steady5("query_qps_cached", 200000)(_ => { engine.serve(graft.tsdb.PointReq(cq)); () })
 
       // rollup acceleration: the CACHED SERVING-PATH read (build excluded
       // — the battery's tsdb_rollup_downsample measures build+query; this
@@ -256,19 +256,20 @@ object Bench {
         aggs = Seq(graft.tsdb.AggSpec("avg", "value"),
           graft.tsdb.AggSpec("sum", "value"), graft.tsdb.AggSpec("count", "*"),
           graft.tsdb.AggSpec("min", "value"), graft.tsdb.AggSpec("max", "value")))
-      // index budget (params repeat only at stride 138, and queryCached
+      // index budget (params repeat only at stride 138, and serve
       // caches results by params — a colliding index would hit the
       // result cache mid-measurement): warm view 130, raw measured
       // 0..29, routed warm 120..123, routed measured 30..119 — all
       // distinct mod 138, all sets disjoint
-      engine.queryCached(dq(130)) // warm the merged serving view
-      passes3("qps_downsample_raw", 10)(i => { engine.queryCached(dq(i)); () })
+      engine.serve(graft.tsdb.PointReq(dq(130))) // warm the merged serving view
+      passes3("qps_downsample_raw", 10)(i => { engine.serve(graft.tsdb.PointReq(dq(i))); () })
       engine.registerRollup("purchase", DayNs, Seq("value"))
       // routed queries serve from the DRIVER-RESIDENT rollup tier
       // (LocalRollup): materialize + collect once (excluded), warm the
       // re-agg JIT, then measure — the path is sub-ms
-      (120 until 124).foreach(i => engine.queryCached(dq(i)))
-      passes3("qps_downsample_rollup", 30)(i => { engine.queryCached(dq(30 + i)); () })
+      (120 until 124).foreach(i => engine.serve(graft.tsdb.PointReq(dq(i))))
+      passes3("qps_downsample_rollup", 30)(i =>
+        { engine.serve(graft.tsdb.PointReq(dq(30 + i))); () })
       // tag-grouped serving: the same downsample shapes collapsed across
       // series (GROUP BY TAGS ()) through the driver partial tier vs the
       // raw Spark operator
@@ -279,9 +280,9 @@ object Bench {
         val pts = engine.loadPoints().get
         graft.tsdb.TsAnalytics.aggregateByTags(pts, gq(200 + i), Nil).count(); ()
       }
-      (250 until 254).foreach(i => engine.queryByTagsServingDF(gq(i), Nil).count())
+      (250 until 254).foreach(i => engine.serve(graft.tsdb.ByTagsReq(gq(i), Nil)).rows)
       passes3("qps_groupby_rollup", 30)(i =>
-        { engine.queryByTagsServingDF(gq(300 + i), Nil).count(); () })
+        { engine.serve(graft.tsdb.ByTagsReq(gq(300 + i), Nil)).rows; () })
       // ANALYZE serving tier: cold = distinct rate queries (full Spark
       // plan each, namespaced-cache misses), cached = one repeated query
       // (the dashboard-refresh path the analyze cache exists for)
@@ -293,8 +294,8 @@ object Bench {
           + (i / 35).toLong * 1000000000L))
       val rateSpec = graft.tsdb.AnalyzeRate("value")
       steady5("qps_analyze_cold", 5, minWarm = 3, maxWarm = 10)(
-        i => { engine.analyzeServingDF(aq(i), rateSpec).count(); () })
-      // cached = the driver-side rows path (queryCached analog) — the
+        i => { engine.serve(graft.tsdb.AnalyzeReq(aq(i), rateSpec)).rows; () })
+      // cached = the driver-side rows path (point-query analog) — the
       // hit path has no per-call plan/DataFrame floor. The repeated
       // query must stay CACHEABLE AT EVERY SF: RATE is per-point, so at
       // sf1 its ~170k rows silently exceed QueryCache.maxRowsPerEntry
@@ -304,7 +305,7 @@ object Bench {
       // hit path being measured is identical either way.
       val caq = aq(0)
       steady5("qps_analyze_cached", 5000)(_ =>
-        { engine.analyzeCached(caq, graft.tsdb.AnalyzeDelta("value")); () })
+        { engine.serve(graft.tsdb.AnalyzeReq(caq, graft.tsdb.AnalyzeDelta("value"))); () })
       // cross-metric analytics: CORRELATE from the raw point scan vs the
       // rollup-partial route (points never scanned). engine.analyze is
       // the raw plan entry (no result cache), so each call measures the
@@ -368,17 +369,17 @@ object Bench {
       // driver-resident DELTA tier: pure-Scala fold over resident
       // partials, no Spark job — distinct TAGGED filters defeat the
       // result cache so each call pays the full local fold
-      engine.analyzeCached(dlq(1), deltaSpec) // make partials resident
+      engine.serve(graft.tsdb.AnalyzeReq(dlq(1), deltaSpec)) // make partials resident
       passes3("qps_delta_local", 300)(i =>
-        { engine.analyzeCached(dlq(1).copy(tags = Map("user" -> s"u$i")),
-            deltaSpec); () })
+        { engine.serve(graft.tsdb.AnalyzeReq(
+            dlq(1).copy(tags = Map("user" -> s"u$i")), deltaSpec)); () })
       // driver-resident IRATE tier: last-two-samples fold over the same
       // resident partials (LocalRollup.runIrate), no Spark job
       val irateSpec = graft.tsdb.AnalyzeIrate("value")
-      engine.analyzeCached(dlq(1), irateSpec)
+      engine.serve(graft.tsdb.AnalyzeReq(dlq(1), irateSpec))
       passes3("qps_irate_local", 300)(i =>
-        { engine.analyzeCached(dlq(1).copy(tags = Map("user" -> s"u$i")),
-            irateSpec); () })
+        { engine.serve(graft.tsdb.AnalyzeReq(
+            dlq(1).copy(tags = Map("user" -> s"u$i")), irateSpec)); () })
 
       // counter transitions (RESETS): raw lag-scan vs the long-count
       // partial route — the r9 family; the routed read is BIT-identical
@@ -394,10 +395,10 @@ object Bench {
       // driver-resident windowed tier: RESETS BY folded from resident
       // partials, no Spark job
       val resetsBySpec = graft.tsdb.AnalyzeResetsBy("value", 2L * DayNs)
-      engine.analyzeCached(dlq(1), resetsBySpec)
+      engine.serve(graft.tsdb.AnalyzeReq(dlq(1), resetsBySpec))
       passes3("qps_resets_by_local", 300)(i =>
-        { engine.analyzeCached(dlq(1).copy(tags = Map("user" -> s"u$i")),
-            resetsBySpec); () })
+        { engine.serve(graft.tsdb.AnalyzeReq(
+            dlq(1).copy(tags = Map("user" -> s"u$i")), resetsBySpec)); () })
 
       // windowed EWMA (round-10 smoothing rollup): raw per-point fold +
       // window sampling vs the stored exact fold states — the routed
@@ -416,10 +417,10 @@ object Bench {
       // driver-resident EWMA BY tier: pure-Scala pick of stored fold
       // states, no Spark job — distinct TAGGED filters defeat the
       // result cache so each call pays the full local fold
-      engine.analyzeCached(dlq(1), ewmaBySpec) // make partials resident
+      engine.serve(graft.tsdb.AnalyzeReq(dlq(1), ewmaBySpec)) // make partials resident
       passes3("qps_ewma_local", 300)(i =>
-        { engine.analyzeCached(dlq(1).copy(tags = Map("user" -> s"u$i")),
-            ewmaBySpec); () })
+        { engine.serve(graft.tsdb.AnalyzeReq(
+            dlq(1).copy(tags = Map("user" -> s"u$i")), ewmaBySpec)); () })
 
       // ------------------------------------------------------------------
       // CONCURRENT-CLIENT serving over the real framed-TCP wire (round-10;

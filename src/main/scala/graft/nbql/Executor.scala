@@ -42,26 +42,28 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
     * aggregates, ANALYZE, GROUP BY TAGS, SHOW) return the truncated flag
     * instead, telling the client to re-issue with `stream=1`. */
   final case class Rows(
-      private val source: graft.tsdb.TsdbEngine.Served,
+      private val source: TsdbEngine.Served,
       private val cursorOf: (Long, Option[Row], Boolean) => Option[String])
       extends ExecResult {
+    /** The serving tier that answered ([[TsdbEngine.serve]]); `spark`
+      * for the statements that build a plan directly (SHOW, EXPLAIN). */
+    def tier: String = source.tier
     /** The result as a lazy DataFrame. When the serving tiers answered
       * on the driver this builds a LocalRelation ON DEMAND — the
       * protocol servers never ask for it (they stream [[rowIterator]]),
       * so the per-query plan-construction + job cost (~22 ms measured,
       * vs ~50 µs for the tier serve itself — SCALE.md r13) is paid only
       * by callers that genuinely want a frame. */
-    lazy val df: DataFrame = source match {
+    lazy val df: DataFrame = source.result match {
       case Left((rows, sch)) =>
         engine.spark.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
       case Right(d) => d
     }
-    def schema: org.apache.spark.sql.types.StructType =
-      source.fold(_._2, _.schema)
+    def schema: org.apache.spark.sql.types.StructType = source.schema
     /** Stream the result rows: driver-resident array when the tiers
       * answered (no job), `toLocalIterator` over the plan otherwise
       * (partitions stream as they finish, driver memory O(1 row)). */
-    def rowIterator(): Iterator[Row] = source match {
+    def rowIterator(): Iterator[Row] = source.result match {
       case Left((rows, _)) => rows.iterator
       case Right(d) =>
         val it = d.toLocalIterator()
@@ -77,7 +79,7 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
     /** Budget-capped collect: (rows, nextCursor, truncatedByBudget). */
     def pageBudgeted(budget: Long): (Array[Row], Option[String], Boolean) = {
       val cap = math.min(math.max(budget, 1L), Int.MaxValue - 1L).toInt
-      val rows = source match {
+      val rows = source.result match {
         case Left((rs, _)) => rs.take(cap + 1)
         case Right(d) => d.limit(cap + 1).collect()
       }
@@ -95,7 +97,7 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
   /** DataFrame-sourced [[Rows]] (the SHOW/EXPLAIN/snapshot shapes). */
   private def dfRows(df: DataFrame,
       cursorOf: (Long, Option[Row], Boolean) => Option[String]): Rows =
-    Rows(Right(df), cursorOf)
+    Rows(TsdbEngine.Served(Right(df), "spark"), cursorOf)
   final case class Ack(message: String) extends ExecResult
 
   private val noCursor: (Long, Option[Row], Boolean) => Option[String] =
@@ -132,33 +134,11 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
 
     case q: QueryStatement =>
       prepareQuery(q).map { params =>
-        val cursorOf: (Long, Option[Row], Boolean) => Option[String] =
-          if (params.isFinalAgg) noCursor
-          else { (delivered, lastRow, forced) =>
-            // a full page means more may follow — resume after its last row
-            // (`executor.go:349-351` emits the cursor alongside the rows);
-            // `forced` = the page was cut by the serving budget, which
-            // also warrants a resume cursor even without a LIMIT
-            lastRow.filter(_ =>
-              forced || params.limit.contains(delivered)).map { last =>
-              val tsField = if (params.isDownsample) "window_start" else "timestamp"
-              Cursor(last.getAs[Long](tsField),
-                last.getAs[String]("series_key")).encode
-            }
-          }
-        // serving-tier entry: result cache + driver-resident tiers front
-        // the protocol path (the reference's NBQL-layer cache position);
-        // budget-truncated results transparently stream the full plan.
-        // Tag-grouped queries bypass the per-series serving tiers entirely.
-        (q.analyze, q.groupByTags) match {
-          case (Some(spec), _) =>
-            val served = engine.serveAnalyze(params, withTopKKeys(spec, q),
-              q.analyzeSplitNs)
-            Rows(served, analyticCursorOf(served, params))
-          case (None, Some(keys)) =>
-            Rows(engine.serveByTags(params, keys), noCursor)
-          case (None, None) => Rows(engine.serveQuery(params), cursorOf)
-        }
+        // the one serving entry: result cache + driver-resident tiers
+        // front the protocol path (the reference's NBQL-layer cache
+        // position); over-budget results stream the full plan
+        val served = engine.serve(requestOf(q, params))
+        Rows(served, cursorOf(served, params))
       }
 
     /** `EXPLAIN QUERY …` (extension): the physical plan Spark would run
@@ -167,11 +147,10 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
       * One `plan` column, one row per line of `explain("formatted")`. */
     case ExplainStatement(q) =>
       prepareQuery(q).map { params =>
-        val df = (q.analyze, q.groupByTags) match {
-          case (Some(spec), _) =>
-            engine.analyze(params, withTopKKeys(spec, q), q.analyzeSplitNs)
-          case (None, Some(keys)) => engine.queryByTags(params, keys)
-          case (None, None) => engine.query(params)
+        val df = requestOf(q, params) match {
+          case AnalyzeReq(p, spec, splitNs) => engine.analyze(p, spec, splitNs)
+          case ByTagsReq(p, keys) => engine.queryByTags(p, keys)
+          case PointReq(p) => engine.query(p)
         }
         val lines = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -186,29 +165,37 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
     case other => runRest(other)
   }
 
-  /** TOPK carries its grouping keys in the spec (validated upstream). */
-  private def withTopKKeys(spec: graft.tsdb.AnalyzeSpec,
-      q: QueryStatement): graft.tsdb.AnalyzeSpec = spec match {
-    case t: graft.tsdb.AnalyzeTopK => t.copy(tagKeys = q.groupByTags.getOrElse(Nil))
-    case s => s
-  }
+  /** The [[TsdbEngine.serve]] request for a validated QUERY statement.
+    * Tag-grouped queries bypass the per-series tiers; TOPK carries its
+    * grouping keys in the spec (validated upstream). */
+  private def requestOf(q: QueryStatement, params: QueryParams): ServeReq =
+    (q.analyze, q.groupByTags) match {
+      case (Some(t: AnalyzeTopK), keys) =>
+        AnalyzeReq(params, t.copy(tagKeys = keys.getOrElse(Nil)), q.analyzeSplitNs)
+      case (Some(spec), _) => AnalyzeReq(params, spec, q.analyzeSplitNs)
+      case (None, Some(keys)) => ByTagsReq(params, keys)
+      case (None, None) => PointReq(params)
+    }
 
-  /** Keyset cursor for the per-series analytics (round 13): their
-    * outputs order by (series_key[, window_start | timestamp]), so a
-    * budget-cut or LIMIT-full page resumes AFTER the last row's key —
-    * the over-budget ANALYZE cliff pages through the same row-budgeted
-    * machinery as plain queries instead of forcing `stream=1`
-    * ([[TsdbEngine.analyze]]'s AFTER filter is the other half). Field
-    * access is POSITIONAL: the driver-resident tiers hand back
-    * schema-less `GenericRow`s, where name lookup throws. Group-keyed
-    * shapes (no series_key column) keep the no-cursor contract. */
-  private def analyticCursorOf(served: graft.tsdb.TsdbEngine.Served,
+  /** Keyset cursor: raw rows order by (timestamp, series_key),
+    * downsamples by (window_start, series_key) and the per-series
+    * analytics by (series_key[, window_start | timestamp]) (round 13), so
+    * a LIMIT-full page — or one cut by the serving budget (`forced`),
+    * which warrants a resume cursor even without a LIMIT — resumes AFTER
+    * the last row's key (`executor.go:349-351` emits the cursor alongside
+    * the rows; [[TsdbEngine.analyze]]'s AFTER filter is the analytics'
+    * other half). Field access is POSITIONAL: the driver-resident tiers
+    * hand back schema-less `GenericRow`s, where name lookup throws.
+    * Whole-range aggregates and the group-keyed shapes (GROUP BY TAGS,
+    * TOPK/CORRELATE/RATIO: no series_key column) keep the no-cursor
+    * contract. */
+  private def cursorOf(served: TsdbEngine.Served,
       params: QueryParams): (Long, Option[Row], Boolean) => Option[String] = {
-    val names = served.fold(_._2, _.schema).fieldNames
+    val names = served.schema.fieldNames
     val iSk = names.indexOf("series_key")
     val iSec = Seq("window_start", "timestamp")
       .map(names.indexOf(_)).find(_ >= 0)
-    if (iSk < 0) noCursor
+    if (iSk < 0 || params.isFinalAgg) noCursor
     else (delivered, lastRow, forced) =>
       lastRow.filter(_ => forced || params.limit.contains(delivered)).map {
         last => Cursor(iSec.fold(0L)(last.getLong), last.getString(iSk)).encode

@@ -250,11 +250,10 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
                 // instead of materializing the whole matched set on the
                 // driver (the same seam the query result path uses)
                 val it = matched.toLocalIterator()
-                while (it.hasNext) {
-                  val row = it.next()
+                val encode = pointEncoder(matched.schema)
+                while (it.hasNext)
                   Wire.writeFrame(out, Wire.CmdQueryResultPart,
-                    Wire.encodeQueryResultPart(toPointItem(row, matched.schema, isAgg = false)))
-                }
+                    Wire.encodeQueryResultPart(encode(it.next())))
               }
               ts
           }
@@ -291,17 +290,14 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     * then QueryEnd with the row count
     * (`tcp_connection_handler.go:216-280`). */
   private def streamRows(out: java.io.OutputStream, r: NbqlExecutor#Rows): Unit = {
-    val schema = r.schema
-    val names = schema.fieldNames.toSet
-    val isAgg = names.contains("window_start") ||
-      (!names.contains("fields") && names.contains("timestamp"))
+    val encode = pointEncoder(r.schema)
     var delivered = 0L
     var last: Option[Row] = None
     val it = r.rowIterator()
     while (it.hasNext) {
       val row = it.next()
       Wire.writeFrame(out, Wire.CmdQueryResultPart,
-        Wire.encodeQueryResultPart(toPointItem(row, schema, isAgg)))
+        Wire.encodeQueryResultPart(encode(row)))
       delivered += 1
       last = Some(row)
     }
@@ -318,60 +314,70 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     Wire.writeFrame(out, Wire.CmdQueryEnd, Wire.encodeQueryEnd(delivered))
   }
 
-  private def toPointItem(row: Row, schema: StructType, isAgg: Boolean): Wire.PointItem = {
+  /** Row → wire item for one result schema: column indices are resolved
+    * ONCE per result and every row is read BY POSITION, as the HTTP
+    * renderer does — the driver-resident tiers hand back schema-less
+    * rows, where name lookup throws. */
+  private def pointEncoder(schema: StructType): Row => Wire.PointItem = {
     val names = schema.fieldNames
-    def has(n: String) = names.contains(n)
-    def tagsOf: Map[String, String] =
-      if (has("tags")) Option(row.getAs[scala.collection.Map[String, String]]("tags"))
-        .map(_.toMap).getOrElse(Map.empty)
-      else Map.empty
-    if (has("fields")) {
+    val Seq(iMetric, iTags, iTs, iFields, iSeq, iWs) =
+      Seq("metric", "tags", "timestamp", "fields", "seq", "window_start")
+        .map(names.indexOf(_))
+    def metricOf(row: Row): String =
+      if (iMetric < 0 || row.isNullAt(iMetric)) "" else row.getString(iMetric)
+    def tagsOf(row: Row): Map[String, String] =
+      if (iTags < 0 || row.isNullAt(iTags)) Map.empty
+      else row.getMap[String, String](iTags).toMap
+    if (iFields >= 0) {
       // raw point row: metric, tags, timestamp, fields, seq
-      val fv = Option(row.getAs[scala.collection.Map[String, Row]]("fields"))
-        .map(_.toMap).getOrElse(Map.empty)
-        .map { case (k, s) =>
-          k -> (if (s == null) FieldValue.NilValue
-          else FieldValue(Option(s.getAs[java.lang.Double]("d")).map(_.doubleValue()),
-            Option(s.getAs[java.lang.Long]("l")).map(_.longValue()),
-            Option(s.getAs[String]("s")),
-            Option(s.getAs[java.lang.Boolean]("b")).map(_.booleanValue())))
-        }
-      Wire.PointItem(if (has("seq")) row.getAs[Long]("seq") else 0L,
-        if (has("metric")) row.getAs[String]("metric") else "",
-        tagsOf, row.getAs[Long]("timestamp"), fv, 0L, Nil, isAggregated = false)
-    } else if (isAgg) {
-      val ws = if (has("window_start")) row.getAs[Long]("window_start")
-        else row.getAs[Long]("timestamp")
+      val value = schema(iFields).dataType.asInstanceOf[MapType].valueType
+        .asInstanceOf[StructType]
+      val Seq(iD, iL, iS, iB) = Seq("d", "l", "s", "b").map(value.fieldIndex)
+      def opt[A](v: Row, i: Int)(get: Int => A): Option[A] =
+        if (v.isNullAt(i)) None else Some(get(i))
+      row => {
+        val fv =
+          if (row.isNullAt(iFields)) Map.empty[String, FieldValue]
+          else row.getMap[String, Row](iFields).iterator.map { case (k, v) =>
+            k -> (if (v == null) FieldValue.NilValue
+            else FieldValue(opt(v, iD)(v.getDouble), opt(v, iL)(v.getLong),
+              opt(v, iS)(v.getString), opt(v, iB)(v.getBoolean)))
+          }.toMap
+        Wire.PointItem(if (iSeq >= 0) row.getLong(iSeq) else 0L, metricOf(row),
+          tagsOf(row), row.getLong(iTs), fv, 0L, Nil, isAggregated = false)
+      }
+    } else if (iWs >= 0 || iTs >= 0) {
+      // aggregated row: every numeric column past the keys is an aggregate
+      val iW = if (iWs >= 0) iWs else iTs
       val skip = Set("metric", "tags", "series_key", "window_start", "window_end",
         "timestamp")
-      val aggs = schema.fields.iterator.filterNot(f => skip(f.name)).flatMap { f =>
-        val v: Option[Double] = f.dataType match {
-          case DoubleType | FloatType =>
-            Option(row.getAs[Number](f.name)).map(_.doubleValue())
-          case LongType | IntegerType =>
-            Option(row.getAs[Number](f.name)).map(_.doubleValue())
-          case _ => None
-        }
-        v.map(f.name -> _)
-      }.toSeq
-      Wire.PointItem(0L, if (has("metric")) row.getAs[String]("metric") else "",
-        tagsOf, ws, Map.empty, ws, aggs, isAggregated = true)
+      val aggs = schema.fields.indices.filter { i =>
+        !skip(names(i)) && (schema(i).dataType match {
+          case DoubleType | FloatType | LongType | IntegerType => true
+          case _ => false
+        })
+      }
+      row => {
+        val ws = row.getLong(iW)
+        Wire.PointItem(0L, metricOf(row), tagsOf(row), ws, Map.empty, ws,
+          aggs.filterNot(row.isNullAt)
+            .map(i => names(i) -> row.get(i).asInstanceOf[Number].doubleValue),
+          isAggregated = true)
+      }
     } else {
       // SHOW-style rows: every column rides as a field value
-      val fv = schema.fields.iterator.map { f =>
-        val v = if (row.isNullAt(row.fieldIndex(f.name))) FieldValue.NilValue
-        else f.dataType match {
-          case StringType => FieldValue.ofString(row.getAs[String](f.name))
+      row => Wire.PointItem(0L, "", Map.empty, 0L, schema.fields.indices.map { i =>
+        names(i) -> (if (row.isNullAt(i)) FieldValue.NilValue
+        else schema(i).dataType match {
+          case StringType => FieldValue.ofString(row.getString(i))
           case LongType | IntegerType =>
-            FieldValue.ofLong(row.getAs[Number](f.name).longValue())
+            FieldValue.ofLong(row.get(i).asInstanceOf[Number].longValue())
           case DoubleType | FloatType =>
-            FieldValue.ofDouble(row.getAs[Number](f.name).doubleValue())
-          case BooleanType => FieldValue.ofBool(row.getAs[Boolean](f.name))
-          case _ => FieldValue.ofString(String.valueOf(row.get(row.fieldIndex(f.name))))
-        }
-        f.name -> v
-      }.toMap
-      Wire.PointItem(0L, "", Map.empty, 0L, fv, 0L, Nil, isAggregated = false)
+            FieldValue.ofDouble(row.get(i).asInstanceOf[Number].doubleValue())
+          case BooleanType => FieldValue.ofBool(row.getBoolean(i))
+          case _ => FieldValue.ofString(String.valueOf(row.get(i)))
+        })
+      }.toMap, 0L, Nil, isAggregated = false)
     }
   }
 }

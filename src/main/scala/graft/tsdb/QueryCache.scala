@@ -96,10 +96,8 @@ final class QueryCache(capacity: Int = 256, maxRowsPerEntry: Int = 100000) {
     s"${keyOf(p)}|ANALYZE|$specKey|${splitNs.getOrElse(0L)}"
   }
 
-  def get(p: QueryParams, currentEpoch: Long): Option[(Array[Row], StructType)] =
-    getByKey(keyOf(p), currentEpoch)
-
-  /** Raw-key variant backing both the point-query and ANALYZE entries. */
+  /** The entry under a [[keyOf]] or [[analyzeKeyOf]] key, when it was
+    * stored at `currentEpoch`. */
   def getByKey(key: String, currentEpoch: Long): Option[(Array[Row], StructType)] =
     synchronized {
       Option(lru.get(key)) match {
@@ -109,9 +107,6 @@ final class QueryCache(capacity: Int = 256, maxRowsPerEntry: Int = 100000) {
         case None => missCount += 1; None
       }
     }
-
-  def put(p: QueryParams, epoch: Long, rows: Array[Row], schema: StructType): Unit =
-    putByKey(keyOf(p), epoch, rows, schema)
 
   def putByKey(key: String, epoch: Long, rows: Array[Row],
       schema: StructType): Unit =

@@ -233,3 +233,26 @@ final case class QueryParams(
   /** FILL materializes the slot grid even without EMIT EMPTY WINDOWS. */
   def emitsWindows: Boolean = emitEmptyWindows || fill != FillNone
 }
+
+/** One NBQL QUERY shape for [[TsdbEngine.serve]], the single serving
+  * entry (the reference answers every QUERY through one executor path,
+  * `api/nbql/executor.go:131-172`). */
+sealed trait ServeReq {
+  def params: QueryParams
+  /** The same request over `p` (a PreQuery listener's rewrite). */
+  def withParams(p: QueryParams): ServeReq
+}
+/** A per-series point, downsample or whole-range aggregate query. */
+final case class PointReq(params: QueryParams) extends ServeReq {
+  def withParams(p: QueryParams): ServeReq = copy(params = p)
+}
+/** `QUERY … ANALYZE <op> [SPLIT <dur>|AUTO]`. */
+final case class AnalyzeReq(params: QueryParams, spec: AnalyzeSpec,
+    splitNs: Option[Long] = None) extends ServeReq {
+  def withParams(p: QueryParams): ServeReq = copy(params = p)
+}
+/** `QUERY … AGGREGATE (…) GROUP BY TAGS (keys)`. */
+final case class ByTagsReq(params: QueryParams, tagKeys: Seq[String])
+    extends ServeReq {
+  def withParams(p: QueryParams): ServeReq = copy(params = p)
+}

@@ -827,21 +827,36 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
 
   def loadTombstones(): Seq[Tombstone] = snap.tombs.map(tombOf)
 
-  /** Execute a query with full merge/tombstone semantics. A `PreQuery`
-    * listener may rewrite the params or veto (throws [[HookVetoException]]
-    * — this API has no error channel); `PostQuery` observes params +
-    * plan-construction time (execution is lazy downstream). */
-  def query(params: QueryParams): DataFrame = queryImpl(params, routed = false)
+  /** Execute a query with full merge/tombstone semantics — the unrouted
+    * ground truth every serving tier is spec-asserted against. A
+    * `PreQuery` listener may rewrite the params or veto (throws
+    * [[HookVetoException]] — this API has no error channel); `PostQuery`
+    * observes params + plan-construction time (execution is lazy
+    * downstream). */
+  def query(params: QueryParams): DataFrame = hooked(params) { p =>
+    QueryEngine.run(loadPoints().getOrElse(emptyPoints(spark)), p, loadTombstones())
+  }
 
-  /** [[query]] with rollup routing: identical results (spec-asserted in
-    * `RollupSpec`), but a registered rollup covering the shape answers
-    * from materialized partials. [[query]] itself stays unrouted so it
-    * remains the ground-truth path specs compare against. */
-  def queryRouted(params: QueryParams): DataFrame = queryImpl(params, routed = true)
+  /** Run `f` over the PreQuery-rewritten params (a veto throws
+    * [[HookVetoException]]), then announce PostQuery with `f`'s time. */
+  private def hooked[A](params: QueryParams)(f: QueryParams => A): A = {
+    var p = params
+    if (hooks.hasListeners(EventType.PreQuery)) {
+      val pay = new Payloads.PreQuery(p)
+      hooks.trigger(HookEvent(EventType.PreQuery, pay)) match {
+        case Left(err) => throw new HookVetoException(err)
+        case Right(()) => p = pay.params
+      }
+    }
+    val t0 = System.nanoTime()
+    val out = f(p)
+    firePost(EventType.PostQuery, Payloads.PostQuery(p, System.nanoTime() - t0))
+    out
+  }
 
   /** Aggregation across series grouped by tag keys
     * ([[TsAnalytics.aggregateByTags]]) over this engine's storage.
-    * Deliberately NOT a [[QueryParams]] field: the serving tiers and
+    * Deliberately NOT a [[QueryParams]] field: the point-query tiers and
     * result cache are per-series shapes and must never see a tag-grouped
     * query. A registered rollup covering the shape DOES accelerate it —
     * [[Rollup.runByTags]] merges the same partials by tag-tuple instead
@@ -863,14 +878,22 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       params.fill == FillNone && !params.emitEmptyWindows && params.afterKey.isEmpty
 
   /** `QUERY m … ANALYZE <op>` — the [[TsAnalytics]] pack over this
-    * engine's storage (NBQL extension), as the raw Spark plan. The
-    * protocol path serves through [[analyzeServingDF]], which fronts
-    * THIS with the result cache under a namespaced key
-    * ([[QueryCache.analyzeKeyOf]] — an ANALYZE can never collide with
-    * its plain-QUERY twin). LIMIT applies to the ordered analytic
+    * engine's storage (NBQL extension), as a Spark plan. The protocol
+    * path serves through [[serve]], which fronts THIS with the result
+    * cache under a namespaced key ([[QueryCache.analyzeKeyOf]] — an
+    * ANALYZE can never collide with its plain-QUERY twin) and the
+    * driver-resident rollup tier. LIMIT applies to the ordered analytic
     * output. */
   def analyze(params: QueryParams, spec: AnalyzeSpec,
-      splitNs0: Option[Long] = None): DataFrame = {
+      splitNs: Option[Long] = None): DataFrame =
+    analyzeRouted(params, spec, splitNs)._1
+
+  /** [[analyze]]'s plan plus its route: `rollup-<op>` when a registered
+    * rollup's partials answer (|series|×windows partial rows instead of
+    * raw points; tombstones are immaterial — rollup views are built over
+    * the merged, tombstone-applied frame), `analyze-raw` otherwise. */
+  private[graft] def analyzeRouted(params: QueryParams, spec: AnalyzeSpec,
+      splitNs0: Option[Long] = None): (DataFrame, String) = {
     // smoothing-rate ranges checked HERE like registerRollup's — the NBQL
     // parser validates its own input, but a direct-API caller would
     // otherwise only fail inside the native fold's Catalyst type check
@@ -895,123 +918,152 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         TsAnalytics.autoSplitNs(s0, e0, spark.sparkContext.defaultParallelism)
       case v => v
     }
-    val df = spec match {
+    def raw(df: DataFrame): (DataFrame, String) = (df, "analyze-raw")
+    // the registered rollup's plan when it `covers` the analytic and
+    // `eligible` accepts the shape over its view; `unrouted` otherwise
+    def routed(tier: String, covers: RollupReg => Boolean,
+        eligible: (RollupReg, DataFrame) => Boolean)(
+        run: (RollupReg, DataFrame) => DataFrame)(
+        unrouted: => DataFrame): (DataFrame, String) =
+      Option(rollupSpecs.get(params.metric)).filter(covers)
+        .map(s => (s, rollupView(params.metric, s)))
+        .filter(eligible.tupled)
+        .map { case (s, v) => (run(s, v), tier) }
+        .getOrElse(raw(unrouted))
+    def onField(f: String): RollupReg => Boolean = _.fields.contains(f)
+    def project(r: (DataFrame, String), cols: Column*): (DataFrame, String) =
+      (r._1.select(cols: _*), r._2)
+    val perSeries = Seq("metric", "tags", "series_key").map(col)
+    // WINDOWED delta (`DELTA BY` / `RATE BY`): the in-window `__inc` +
+    // boundary decomposition grouped into target windows when the window
+    // is a multiple of the grain ([[Rollup.runDeltaBy]])
+    def deltaBy(f: String, w: Long) = routed("rollup-delta-by", onField(f),
+        (s, v) => Rollup.supportsDeltaBy(params, s.intervalNs, v, f, w))(
+        (s, v) => Rollup.runDeltaBy(v, s.intervalNs, params, f, w))(
+      TsAnalytics.windowedDelta(pts, params, w, field = f,
+        tombstones = tombs, splitNs = splitNs))
+    // RESETS/CHANGES: exact long transition counts, so the route is
+    // BIT-identical to raw, not just value-equal ([[Rollup.runTransitions]])
+    def transitions(f: String) = routed("rollup-transitions", onField(f),
+        (s, v) => Rollup.supportsTransitions(params, s.intervalNs, v, f))(
+        (s, v) => Rollup.runTransitions(v, s.intervalNs, params, f))(
+      TsAnalytics.transitions(pts, params, field = f, tombstones = tombs,
+        splitNs = splitNs))
+    def transitionsBy(f: String, w: Long) =
+      routed("rollup-transitions-by", onField(f),
+        (s, v) => Rollup.supportsTransitionsBy(params, s.intervalNs, v, f, w))(
+        (s, v) => Rollup.runTransitionsBy(v, s.intervalNs, params, f, w))(
+      TsAnalytics.windowedTransitions(pts, params, w, field = f,
+        tombstones = tombs, splitNs = splitNs))
+    // PREDICT/DERIV trend fit: the stored time moments shift to the query
+    // anchor and merge as plain sums ([[Rollup.runPredict]])
+    def predict(f: String, h: Long) = routed("rollup-predict", onField(f),
+        (s, v) => Rollup.supportsPredict(params, s.intervalNs, v, f))(
+        (s, v) => Rollup.runPredict(v, s.intervalNs, params, f, h))(
+      TsAnalytics.predictLinear(pts, params, h, field = f,
+        tombstones = tombs, splitNs = splitNs))
+    // EWMA/HOLT … BY: served from stored fold states only when the
+    // registration carries the EXACT same [[SmoothSpec]] (a different α
+    // is a different fold) and the range start is covered: the cached
+    // per-(metric, epoch) min window bound answers the common
+    // from-the-start dashboard with NO job; only a mid-range start pays
+    // the limit-1 probe. BIT-identical ([[SmoothSpec]] contract).
+    def smoothBy(s: SmoothSpec, w: Long) =
+      routed(s"rollup-${s.kind}", _.smooth.contains(s),
+        (r, v) => Rollup.supportsSmoothShape(params, r.intervalNs, v, s, w) &&
+          (rollupMinWindowStart(params.metric, r, v) >= params.startNs ||
+            Rollup.smoothRangeStartProbe(v, params, s)))(
+        (r, v) => Rollup.runSmoothBy(v, r.intervalNs, params, s, w))(
+        if (s.kind == "ewma")
+          TsAnalytics.ewmaSmoothBy(pts, params, s.alpha, w, field = s.field,
+            tombstones = tombs, splitNs = splitNs)
+        else
+          TsAnalytics.holtSmoothBy(pts, params, s.alpha, s.beta, w,
+            field = s.field, tombstones = tombs, splitNs = splitNs))
+    val (df, tier) = spec match {
       case AnalyzeRate(f) =>
-        TsAnalytics.rate(pts, params, field = f, tombstones = tombs,
-          splitNs = splitNs)
+        raw(TsAnalytics.rate(pts, params, field = f, tombstones = tombs,
+          splitNs = splitNs))
       case AnalyzeDelta(f) =>
-        // rollup-routed when a registered rollup covers the field with
-        // the in-window increase partial: |series|×windows partial rows
-        // instead of raw points ([[Rollup.runDelta]]'s exact
-        // decomposition; tombstones are immaterial — rollup views are
-        // built over the merged, tombstone-applied frame)
-        val routed = Option(rollupSpecs.get(params.metric))
-          .filter(spec => spec.fields.contains(f))
-          .map(spec => (spec, rollupView(params.metric, spec)))
-          .filter { case (spec, view) =>
-            Rollup.supportsDelta(params, spec.intervalNs, view, f) }
-          .map { case (spec, view) =>
-            lastServePath = "rollup-delta"
-            Rollup.runDelta(view, spec.intervalNs, params, f)
-          }
-        routed.getOrElse {
-          lastServePath = "analyze-raw"
+        routed("rollup-delta", onField(f),
+            (s, v) => Rollup.supportsDelta(params, s.intervalNs, v, f))(
+            (s, v) => Rollup.runDelta(v, s.intervalNs, params, f))(
           TsAnalytics.rangeDelta(pts, params, field = f, tombstones = tombs,
-            splitNs = splitNs)
-        }
-      case AnalyzeDeltaBy(f, w) =>
-        deltaByPath(pts, tombs, params, f, w, splitNs)
+            splitNs = splitNs))
+      case AnalyzeDeltaBy(f, w) => deltaBy(f, w)
       case AnalyzeRateBy(f, w) =>
         // per-window average per-second rate: the windowed increase over
-        // the window duration — identical routing (same partials), one
-        // projection on top
-        deltaByPath(pts, tombs, params, f, w, splitNs)
-          .select(col("metric"), col("tags"), col("series_key"),
-            col("window_start"), col("n_points"),
-            (col("increase") * lit(1e9) / lit(w.toDouble))
-              .as("rate_per_sec"))
+        // the window duration — same partials, one projection on top
+        project(deltaBy(f, w), perSeries ++ Seq(col("window_start"),
+          col("n_points"), (col("increase") * lit(1e9) / lit(w.toDouble))
+            .as("rate_per_sec")): _*)
       case AnalyzeIrate(f) =>
-        TsAnalytics.irate(pts, params, field = f, tombstones = tombs,
-          splitNs = splitNs)
+        raw(TsAnalytics.irate(pts, params, field = f, tombstones = tombs,
+          splitNs = splitNs))
       case AnalyzeResets(f) =>
-        transitionsPath(pts, tombs, params, f, splitNs, "resets")
+        project(transitions(f), perSeries :+ col("n_points") :+ col("resets"): _*)
       case AnalyzeChanges(f) =>
-        transitionsPath(pts, tombs, params, f, splitNs, "changes")
+        project(transitions(f), perSeries :+ col("n_points") :+ col("changes"): _*)
       case AnalyzeResetsBy(f, w) =>
-        transitionsByPath(pts, tombs, params, f, w, splitNs, "resets")
+        project(transitionsBy(f, w), perSeries ++
+          Seq(col("window_start"), col("n_points"), col("resets")): _*)
       case AnalyzeChangesBy(f, w) =>
-        transitionsByPath(pts, tombs, params, f, w, splitNs, "changes")
-      case AnalyzePredict(f, h) =>
-        predictPath(pts, tombs, params, f, h, splitNs)
+        project(transitionsBy(f, w), perSeries ++
+          Seq(col("window_start"), col("n_points"), col("changes")): _*)
+      case AnalyzePredict(f, h) => predict(f, h)
       case AnalyzeDeriv(f) =>
         // PromQL deriv(): the PREDICT trend fit without the forecast —
-        // identical routing (the moments don't depend on the horizon),
-        // projected to the slope
-        predictPath(pts, tombs, params, f, 0L, splitNs)
-          .select(col("metric"), col("tags"), col("series_key"),
-            col("n_points"), col("last_ts"), col("slope_per_sec"))
+        // the moments don't depend on the horizon
+        project(predict(f, 0L), perSeries ++
+          Seq(col("n_points"), col("last_ts"), col("slope_per_sec")): _*)
       case AnalyzeEwma(f, a) =>
-        TsAnalytics.ewmaSmooth(pts, params, a, field = f, tombstones = tombs,
-          splitNs = splitNs)
-      case AnalyzeEwmaBy(f, a, w) =>
-        smoothByPath(pts, tombs, params, SmoothSpec(f, "ewma", a), w, splitNs)
+        raw(TsAnalytics.ewmaSmooth(pts, params, a, field = f,
+          tombstones = tombs, splitNs = splitNs))
+      case AnalyzeEwmaBy(f, a, w) => smoothBy(SmoothSpec(f, "ewma", a), w)
       case AnalyzeHolt(f, a, b) =>
-        TsAnalytics.holtSmooth(pts, params, a, b, field = f,
-          tombstones = tombs, splitNs = splitNs)
-      case AnalyzeHoltBy(f, a, b, w) =>
-        smoothByPath(pts, tombs, params, SmoothSpec(f, "holt", a, b), w, splitNs)
+        raw(TsAnalytics.holtSmooth(pts, params, a, b, field = f,
+          tombstones = tombs, splitNs = splitNs))
+      case AnalyzeHoltBy(f, a, b, w) => smoothBy(SmoothSpec(f, "holt", a, b), w)
       case AnalyzeTwa(f, iv) =>
-        // rollup-routed when the frame stores the LOCF integral partial
+        // routed when the frame stores the LOCF integral partial
         // (`__area`) and the TWA interval is a multiple of the grain
         // ([[Rollup.runTwa]])
         val pTwa = params.copy(downsampleNs = Some(iv))
-        val routed = Option(rollupSpecs.get(params.metric))
-          .filter(spec => spec.fields.contains(f))
-          .map(spec => (spec, rollupView(params.metric, spec)))
-          .filter { case (spec, view) =>
-            Rollup.supportsTwa(pTwa, spec.intervalNs, view, f) }
-          .map { case (spec, view) =>
-            lastServePath = "rollup-twa"
-            Rollup.runTwa(view, spec.intervalNs, pTwa, f)
-          }
-        routed.getOrElse {
-          lastServePath = "analyze-raw"
+        routed("rollup-twa", onField(f),
+            (s, v) => Rollup.supportsTwa(pTwa, s.intervalNs, v, f))(
+            (s, v) => Rollup.runTwa(v, s.intervalNs, pTwa, f))(
           TsAnalytics.timeWeightedAvg(pts, pTwa, field = f,
-            tombstones = tombs, splitNs = splitNs)
-        }
+            tombstones = tombs, splitNs = splitNs))
       case AnalyzeCumsum(f) =>
-        TsAnalytics.runningAggregates(pts, params, field = f,
-          tombstones = tombs, splitNs = splitNs)
+        raw(TsAnalytics.runningAggregates(pts, params, field = f,
+          tombstones = tombs, splitNs = splitNs))
       case AnalyzeZScore(f, lb, th) =>
         // minPoints clamps to the lookback so small NBQL lookbacks are
         // legal (the grammar doesn't carry minPoints; 5 is the default
         // warm-up, `TsAnalytics.rollingZScore`)
-        TsAnalytics.rollingZScore(pts, params, field = f, lookback = lb,
+        raw(TsAnalytics.rollingZScore(pts, params, field = f, lookback = lb,
           minPoints = math.min(5, lb), threshold = th, tombstones = tombs,
-          splitNs = splitNs)
+          splitNs = splitNs))
       case AnalyzeCorrelate(f, b, key, iv, mb) =>
         val (s0, e0) = analyzeCrossRange(pts, params, b)
         pairedFromRollups(params.metric, b, key, iv, s0, e0, f) match {
           case Some(paired) =>
-            lastServePath = "rollup-correlate"
-            TsAnalytics.correlateFinish(paired, mb)
+            (TsAnalytics.correlateFinish(paired, mb), "rollup-correlate")
           case None =>
-            TsAnalytics.correlate(pts, params.metric, b, key, iv, s0, e0,
-              field = f, minBuckets = mb, tombstones = tombs)
+            raw(TsAnalytics.correlate(pts, params.metric, b, key, iv, s0, e0,
+              field = f, minBuckets = mb, tombstones = tombs))
         }
       case AnalyzeRatio(f, b, key, iv) =>
         val (s0, e0) = analyzeCrossRange(pts, params, b)
         pairedFromRollups(params.metric, b, key, iv, s0, e0, f) match {
-          case Some(paired) =>
-            lastServePath = "rollup-ratio"
-            TsAnalytics.ratioFinish(paired)
+          case Some(paired) => (TsAnalytics.ratioFinish(paired), "rollup-ratio")
           case None =>
-            TsAnalytics.ratio(pts, params.metric, b, key, iv, s0, e0,
-              field = f, tombstones = tombs)
+            raw(TsAnalytics.ratio(pts, params.metric, b, key, iv, s0, e0,
+              field = f, tombstones = tombs))
         }
       case AnalyzeTopK(k, by, keys, asc) =>
-        TsAnalytics.topKGroups(pts, params, keys, k, by, tombstones = tombs,
-          ascending = asc)
+        raw(TsAnalytics.topKGroups(pts, params, keys, k, by, tombstones = tombs,
+          ascending = asc))
     }
     // keyset resume (round 13): per-series/windowed analytics order by
     // (series_key[, window_start|timestamp]) — AFTER filters strictly
@@ -1033,322 +1085,212 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         case None => df.filter(sk > c.seriesKey)
       }
     }
-    params.limit.fold(paged)(n => paged.limit(n.toInt))
+    (params.limit.fold(paged)(n => paged.limit(n.toInt)), tier)
   }
 
-  /** ANALYZE RESETS/CHANGES plan: rollup-routed when a registered rollup
-    * stores the transition-count partials ([[Rollup.runTransitions]] —
-    * exact long counts, so the route is BIT-identical to raw, not just
-    * value-equal), raw lag plan otherwise; projected to the verb's
-    * column. */
-  private def transitionsPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, splitNs: Option[Long],
-      keep: String): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsTransitions(params, spec.intervalNs, view, f) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-transitions"
-        Rollup.runTransitions(view, spec.intervalNs, params, f)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.transitions(pts, params, field = f, tombstones = tombs,
-        splitNs = splitNs)
-    }.select(col("metric"), col("tags"), col("series_key"),
-      col("n_points"), col(keep))
-  }
-
-  /** WINDOWED delta (`DELTA BY` / `RATE BY`): rollup-routed like
-    * whole-range DELTA when the target window is a multiple of the
-    * grain — the same in-window `__inc` + boundary decomposition,
-    * grouped into target windows ([[Rollup.runDeltaBy]]). */
-  private def deltaByPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, w: Long,
-      splitNs: Option[Long]): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsDeltaBy(params, spec.intervalNs, view, f, w) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-delta-by"
-        Rollup.runDeltaBy(view, spec.intervalNs, params, f, w)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.windowedDelta(pts, params, w, field = f,
-        tombstones = tombs, splitNs = splitNs)
+  /** The one serving entry — the NBQL/HTTP/TCP protocol path. Every
+    * QUERY shape takes one routing decision here, and the answer carries
+    * the tier that produced it. Pre/PostQuery hooks fire as on [[query]].
+    * Tiers, fastest first, each declining to the next:
+    *  - the result cache (`cache`, `analyze-cache`): canonical-key
+    *    lookup with PER-METRIC epoch invalidation, in the reference's
+    *    NBQL-layer cache position (`api/nbql/cache_key.go` keys NBQL
+    *    queries, not engine internals);
+    *  - the driver-resident tiers (`local` raw rows, `local-rollup` and
+    *    `local-rollup-<op>` rollup partials): pure Scala, no Spark job;
+    *  - a Spark plan collected under [[servingRowBudget]]: `spark` for
+    *    point and GROUP BY TAGS queries, `analyze-spark` for ANALYZE —
+    *    or `rollup-<op>` when rollup partials planned it.
+    * Driver answers come back as `Left(rows, schema)`: the protocol
+    * servers stream them directly (wrapping them in a LocalRelation and
+    * draining it through `toLocalIterator` costs a per-query plan + job,
+    * ~22 ms against the tier's ~50 µs — SCALE.md r13). A result over the
+    * budget comes back as `Right(plan)` — [[queryServing]] (`spark`) or
+    * the analytic plan (`analyze-stream`) — so un-LIMITed protocol
+    * queries still deliver complete results; so does a GROUP BY TAGS
+    * query no resident rollup covers (`spark`). */
+  def serve(req: ServeReq): Served = hooked(req.params) { p =>
+    req.withParams(p) match {
+      case PointReq(q) =>
+        cached(q, resultCache.keyOf(q), metricEpoch(q.metric), "cache") {
+          serveLocal(q).map(r => Served(Left(r), "local"))
+            .orElse(serveLocalRollup(q).map(r => Served(Left(r), "local-rollup")))
+            .getOrElse(sparkPoint(q))
+        }
+      case AnalyzeReq(q, spec, splitNs) =>
+        // the epoch for the cross-metric analytics is the SUM of both
+        // metrics' epochs — epochs only move forward, so the sum is
+        // strictly monotone and a write to EITHER side invalidates
+        val epoch = spec match {
+          case AnalyzeCorrelate(_, b, _, _, _) => metricEpoch(q.metric) + metricEpoch(b)
+          case AnalyzeRatio(_, b, _, _) => metricEpoch(q.metric) + metricEpoch(b)
+          case _ => metricEpoch(q.metric)
+        }
+        cached(q, resultCache.analyzeKeyOf(q, spec, splitNs), epoch, "analyze-cache") {
+          localAnalytic(q, spec).getOrElse {
+            val (df, route) = analyzeRouted(q, spec, splitNs)
+            val budget = servingRowBudget
+            val rows = probe(df, budget)
+            if (rows.length > budget) Served(Right(df), "analyze-stream")
+            else Served(Left((rows, df.schema)),
+              if (route.startsWith("rollup-")) route else "analyze-spark")
+          }
+        }
+      case ByTagsReq(q, keys) =>
+        // a resident rollup re-aggregates by tag tuple in pure Scala
+        // ([[LocalRollup.runByTags]]): a repeated `sum by (dc)`
+        // dashboard query costs microseconds, not a plan
+        val spec = rollupSpecs.get(q.metric)
+        Option(spec).filter(byTagsRollupEligible(q, _))
+          .flatMap(localRollupRows(q.metric, _))
+          .map { case (rows, ws, sch) =>
+            Served(Left((LocalRollup.runByTags(timeSlice(rows, ws, q.startNs,
+              q.endNs.get), sch, q, spec.intervalNs, keys),
+              LocalRollup.outputSchemaByTags(q, keys))), "local-rollup-tags")
+          }
+          .getOrElse(Served(Right(queryByTags(q, keys)), "spark"))
     }
   }
 
-  /** EWMA/HOLT … BY: served from a registered rollup's stored fold
-    * states when the registration carries the EXACT same [[SmoothSpec]]
-    * (field, kind, α, β ride the registration — a different α is a
-    * different fold) and [[Rollup.supportsSmoothBy]] passes (aligned
-    * bounds + the range-start probe); the raw windowed fold otherwise.
-    * The routed read is BIT-identical ([[SmoothSpec]] contract). */
-  private def smoothByPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, s: SmoothSpec, w: Long,
-      splitNs: Option[Long]): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.smooth.contains(s))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        // range-start condition: the cached per-(metric, epoch) min
-        // window bound answers the common from-the-start dashboard with
-        // NO job; only a mid-range start pays the limit-1 probe
-        Rollup.supportsSmoothShape(params, spec.intervalNs, view, s, w) &&
-          (rollupMinWindowStart(params.metric, spec, view) >= params.startNs ||
-            Rollup.smoothRangeStartProbe(view, params, s)) }
-      .map { case (spec, view) =>
-        lastServePath = s"rollup-${s.kind}"
-        Rollup.runSmoothBy(view, spec.intervalNs, params, s, w)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      if (s.kind == "ewma")
-        TsAnalytics.ewmaSmoothBy(pts, params, s.alpha, w, field = s.field,
-          tombstones = tombs, splitNs = splitNs)
-      else
-        TsAnalytics.holtSmoothBy(pts, params, s.alpha, s.beta, w,
-          field = s.field, tombstones = tombs, splitNs = splitNs)
-    }
-  }
-
-  /** PREDICT/DERIV trend fit: rollup-routed like DELTA — the stored time
-    * moments shift to the query anchor and merge as plain sums
-    * ([[Rollup.runPredict]]) — raw moment plan otherwise. */
-  private def predictPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, h: Long,
-      splitNs: Option[Long]): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsPredict(params, spec.intervalNs, view, f) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-predict"
-        Rollup.runPredict(view, spec.intervalNs, params, f, h)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.predictLinear(pts, params, h, field = f,
-        tombstones = tombs, splitNs = splitNs)
-    }
-  }
-
-  /** WINDOWED transition counts (`ANALYZE RESETS/CHANGES(f) BY <dur>`):
-    * rollup-routed like [[transitionsPath]] when the target window is a
-    * multiple of the grain ([[Rollup.runTransitionsBy]], exact long
-    * counts), raw windowed lag plan otherwise. */
-  private def transitionsByPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, windowNs: Long, splitNs: Option[Long],
-      keep: String): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsTransitionsBy(params, spec.intervalNs, view, f, windowNs) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-transitions-by"
-        Rollup.runTransitionsBy(view, spec.intervalNs, params, f, windowNs)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.windowedTransitions(pts, params, windowNs, field = f,
-        tombstones = tombs, splitNs = splitNs)
-    }.select(col("metric"), col("tags"), col("series_key"),
-      col("window_start"), col("n_points"), col(keep))
-  }
-
-  /** ANALYZE through the serving tier: the protocol entry for the
-    * analytics pack (the reference's NBQL-layer cache position, same as
-    * [[queryServingDF]]). The cache key extends the point-query key with
-    * the analytic's parameters and split width
-    * ([[QueryCache.analyzeKeyOf]] — distinct namespaces, an ANALYZE can
-    * never serve its plain-QUERY twin's rows or vice versa), and the
-    * epoch for the cross-metric analytics (CORRELATE/RATIO) is the SUM
-    * of both metrics' epochs — epochs only move forward, so the sum is
-    * strictly monotone and a write to EITHER side invalidates. Results
-    * over [[servingRowBudget]] serve the streamed full plan, uncached —
-    * the same bounded-driver contract as the point path. Pre/PostQuery
-    * hooks fire as on [[queryServingDF]]. */
-  def analyzeServingDF(params: QueryParams, spec: AnalyzeSpec,
-      splitNs: Option[Long] = None): DataFrame =
-    toDF(serveAnalyze(params, spec, splitNs))
-
-  /** [[analyzeServingDF]] without the DataFrame wrap — see
-    * [[serveQuery]] for why the protocol servers want the raw rows. */
-  def serveAnalyze(params: QueryParams, spec: AnalyzeSpec,
-      splitNs: Option[Long] = None): TsdbEngine.Served = {
-    var p = params
-    if (hooks.hasListeners(EventType.PreQuery)) {
-      val pay = new Payloads.PreQuery(p)
-      hooks.trigger(HookEvent(EventType.PreQuery, pay)) match {
-        case Left(err) => throw new HookVetoException(err)
-        case Right(()) => p = pay.params
-      }
-    }
-    val t0 = System.nanoTime()
-    val (rows, truncated, schema) = analyzeCachedFull(p, spec, splitNs)
-    val out: TsdbEngine.Served =
-      if (truncated) { lastServePath = "analyze-stream"; Right(analyze(p, spec, splitNs)) }
-      else Left((rows, schema))
-    firePost(EventType.PostQuery, Payloads.PostQuery(p, System.nanoTime() - t0))
-    out
-  }
-
-  /** Driver-side ANALYZE rows — the [[queryCached]] analog for the
-    * analytics pack (no DataFrame wrap on the hit path; over-budget
-    * results come back as the budget-sized prefix of the ordered
-    * output). */
-  def analyzeCached(params: QueryParams, spec: AnalyzeSpec,
-      splitNs: Option[Long] = None): Array[Row] =
-    analyzeCachedFull(params, spec, splitNs)._1
-
-  private def analyzeCachedFull(p: QueryParams, spec: AnalyzeSpec,
-      splitNs: Option[Long]): (Array[Row], Boolean,
-      org.apache.spark.sql.types.StructType) = {
-    val epoch = spec match {
-      case AnalyzeCorrelate(_, b, _, _, _) => metricEpoch(p.metric) + metricEpoch(b)
-      case AnalyzeRatio(_, b, _, _) => metricEpoch(p.metric) + metricEpoch(b)
-      case _ => metricEpoch(p.metric)
-    }
+  /** The result cache in front of `miss`: a hit answers as `hitTier`, a
+    * driver-side answer of `miss` is stored under (`key`, `epoch`).
+    * RELATIVE queries with an un-pinned `now`, and PREFIX metrics (no
+    * per-metric epoch can invalidate them), bypass the cache. */
+  private def cached(p: QueryParams, key: => String, epoch: Long,
+      hitTier: String)(miss: => Served): Served = {
     val cacheable = (p.relativeNs.isEmpty || p.nowNs.isDefined) &&
       !TagMatch.isPrefix(p.metric)
-    val key = resultCache.analyzeKeyOf(p, spec, splitNs)
-    val cached = if (cacheable) resultCache.getByKey(key, epoch) else None
-    cached match {
-      case Some((rows, schema)) =>
-        lastServePath = "analyze-cache"
-        (rows, false, schema)
+    lazy val k = key
+    (if (cacheable) resultCache.getByKey(k, epoch) else None) match {
+      case Some(hit) => Served(Left(hit), hitTier)
       case None =>
-        // driver-resident tier for DELTA: fold the resident rollup
-        // partials in pure Scala ([[LocalRollup.runDelta]]) — no job, no
-        // planning floor, one output row per series (always under
-        // budget)
-        val local = spec match {
-          case AnalyzeDelta(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-delta") {
-              (slice, sch) => (LocalRollup.runDelta(slice, sch, p, f),
-                LocalRollup.outputSchemaDelta)
-            }
-          case AnalyzePredict(f, h) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-predict") {
-              (slice, sch) => (LocalRollup.runPredict(slice, sch, p, f, h),
-                LocalRollup.outputSchemaPredict)
-            }
-          case AnalyzeDeriv(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-deriv") {
-              (slice, sch) =>
-                (LocalRollup.runPredict(slice, sch, p, f, 0L)
-                  .map(r => Row(r(0), r(1), r(2), r(3), r(4), r(5))),
-                  LocalRollup.outputSchemaDeriv)
-            }
-          case AnalyzeIrate(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-irate",
-              extraCols = Seq(s"${f}__plast")) {
-              (slice, sch) => (LocalRollup.runIrate(slice, sch, p, f),
-                LocalRollup.outputSchemaIrate)
-            }
-          case AnalyzeResets(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-resets",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes")) {
-              (slice, sch) =>
-                (LocalRollup.runTransitions(slice, sch, p, f, "resets"),
-                  LocalRollup.outputSchemaTransitions("resets"))
-            }
-          case AnalyzeChanges(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-changes",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes")) {
-              (slice, sch) =>
-                (LocalRollup.runTransitions(slice, sch, p, f, "changes"),
-                  LocalRollup.outputSchemaTransitions("changes"))
-            }
-          case AnalyzeDeltaBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-delta-by",
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) => (LocalRollup.runDeltaBy(slice, sch, p, f, w),
-                LocalRollup.outputSchemaDeltaBy)
-            }
-          case AnalyzeRateBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-rate-by",
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) =>
-                (LocalRollup.runDeltaBy(slice, sch, p, f, w).map(r =>
-                  Row(r(0), r(1), r(2), r(3), r(4),
-                    r.getDouble(6) * 1e9 / w.toDouble)),
-                  LocalRollup.outputSchemaRateBy)
-            }
-          case AnalyzeResetsBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-resets-by",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes"),
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) =>
-                (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "resets"),
-                  LocalRollup.outputSchemaTransitionsBy("resets"))
-            }
-          case AnalyzeChangesBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-changes-by",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes"),
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) =>
-                (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "changes"),
-                  LocalRollup.outputSchemaTransitionsBy("changes"))
-            }
-          case AnalyzeTwa(f, iv) =>
-            val pTwa = p.copy(downsampleNs = Some(iv))
-            serveLocalRollupAnalytic(pTwa, f, "local-rollup-twa",
-              extraCols = Seq(s"${f}__area"),
-              alignGate = grain => iv > 0 && iv % grain == 0) {
-              (slice, sch) => (LocalRollup.runTwa(slice, sch, pTwa, f),
-                LocalRollup.outputSchemaTwa)
-            }
-          case AnalyzeEwmaBy(f, a, w) =>
-            serveLocalSmooth(p, SmoothSpec(f, "ewma", a), w)
-          case AnalyzeHoltBy(f, a, b, w) =>
-            serveLocalSmooth(p, SmoothSpec(f, "holt", a, b), w)
-          case _ => None
+        val out = miss
+        out.result match {
+          case Left((rows, sch)) if cacheable => resultCache.putByKey(k, epoch, rows, sch)
+          case _ => ()
         }
-        local match {
-          case Some((rows, sch)) =>
-            if (cacheable) resultCache.putByKey(key, epoch, rows, sch)
-            (rows, false, sch)
-          case None =>
-            val df = analyze(p, spec, splitNs)
-            // keep rollup-route telemetry visible through the wire path
-            // (a clobbered "analyze-spark" hid whether the plan was the
-            // raw scan or the partial route)
-            val inner = lastServePath
-            val budget = servingRowBudget
-            val probe = df.limit(
-              math.min(budget + 1, Int.MaxValue.toLong).toInt).collect()
-            lastServePath =
-              if (inner != null && inner.startsWith("rollup-")) inner
-              else "analyze-spark"
-            if (probe.length > budget) (probe.take(budget.toInt), true, df.schema)
-            else {
-              if (cacheable) resultCache.putByKey(key, epoch, probe, df.schema)
-              (probe, false, df.schema)
-            }
-        }
+        out
     }
   }
 
-  /** Driver-resident whole-range-analytic serving (DELTA/PREDICT):
+  /** At most `budget + 1` rows of `df`, so the result is complete iff it
+    * fits the budget. Bounded: `limit` plans as CollectLimit, which pulls
+    * partitions incrementally and never holds more than budget+1 rows. */
+  private def probe(df: DataFrame, budget: Long): Array[Row] =
+    df.limit(math.min(budget + 1, Int.MaxValue.toLong).toInt).collect()
+
+  /** The Spark tier for a point query. Un-limited queries run UNORDERED
+    * (no global-sort exchange, no sampling job) and are ordered here over
+    * the collected rows — same (ts, series_key) total order, one
+    * driver-side sort instead of a cluster shuffle; LIMIT queries keep
+    * Spark-side TakeOrdered, and whole-range aggregates are one row. */
+  private def sparkPoint(p: QueryParams): Served = {
+    val df = queryServing(p, ordered = false)
+    val bounded = p.limit.isDefined || p.isFinalAgg
+    val budget = servingRowBudget
+    val rows = if (bounded) df.collect() else probe(df, budget)
+    if (rows.length > budget && !bounded) Served(Right(queryServing(p)), "spark")
+    else Served(Left((driverOrder(rows, p), df.schema)), "spark")
+  }
+
+  /** Driver-resident ANALYZE tier: fold the resident rollup partials in
+    * pure Scala ([[LocalRollup]]) — no job, no planning floor. None when
+    * no resident rollup covers the analytic. */
+  private def localAnalytic(p: QueryParams, spec: AnalyzeSpec): Option[Served] = {
+    val transitionCols = (f: String) => Seq(s"${f}__resets", s"${f}__changes")
+    def aligned(w: Long): Long => Boolean = grain => w > 0 && w % grain == 0
+    spec match {
+      case AnalyzeDelta(f) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-delta") {
+          (slice, sch) => (LocalRollup.runDelta(slice, sch, p, f),
+            LocalRollup.outputSchemaDelta)
+        }
+      case AnalyzePredict(f, h) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-predict") {
+          (slice, sch) => (LocalRollup.runPredict(slice, sch, p, f, h),
+            LocalRollup.outputSchemaPredict)
+        }
+      case AnalyzeDeriv(f) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-deriv") {
+          (slice, sch) =>
+            (LocalRollup.runPredict(slice, sch, p, f, 0L)
+              .map(r => Row(r(0), r(1), r(2), r(3), r(4), r(5))),
+              LocalRollup.outputSchemaDeriv)
+        }
+      case AnalyzeIrate(f) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-irate",
+          extraCols = Seq(s"${f}__plast")) {
+          (slice, sch) => (LocalRollup.runIrate(slice, sch, p, f),
+            LocalRollup.outputSchemaIrate)
+        }
+      case AnalyzeResets(f) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-resets",
+          extraCols = transitionCols(f)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitions(slice, sch, p, f, "resets"),
+              LocalRollup.outputSchemaTransitions("resets"))
+        }
+      case AnalyzeChanges(f) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-changes",
+          extraCols = transitionCols(f)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitions(slice, sch, p, f, "changes"),
+              LocalRollup.outputSchemaTransitions("changes"))
+        }
+      case AnalyzeDeltaBy(f, w) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-delta-by",
+          alignGate = aligned(w)) {
+          (slice, sch) => (LocalRollup.runDeltaBy(slice, sch, p, f, w),
+            LocalRollup.outputSchemaDeltaBy)
+        }
+      case AnalyzeRateBy(f, w) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-rate-by",
+          alignGate = aligned(w)) {
+          (slice, sch) =>
+            (LocalRollup.runDeltaBy(slice, sch, p, f, w).map(r =>
+              Row(r(0), r(1), r(2), r(3), r(4),
+                r.getDouble(6) * 1e9 / w.toDouble)),
+              LocalRollup.outputSchemaRateBy)
+        }
+      case AnalyzeResetsBy(f, w) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-resets-by",
+          extraCols = transitionCols(f), alignGate = aligned(w)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "resets"),
+              LocalRollup.outputSchemaTransitionsBy("resets"))
+        }
+      case AnalyzeChangesBy(f, w) =>
+        serveLocalRollupAnalytic(p, f, "local-rollup-changes-by",
+          extraCols = transitionCols(f), alignGate = aligned(w)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "changes"),
+              LocalRollup.outputSchemaTransitionsBy("changes"))
+        }
+      case AnalyzeTwa(f, iv) =>
+        val pTwa = p.copy(downsampleNs = Some(iv))
+        serveLocalRollupAnalytic(pTwa, f, "local-rollup-twa",
+          extraCols = Seq(s"${f}__area"), alignGate = aligned(iv)) {
+          (slice, sch) => (LocalRollup.runTwa(slice, sch, pTwa, f),
+            LocalRollup.outputSchemaTwa)
+        }
+      case AnalyzeEwmaBy(f, a, w) =>
+        serveLocalSmooth(p, SmoothSpec(f, "ewma", a), w)
+      case AnalyzeHoltBy(f, a, b, w) =>
+        serveLocalSmooth(p, SmoothSpec(f, "holt", a, b), w)
+      case _ => None
+    }
+  }
+
+  /** Driver-resident whole-range-analytic serving (DELTA/PREDICT/…):
     * slice the resident partial rows to the window range and fold in
     * pure Scala when a registered rollup covers the field and the frame
     * carries the needed partial columns (`__inc`; `__tsum` family —
     * both ship together, schema-checked by the first). */
   private def serveLocalRollupAnalytic(p: QueryParams, field: String,
-      path: String, extraCols: Seq[String] = Nil,
+      tier: String, extraCols: Seq[String] = Nil,
       alignGate: Long => Boolean = _ => true)(
       fold: (Array[Row], org.apache.spark.sql.types.StructType) =>
-        (Array[Row], org.apache.spark.sql.types.StructType)):
-      Option[(Array[Row], org.apache.spark.sql.types.StructType)] = {
+        (Array[Row], org.apache.spark.sql.types.StructType)): Option[Served] = {
     val spec = rollupSpecs.get(p.metric)
     // afterKey: a cursor resume takes the Spark path, whose generic
     // keyset filter + limit handle it ([[analyze]]) — the local folds
@@ -1364,14 +1306,8 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       if (!sch.fieldNames.contains(s"${field}__inc") ||
           !sch.fieldNames.contains(s"${field}__tsum") ||
           !extraCols.forall(sch.fieldNames.contains)) None
-      else {
-        val lo = lowerBound(ws, p.startNs)
-        val hi = math.max(lo, upperBound(ws, p.endNs.get))
-        val slice = java.util.Arrays.copyOfRange(
-          rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-        lastServePath = path
-        Some(fold(slice, sch))
-      }
+      else Some(Served(Left(fold(timeSlice(rows, ws, p.startNs, p.endNs.get), sch)),
+        tier))
     }
   }
 
@@ -1382,8 +1318,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     * precedes startNs (the stored state is a prefix fold; the prefix
     * check scans the resident rows BEFORE the range slice, so it costs
     * a driver array walk, not a job). */
-  private def serveLocalSmooth(p: QueryParams, s: SmoothSpec, w: Long):
-      Option[(Array[Row], org.apache.spark.sql.types.StructType)] = {
+  private def serveLocalSmooth(p: QueryParams, s: SmoothSpec, w: Long): Option[Served] = {
     val spec = rollupSpecs.get(p.metric)
     if (spec == null || !spec.smooth.contains(s) ||
         p.afterKey.isDefined || // see serveLocalRollupAnalytic
@@ -1396,25 +1331,18 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       if (!sch.fieldNames.contains(Rollup.smoothStateCol(s))) None
       else {
         val lo = lowerBound(ws, p.startNs)
-        val hi = math.max(lo, upperBound(ws, p.endNs.get))
         val iMetric = sch.fieldIndex("metric")
         val iTags = sch.fieldIndex("tags")
         val iCnt = sch.fieldIndex(s"${s.field}__cnt")
-        var i = 0; var blocked = false
-        while (i < lo && !blocked) {
+        val blocked = (0 until lo).exists { i =>
           val r = rows(i)
-          if (r.getString(iMetric) == p.metric && r.getLong(iCnt) > 0 &&
-              LocalRollup.tagsMatch(r, iTags, p)) blocked = true
-          i += 1
+          r.getString(iMetric) == p.metric && r.getLong(iCnt) > 0 &&
+            LocalRollup.tagsMatch(r, iTags, p)
         }
         if (blocked) None
-        else {
-          val slice = java.util.Arrays.copyOfRange(
-            rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-          lastServePath = s"local-rollup-${s.kind}"
-          Some((LocalRollup.runSmoothBy(slice, sch, p, s, w),
-            LocalRollup.outputSchemaSmooth(s.kind)))
-        }
+        else Some(Served(Left((LocalRollup.runSmoothBy(
+            timeSlice(rows, ws, p.startNs, p.endNs.get), sch, p, s, w),
+          LocalRollup.outputSchemaSmooth(s.kind))), s"local-rollup-${s.kind}"))
       }
     }
   }
@@ -1473,64 +1401,6 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       QueryEngine.mergedView(
         loadPoints().getOrElse(TsdbEngine.emptyPoints(spark)), loadTombstones())
     else servingView(p.metric)
-
-  /** Serving-tier [[queryByTags]]: when a registered rollup covers the
-    * shape AND its partial frame is driver-resident, the tag-grouped
-    * re-aggregation runs in pure Scala ([[LocalRollup.runByTags]] — no
-    * Spark job, no per-query planning floor; a repeated `sum by (dc)`
-    * dashboard query costs microseconds) and the result is returned as a
-    * LocalRelation so the protocol servers keep their streaming seams.
-    * Anything else falls to the Spark path. */
-  def queryByTagsServingDF(params: QueryParams, tagKeys: Seq[String]): DataFrame =
-    toDF(serveByTags(params, tagKeys))
-
-  /** [[queryByTagsServingDF]] without the DataFrame wrap — see
-    * [[serveQuery]]. */
-  def serveByTags(params: QueryParams,
-      tagKeys: Seq[String]): TsdbEngine.Served = {
-    val spec = rollupSpecs.get(params.metric)
-    val local: Option[TsdbEngine.Served] =
-      if (spec != null && byTagsRollupEligible(params, spec))
-        localRollupRows(params.metric, spec).map { case (rows, ws, sch) =>
-          val lo = lowerBound(ws, params.startNs)
-          val hi = math.max(lo, upperBound(ws, params.endNs.get))
-          val slice = java.util.Arrays.copyOfRange(
-            rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-          lastServePath = "local-rollup-tags"
-          Left((LocalRollup.runByTags(slice, sch, params, spec.intervalNs, tagKeys),
-            LocalRollup.outputSchemaByTags(params, tagKeys)))
-        }
-      else None
-    local.getOrElse {
-      lastServePath = "spark"; Right(queryByTags(params, tagKeys))
-    }
-  }
-
-  private def queryImpl(params: QueryParams, routed: Boolean): DataFrame = {
-    var p = params
-    if (hooks.hasListeners(EventType.PreQuery)) {
-      val pay = new Payloads.PreQuery(p)
-      hooks.trigger(HookEvent(EventType.PreQuery, pay)) match {
-        case Left(err) => throw new HookVetoException(err)
-        case Right(()) => p = pay.params
-      }
-    }
-    val t0 = System.nanoTime()
-    val out = if (routed) routedDF(p) else {
-      val pts = loadPoints().getOrElse(emptyPoints(spark))
-      QueryEngine.run(pts, p, loadTombstones())
-    }
-    firePost(EventType.PostQuery, Payloads.PostQuery(p, System.nanoTime() - t0))
-    out
-  }
-
-  /** Rollup-routed (or raw) plan for `p`, no hooks — shared by
-    * [[queryRouted]] and [[queryServingDF]]'s truncation fallback. */
-  private def routedDF(p: QueryParams): DataFrame =
-    rollupRoute(p).getOrElse {
-      val pts = loadPoints().getOrElse(emptyPoints(spark))
-      QueryEngine.run(pts, p, loadTombstones())
-    }
 
   /** One commit's observable changes, for polling subscriptions (S8/ST6
     * over the TCP transport): PUT rows come from PURE-APPEND commits only
@@ -1639,10 +1509,19 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
   private val localRollupCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, RollupReg, Array[Row], Array[Long], org.apache.spark.sql.types.StructType)]()
 
-  /** First index with a(i) >= key over a sorted long array (array length
-    * when none) — the driver tiers' analog of row-group min/max pruning:
+  /** The rows whose sort key (`keys`, ascending, one per row) lies in
+    * [from, to] — the driver tiers' analog of row-group min/max pruning:
     * a time-ranged query touches only its slice, not the metric's whole
     * resident history. */
+  private def timeSlice(rows: Array[Row], keys: Array[Long], from: Long,
+      to: Long): Array[Row] = {
+    val lo = lowerBound(keys, from)
+    java.util.Arrays.copyOfRange(rows.asInstanceOf[Array[AnyRef]], lo,
+      math.max(lo, upperBound(keys, to))).asInstanceOf[Array[Row]]
+  }
+
+  /** First index with a(i) >= key over a sorted long array (array length
+    * when none). */
   private def lowerBound(a: Array[Long], key: Long): Int = {
     var lo = 0; var hi = a.length
     while (lo < hi) {
@@ -1766,15 +1645,22 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     }
   }
 
-  /** Serving-path query: identical results to [[query]] (spec-asserted
-    * across every query shape), but the scan+merge stages come from the
-    * persisted [[servingView]] — the uncached-result latency a dashboard
-    * actually sees. Downsample queries covered by a registered rollup are
-    * answered from materialized partials instead (same results,
-    * |series| × windows rows read instead of every point). */
-  def queryServing(params: QueryParams): DataFrame =
-    rollupRoute(params).getOrElse(
-      QueryEngine.runMerged(servingBase(params), params))
+  /** The Spark tier's plan: identical results to [[query]]
+    * (spec-asserted across every query shape), but the scan+merge stages
+    * come from the persisted [[servingView]] — the uncached-result
+    * latency a dashboard actually sees. Downsample queries covered by a
+    * registered rollup are answered from materialized partials instead
+    * (same results, |series| × windows rows read instead of every point).
+    * `ordered = false` leaves presentation order to the caller: [[serve]]
+    * sorts collected rows driver-side, saving the global-sort exchange,
+    * and streams the ordered plan for over-budget results. */
+  def queryServing(params: QueryParams, ordered: Boolean = true): DataFrame = {
+    val spec = rollupSpecs.get(params.metric)
+    if (spec != null &&
+        Rollup.supports(params, spec.intervalNs, spec.fields.toSet, spec.digests))
+      Rollup.run(rollupView(params.metric, spec), spec.intervalNs, params, ordered)
+    else QueryEngine.runMerged(servingBase(params), params, ordered)
+  }
 
   // ---- rollup acceleration: materialized (metric, date) partials --------
 
@@ -1854,21 +1740,6 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     rollupSpecs.forEach((m, v) =>
       out += ((m, v.intervalNs, v.fields, v.digests, v.smooth)))
     out.result().sortBy(_._1)
-  }
-
-  /** The routed rollup answer for `params`, when a registered rollup can
-    * serve it exactly; None otherwise (caller falls back to the view).
-    * `ordered = false` defers presentation ordering to the caller (the
-    * cached serving path sorts collected rows driver-side, saving the
-    * global-sort exchange exactly like the raw unordered path). */
-  private def rollupRoute(params: QueryParams,
-      ordered: Boolean = true): Option[DataFrame] = {
-    val spec = rollupSpecs.get(params.metric)
-    if (spec != null &&
-        Rollup.supports(params, spec.intervalNs, spec.fields.toSet, spec.digests))
-      Some(Rollup.run(rollupView(params.metric, spec), spec.intervalNs, params,
-        ordered))
-    else None
   }
 
   private def rollupView(metric: String, spec: RollupReg): DataFrame = synchronized {
@@ -2339,10 +2210,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         case None =>
           // absolute range: binary-search the slice, tag-filter only it
           val (startNs, endNs) = (p.startNs, p.endNs.filter(_ != 0L).getOrElse(now))
-          tagFilter(java.util.Arrays.copyOfRange(
-            all.asInstanceOf[Array[AnyRef]],
-            lowerBound(ts, startNs), math.max(lowerBound(ts, startNs), upperBound(ts, endNs)))
-            .asInstanceOf[Array[Row]])
+          tagFilter(timeSlice(all, ts, startNs, endNs))
       }
       if (p.order == Descending) rows = rows.reverse
       p.afterKey.foreach { c =>
@@ -2402,171 +2270,20 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       // binary-searched [startNs, endNs] window slice (rows are sorted by
       // window_start); LocalRollup re-applies the same bounds, so the
       // slice is purely a scan reduction
-      val lo = lowerBound(ws, p.startNs)
-      val hi = math.max(lo, upperBound(ws, p.endNs.get))
-      val slice = java.util.Arrays.copyOfRange(
-        rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-      (LocalRollup.run(slice, sch, p, spec.intervalNs),
+      (LocalRollup.run(timeSlice(rows, ws, p.startNs, p.endNs.get), sch, p,
+        spec.intervalNs),
         LocalRollup.outputSchema(p))
     }
   }
 
-  /** Test/bench seam: which tier served the last [[queryCachedCapped]]
-    * call — "cache", "local", "local-rollup", or "spark". */
-  @volatile private[graft] var lastServePath: String = ""
-
-  /** Row budget for driver-side collects on the cached serving path: an
-    * un-LIMITed query whose result exceeds this many rows is served
-    * TRUNCATED to the budget (in presentation order, so the cut is
-    * exactly the first page of the full result and the cursor protocol
-    * (W3) pages through the rest) instead of materializing an unbounded
-    * result on the driver. The budget probe itself is bounded:
-    * `limit(budget+1)` plans as CollectLimit, which pulls partitions
-    * incrementally and never holds more than budget+1 rows. Full
-    * unbounded results belong to the streaming path (S9,
-    * `HttpServer`/`TcpServer` row iterators), never to a driver array. */
+  /** Row budget for driver-side collects on the serving path: an
+    * un-LIMITed query whose result exceeds this many rows is never
+    * materialized on the driver — [[serve]] streams its plan instead.
+    * Full unbounded results belong to the streaming path (S9,
+    * `HttpServer`/`TcpServer` row iterators), never to a driver array;
+    * the buffered protocol path pages them
+    * ([[graft.nbql.NbqlExecutor.Rows.pageBudgeted]], cursor W3). */
   @volatile var servingRowBudget: Long = 2000000L
-
-  /** Query through the result cache (serving-layer path): collected rows,
-    * canonical-key lookup, PER-METRIC epoch invalidation — continuous
-    * ingest into one metric leaves every other metric's entries live.
-    * RELATIVE queries with an un-pinned `now` are never cached.
-    * Over-[[servingRowBudget]] results are truncated — see
-    * [[queryCachedCapped]] for the variant that reports truncation. */
-  def queryCached(params: QueryParams): Array[Row] = queryCachedCapped(params)._1
-
-  /** [[queryCached]] plus a truncation flag: (rows, true) means the query
-    * exceeded [[servingRowBudget]] and `rows` is the budget-sized FIRST
-    * page in presentation order (continue via the cursor, or switch to
-    * the streaming path). Truncated results are never cached. */
-  def queryCachedCapped(params: QueryParams): (Array[Row], Boolean) = {
-    val (rows, truncated, _) = queryCachedFull(params)
-    (rows, truncated)
-  }
-
-  /** The NBQL/HTTP/TCP protocol serving entry: the result cache and
-    * driver-resident tiers front the protocol path exactly like the
-    * reference's NBQL-layer cache (`api/nbql/cache_key.go` — its cache
-    * keys NBQL queries, not engine internals), with Pre/PostQuery hooks
-    * firing as on [[query]]. Bounded results come back as a
-    * LocalRelation frame (the servers' `toLocalIterator`/schema seams
-    * are unchanged); a budget-TRUNCATED result falls back to the
-    * streamed Spark plan so un-LIMITed protocol queries still deliver
-    * complete results. */
-  def queryServingDF(params: QueryParams): DataFrame =
-    toDF(serveQuery(params))
-
-  /** [[queryServingDF]] without the DataFrame wrap: `Left(rows, schema)`
-    * when the serving tiers answered on the driver — the protocol
-    * servers stream those rows DIRECTLY (wrapping them in a
-    * LocalRelation and draining it back through `toLocalIterator` costs
-    * a full per-query plan + job submission, ~22 ms measured against the
-    * tier's ~50 µs serve — SCALE.md r13); `Right(plan)` only for
-    * budget-truncated results, which genuinely need the streamed full
-    * plan. */
-  def serveQuery(params: QueryParams): TsdbEngine.Served = {
-    var p = params
-    if (hooks.hasListeners(EventType.PreQuery)) {
-      val pay = new Payloads.PreQuery(p)
-      hooks.trigger(HookEvent(EventType.PreQuery, pay)) match {
-        case Left(err) => throw new HookVetoException(err)
-        case Right(()) => p = pay.params
-      }
-    }
-    val t0 = System.nanoTime()
-    // pageOnTruncation = false: an over-budget result falls back to the
-    // streamed full plan below, so collecting the budget-sized first
-    // page would be a discarded third execution of the query shape
-    val (rows, truncated, schema) = queryCachedFull(p, pageOnTruncation = false)
-    val out: TsdbEngine.Served =
-      if (truncated) Right(routedDF(p)) else Left((rows, schema))
-    firePost(EventType.PostQuery, Payloads.PostQuery(p, System.nanoTime() - t0))
-    out
-  }
-
-  private def toDF(s: TsdbEngine.Served): DataFrame = s match {
-    case Left((rows, schema)) =>
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    case Right(df) => df
-  }
-
-  /** `pageOnTruncation = false` skips materializing the budget-limited
-    * first page when the probe detects truncation (the rows element
-    * comes back EMPTY with the flag set) — for callers that answer
-    * truncation with a different plan instead of the page. */
-  private def queryCachedFull(params: QueryParams,
-      pageOnTruncation: Boolean = true):
-      (Array[Row], Boolean, org.apache.spark.sql.types.StructType) = {
-    // prefix-metric results can't be epoch-invalidated per metric — skip
-    // the cache rather than risk staleness
-    val cacheable = (params.relativeNs.isEmpty || params.nowNs.isDefined) &&
-      !TagMatch.isPrefix(params.metric)
-    val e = metricEpoch(params.metric)
-    if (cacheable) resultCache.get(params, e) match {
-      case Some((rows, sch)) => lastServePath = "cache"; return (rows, false, sch)
-      case None => ()
-    }
-    val budget = servingRowBudget
-    var truncated = false
-    // raw scans on small metrics serve from the driver-resident tier (no
-    // Spark job); otherwise un-limited queries run UNORDERED (no
-    // global-sort exchange, no sampling job) and are ordered here over
-    // the collected rows — same (ts, series_key) total order, one
-    // driver-side sort instead of a cluster shuffle. LIMIT queries keep
-    // Spark-side TakeOrdered.
-    val (rows, schema) = serveLocal(params)
-      .map { r => lastServePath = "local"; r }
-      .orElse(serveLocalRollup(params).map { r => lastServePath = "local-rollup"; r })
-      .getOrElse {
-      lastServePath = "spark"
-      rollupRoute(params, ordered = false) match {
-        case Some(df) =>
-          if (params.limit.isDefined)
-            // ordered = limit.isDefined inside Rollup.run → TakeOrdered
-            (df.collect(), df.schema)
-          else {
-            // unordered probe + driver-side presentation sort (same shape
-            // as the raw path); over budget → ordered first page
-            val probe = df.limit(budget.toInt + 1).collect()
-            if (probe.length <= budget)
-              (driverOrder(probe, params), df.schema)
-            else {
-              truncated = true
-              if (!pageOnTruncation) (Array.empty[Row], df.schema)
-              else {
-                val page = rollupRoute(params.copy(limit = Some(budget))).get
-                (page.collect(), page.schema)
-              }
-            }
-          }
-        case None =>
-          val df = QueryEngine.runMerged(servingBase(params), params, ordered = false)
-          if (params.limit.isDefined || params.isFinalAgg)
-            // already bounded: TakeOrdered / single-row aggregate
-            (driverOrder(df.collect(), params), df.schema)
-          else {
-            // bounded probe: complete iff the result fits the budget
-            val probe = df.limit(budget.toInt + 1).collect()
-            if (probe.length <= budget)
-              (driverOrder(probe, params), df.schema)
-            else {
-              // over budget: re-run WITH the budget as a LIMIT — plans as
-              // TakeOrdered (per-partition top-K, bounded memory) and
-              // yields exactly the first page of the full ordering
-              truncated = true
-              if (!pageOnTruncation) (Array.empty[Row], df.schema)
-              else {
-                val page = QueryEngine.runMerged(servingBase(params),
-                  params.copy(limit = Some(budget)))
-                (page.collect(), page.schema)
-              }
-            }
-          }
-      }
-    }
-    if (cacheable && !truncated) resultCache.put(params, e, rows, schema)
-    (rows, truncated, schema)
-  }
 
   /** Restore presentation order on collected rows for queries that ran
     * unordered (identical to `QueryEngine.orderCols`: (ts, series_key),
@@ -3406,10 +3123,18 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
 object TsdbEngine {
   private[tsdb] val log = org.slf4j.LoggerFactory.getLogger(classOf[TsdbEngine])
 
-  /** A serving-tier result: `Left(rows, schema)` = answered on the
-    * driver (stream the rows directly — no plan, no job); `Right(plan)`
-    * = budget-truncated, stream the full plan. */
-  type Served = Either[(Array[Row], org.apache.spark.sql.types.StructType), DataFrame]
+  /** A [[TsdbEngine.serve]] answer and the tier that produced it, as a
+    * value: `Left(rows, schema)` = answered on the driver (stream the
+    * rows directly — no plan, no job); `Right(plan)` = stream the plan. */
+  final case class Served(
+      result: Either[(Array[Row], org.apache.spark.sql.types.StructType), DataFrame],
+      tier: String) {
+    def schema: org.apache.spark.sql.types.StructType = result.fold(_._2, _.schema)
+    /** Every row on the driver, collecting a `Right` plan whole — for
+      * callers that know the result is bounded; the protocol servers
+      * stream instead. */
+    def rows: Array[Row] = result.fold(_._1, _.collect())
+  }
 
   /** Parquet codecs accepted by [[TsdbEngine.setCompression]] — the
     * reference's compressor set (`compressors/`: none/snappy/lz4/zstd)

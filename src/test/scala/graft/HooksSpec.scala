@@ -225,4 +225,31 @@ class HooksSpec extends SparkSpec {
       assert(count(e, "m") == 1, "rewritten params must constrain the result")
     }
   }
+
+  test("query hooks fire on every serving shape: a GROUP BY TAGS veto is honoured") {
+    withEngine { e =>
+      assert(e.putBatch(Seq(pt("m", "h1", 1000L, 1.0), pt("m", "h2", 2000L, 2.0))).isRight)
+      val ran = new java.util.concurrent.atomic.AtomicInteger()
+      e.hooks.register(EventType.PreQuery, HookListener({ ev =>
+        val p = ev.payload.asInstanceOf[Payloads.PreQuery]
+        if (p.params.metric == "forbidden") Left("acl: no access") else Right(())
+      }))
+      e.hooks.register(EventType.PostQuery, HookListener({ _ =>
+        ran.incrementAndGet(); Right(())
+      }))
+      val q = QueryParams("m", startNs = 0L, endNs = Some(10000L),
+        aggs = Seq(AggSpec("sum", "value")))
+      intercept[HookVetoException] {
+        e.serve(ByTagsReq(q.copy(metric = "forbidden"), Seq("host")))
+      }
+      assert(ran.get == 0, "a vetoed query must not run")
+      assert(e.serve(ByTagsReq(q, Seq("host"))).rows.length == 2)
+      assert(ran.get == 1, "PostQuery must observe the tag-grouped query")
+      // the protocol path surfaces the same veto
+      val ex = new graft.nbql.NbqlExecutor(e)
+      intercept[HookVetoException] {
+        ex.execute("QUERY forbidden FROM 0 TO 10000 AGGREGATE (sum(value)) GROUP BY TAGS (host)")
+      }
+    }
+  }
 }

@@ -178,8 +178,9 @@ class L0Spec extends SparkSpec {
       }
       val raw = TsAnalytics.ewmaSmoothBy(e.loadPoints().get, q, 0.25, 10 * Min)
         .collect().map(_.toSeq).toSeq
-      val routed = e.analyze(q, spec).collect().map(_.toSeq).toSeq
-      assert(e.lastServePath == "rollup-ewma", e.lastServePath)
+      val (routedDf, tier) = e.analyzeRouted(q, spec)
+      val routed = routedDf.collect().map(_.toSeq).toSeq
+      assert(tier == "rollup-ewma", tier)
       assert(routed == raw,
         "rollup fold over L0 commits must be bit-identical to the raw fold")
       e.compactL0()
@@ -663,8 +664,8 @@ class L0Spec extends SparkSpec {
       assert(e.query(QueryParams("rx", startNs = 0L,
         endNs = Some(1L << 40))).count() == 1)
       // the PER-METRIC serving path (metricPoints-backed) must see it too
-      val served = e.queryCached(QueryParams("rx", startNs = 0L,
-        endNs = Some(1L << 40)))
+      val served = e.serve(PointReq(QueryParams("rx", startNs = 0L,
+        endNs = Some(1L << 40)))).rows
       assert(served.length == 1,
         "per-metric serving must include a restored L0 file's rows")
     }

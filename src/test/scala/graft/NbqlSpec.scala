@@ -248,6 +248,12 @@ class NbqlExecutorSpec extends SparkSpec {
     ex.execute(q).fold(e => fail(e), { case r: ex.Rows @unchecked => r.df.collect().toSeq
                                         case other => fail(s"expected rows, got $other") })
 
+  /** [[rows]] plus the serving tier that answered. */
+  def served(ex: NbqlExecutor, q: String): (Seq[org.apache.spark.sql.Row], String) =
+    ex.execute(q).fold(e => fail(e), {
+      case r: ex.Rows @unchecked => (r.df.collect().toSeq, r.tier)
+      case other => fail(s"expected rows, got $other") })
+
   test("FILL end-to-end over NBQL; FILL without AGGREGATE BY is rejected") {
     withEngine { (_, ex) =>
       assert(ex.execute("""PUSH g SET (v=2.0) AT 1000""").isRight)
@@ -327,11 +333,11 @@ class NbqlExecutorSpec extends SparkSpec {
       // serving tier (cached path) agrees with the ground-truth plan
       val p = QueryParams("m", Map("host" -> "web*"),
         startNs = 0L, endNs = Some(9999L))
-      assert(eng.queryCached(p).map(_.toString).toSeq ==
+      assert(eng.serve(PointReq(p)).rows.map(_.toString).toSeq ==
         eng.query(p).collect().map(_.toString).toSeq)
       // distinct selectors never share cache entries
       val pAll = p.copy(tags = Map("host" -> "*"))
-      assert(eng.queryCached(pAll).length == 3)
+      assert(eng.serve(PointReq(pAll)).rows.length == 3)
     }
   }
 
@@ -700,11 +706,12 @@ class NbqlExecutorSpec extends SparkSpec {
            mem TAGGED (h="a") SET (v=8.0) AT 1000,
            mem TAGGED (h="a") SET (v=4.0) AT 2000""").isRight)
       val q = "QUERY cpu FROM 0 TO 9999 ANALYZE RATE(v)"
-      val first = rows(ex, q)
-      assert(eng.lastServePath == "analyze-spark")
+      val (first, firstTier) = served(ex, q)
+      assert(firstTier == "analyze-spark")
       val (h0, _) = eng.cacheStats
-      assert(rows(ex, q) == first)
-      assert(eng.lastServePath == "analyze-cache", "repeat must hit the cache")
+      val (again, againTier) = served(ex, q)
+      assert(again == first)
+      assert(againTier == "analyze-cache", "repeat must hit the cache")
       assert(eng.cacheStats._1 == h0 + 1)
 
       // the plain-QUERY twin of the same params must NOT cross-serve
@@ -713,8 +720,8 @@ class NbqlExecutorSpec extends SparkSpec {
 
       // a write to the metric orphans the entry
       assert(ex.execute("""PUSH cpu TAGGED (h="a") SET (v=9.0) AT 3000""").isRight)
-      val after = rows(ex, q)
-      assert(eng.lastServePath == "analyze-spark", "write must invalidate")
+      val (after, afterTier) = served(ex, q)
+      assert(afterTier == "analyze-spark", "write must invalidate")
       assert(after.size == 2)
 
       // cross-metric epoch: a write to metric B invalidates CORRELATE(a, b)
@@ -723,10 +730,9 @@ class NbqlExecutorSpec extends SparkSpec {
            mem TAGGED (h="a") SET (v=2.0) AT 4000""").isRight)
       val cq = "QUERY cpu FROM 0 TO 9999 ANALYZE CORRELATE(v, mem, h, 2) BY 1us"
       val c1 = rows(ex, cq)
-      assert(rows(ex, cq) == c1 && eng.lastServePath == "analyze-cache")
+      assert(served(ex, cq) == ((c1, "analyze-cache")))
       assert(ex.execute("""PUSH mem TAGGED (h="a") SET (v=7.0) AT 5000""").isRight)
-      rows(ex, cq)
-      assert(eng.lastServePath == "analyze-spark",
+      assert(served(ex, cq)._2 == "analyze-spark",
         "a write to the OTHER metric must invalidate the cross-metric entry")
     }
   }
@@ -828,8 +834,7 @@ class NbqlExecutorSpec extends SparkSpec {
       // the NBQL path really routed: the registered rollup serves it from
       // the driver-resident tier (LocalRelation result, no Spark re-agg)
       ex.execute(q).fold(e => fail(e), { case r: ex.Rows @unchecked =>
-        assert(eng.lastServePath == "local-rollup" || eng.lastServePath == "cache",
-          eng.lastServePath)
+        assert(r.tier == "local-rollup" || r.tier == "cache", r.tier)
         assert(r.df.queryExecution.executedPlan.toString.contains("LocalTableScan"),
           "expected a driver-resident result frame")
       })
@@ -859,7 +864,7 @@ class NbqlExecutorSpec extends SparkSpec {
         // digest percentiles are rollup-eligible AND driver-tier served:
         // the sketches merged on the driver, no Spark re-agg in the plan
         assert(r.df.collect().nonEmpty)
-        assert(eng.lastServePath == "local-rollup", eng.lastServePath)
+        assert(r.tier == "local-rollup", r.tier)
       })
       // SMOOTH stores exact fold states → ANALYZE EWMA BY rollup-routes
       // bit-identically to the raw windowed fold (wire path end-to-end).
@@ -869,23 +874,26 @@ class NbqlExecutorSpec extends SparkSpec {
       val eq = """QUERY cpu.usage FROM 0 TO 11999 ANALYZE EWMA(value, 0.25) BY 4us"""
       val eqT = """QUERY cpu.usage TAGGED (host="h1") FROM 0 TO 11999
                    ANALYZE EWMA(value, 0.25) BY 4us"""
-      val rawE = rows(ex, eq).map(_.toString)
-      assert(eng.lastServePath == "analyze-spark", eng.lastServePath)
+      val (rawRows, rawTier) = served(ex, eq)
+      val rawE = rawRows.map(_.toString)
+      assert(rawTier == "analyze-spark", rawTier)
       assert(ex.execute(
         "CREATE ROLLUP cpu.usage BY 1us (value) SMOOTH EWMA(value, 0.25)").isRight)
       assert(rows(ex, "SHOW ROLLUPS").map(r => r.getAs[String]("smooth")) ==
         Seq("ewma(value,0.25)"))
-      val routedT = rows(ex, eqT).map(_.toString)
+      val (routedRows, routedTier) = served(ex, eqT)
+      val routedT = routedRows.map(_.toString)
       // resident partials make the driver tier eligible first; either
       // rollup-backed tier proves the route (both mirror the raw fold)
-      assert(eng.lastServePath == "local-rollup-ewma" ||
-        eng.lastServePath == "rollup-ewma", eng.lastServePath)
+      assert(routedTier == "local-rollup-ewma" || routedTier == "rollup-ewma",
+        routedTier)
       // routed TAGGED rows ⊂ raw rows (h1's windows), bit-identical
       assert(routedT.nonEmpty && routedT.forall(rawE.contains),
         s"routed $routedT vs raw $rawE")
       // an unregistered alpha keeps the raw path
-      rows(ex, """QUERY cpu.usage FROM 0 TO 11999 ANALYZE EWMA(value, 0.5) BY 4us""")
-      assert(eng.lastServePath == "analyze-spark", eng.lastServePath)
+      val (_, alphaTier) =
+        served(ex, """QUERY cpu.usage FROM 0 TO 11999 ANALYZE EWMA(value, 0.5) BY 4us""")
+      assert(alphaTier == "analyze-spark", alphaTier)
       // SMOOTH validation errors are clean
       assert(ex.execute(
         "CREATE ROLLUP cpu.usage BY 1us (value) SMOOTH EWMA(other, 0.25)").isLeft)
@@ -961,13 +969,13 @@ class NbqlExecutorSpec extends SparkSpec {
         assert(ex.execute(
           s"""PUSH m TAGGED (k="a") SET (v=${i}.0) AT ${i * 1000}""").isRight)
       val q = """QUERY m FROM 0 TO 100000 TAGGED (k="a")"""
-      val first = rows(ex, q)
+      val (first, firstTier) = served(ex, q)
       assert(first.size == 5)
-      assert(eng.lastServePath == "local", eng.lastServePath) // driver tier
+      assert(firstTier == "local", firstTier) // driver tier
       val (h0, _) = eng.cacheStats
-      val second = rows(ex, q)
+      val (second, secondTier) = served(ex, q)
       assert(second.map(_.toString) == first.map(_.toString))
-      assert(eng.lastServePath == "cache", eng.lastServePath)
+      assert(secondTier == "cache", secondTier)
       assert(eng.cacheStats._1 == h0 + 1, "repeat must be a result-cache hit")
       // a write invalidates: fresh rows, not the stale entry
       assert(ex.execute("""PUSH m TAGGED (k="a") SET (v=9.0) AT 9000""").isRight)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.tsdb._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.collection.JavaConverters._
 
@@ -43,6 +43,19 @@ class RollupSpec extends SparkSpec {
     AggSpec("first", "value"), AggSpec("last", "value"),
     AggSpec("frac", "value"), AggSpec("stddev", "value"),
     AggSpec("sum", "load"), AggSpec("avg", "load"))
+
+  /** The analytic's rows, asserting the route that planned them
+    * ([[TsdbEngine.analyzeRouted]]). */
+  private def analyzeOn(tier: String)(routed: (DataFrame, String)): Array[Row] = {
+    assert(routed._2 == tier, routed._2)
+    routed._1.collect()
+  }
+
+  /** A [[TsdbEngine.serve]] answer's rows, asserting the tier that served. */
+  private def servedBy(tier: String)(s: TsdbEngine.Served): Array[Row] = {
+    assert(s.tier == tier, s.tier)
+    s.rows
+  }
 
   private def normalize(df: DataFrame): Seq[String] =
     df.drop("tags").collect().map(_.toString).toSeq
@@ -248,12 +261,9 @@ class RollupSpec extends SparkSpec {
     }
     assert(eng.putBatch(points).isRight)
     val q = QueryParams("reqs", startNs = 0L, endNs = Some(120 * Min - 1))
-    val rawR = eng.analyze(q, AnalyzeResets("value")).collect()
-    assert(eng.lastServePath == "analyze-raw")
-    val rawC = eng.analyze(q, AnalyzeChanges("value")).collect()
-    assert(eng.lastServePath == "analyze-raw")
-    val rawByR = eng.analyze(q, AnalyzeResetsBy("value", Hr)).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val rawR = analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeResets("value")))
+    val rawC = analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeChanges("value")))
+    val rawByR = analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeResetsBy("value", Hr)))
     assert(rawByR.head.schema.fieldNames.toSeq == Seq("metric", "tags",
       "series_key", "window_start", "n_points", "resets"))
     assert(rawR.head.schema.fieldNames.toSeq ==
@@ -261,53 +271,47 @@ class RollupSpec extends SparkSpec {
     assert(rawC.head.schema.fieldNames.toSeq ==
       Seq("metric", "tags", "series_key", "n_points", "changes"))
     eng.registerRollup("reqs", Min, Seq("value"))
-    val routedR = eng.analyze(q, AnalyzeResets("value")).collect()
-    assert(eng.lastServePath == "rollup-transitions")
+    val routedR = analyzeOn("rollup-transitions")(eng.analyzeRouted(q, AnalyzeResets("value")))
     assert(rawR.map(_.toSeq).toSeq == routedR.map(_.toSeq).toSeq,
       "routed RESETS must equal the raw analytic bit-for-bit")
-    val routedC = eng.analyze(q, AnalyzeChanges("value")).collect()
-    assert(eng.lastServePath == "rollup-transitions")
+    val routedC = analyzeOn("rollup-transitions")(eng.analyzeRouted(q, AnalyzeChanges("value")))
     assert(rawC.map(_.toSeq).toSeq == routedC.map(_.toSeq).toSeq,
       "routed CHANGES must equal the raw analytic bit-for-bit")
     // un-alignable range falls back to raw
-    eng.analyze(q.copy(endNs = Some(90 * Min)), AnalyzeResets("value")).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    analyzeOn("analyze-raw")(
+      eng.analyzeRouted(q.copy(endNs = Some(90 * Min)), AnalyzeResets("value")))
     // LIMIT flows through the routed plan
     assert(eng.analyze(q.copy(limit = Some(1L)),
       AnalyzeResets("value")).collect().length == 1)
 
     // driver-resident tier serves the same rows with NO Spark job
-    val localR = eng.analyzeCached(q, AnalyzeResets("value"))
-    assert(eng.lastServePath == "local-rollup-resets", eng.lastServePath)
+    val localR = servedBy("local-rollup-resets")(eng.serve(AnalyzeReq(q, AnalyzeResets("value"))))
     assert(localR.map(_.toSeq).toSeq == routedR.map(_.toSeq).toSeq,
       "driver RESETS tier must mirror the Spark rollup route row-for-row")
-    val localC = eng.analyzeCached(q, AnalyzeChanges("value"))
-    assert(eng.lastServePath == "local-rollup-changes", eng.lastServePath)
+    val localC = servedBy("local-rollup-changes")(eng.serve(AnalyzeReq(q, AnalyzeChanges("value"))))
     assert(localC.map(_.toSeq).toSeq == routedC.map(_.toSeq).toSeq,
       "driver CHANGES tier must mirror the Spark rollup route row-for-row")
     // second call hits the result cache; the two verbs cache separately
-    eng.analyzeCached(q, AnalyzeResets("value"))
-    assert(eng.lastServePath == "analyze-cache")
+    servedBy("analyze-cache")(eng.serve(AnalyzeReq(q, AnalyzeResets("value"))))
     // TAGGED + LIMIT compose through the fold
     val qt = q.copy(tags = Map("host" -> "h1"))
-    assert(eng.analyzeCached(qt, AnalyzeResets("value")).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qt, AnalyzeResets("value"))).rows.map(_.toSeq).toSeq ==
       eng.analyze(qt, AnalyzeResets("value")).collect().map(_.toSeq).toSeq)
     val qLim = q.copy(limit = Some(1L))
-    val localLim = eng.analyzeCached(qLim, AnalyzeChanges("value"))
-    assert(eng.lastServePath == "local-rollup-changes")
+    val localLim = servedBy("local-rollup-changes")(
+      eng.serve(AnalyzeReq(qLim, AnalyzeChanges("value"))))
     assert(localLim.length == 1 && localLim.map(_.toSeq).toSeq ==
       eng.analyze(qLim, AnalyzeChanges("value")).collect().map(_.toSeq).toSeq)
     // WINDOWED forms: rollup-routed when the target divides (and
     // bit-identical to the raw windowed path captured pre-registration),
     // raw otherwise; driver tier row-identical to the Spark route
-    val routedBy = eng.analyze(q, AnalyzeResetsBy("value", Hr)).collect()
-    assert(eng.lastServePath == "rollup-transitions-by")
+    val routedBy = analyzeOn("rollup-transitions-by")(
+      eng.analyzeRouted(q, AnalyzeResetsBy("value", Hr)))
     assert(routedBy.map(_.toSeq).toSeq == rawByR.map(_.toSeq).toSeq,
       "routed RESETS BY must equal the raw windowed path bit-for-bit")
-    eng.analyze(q, AnalyzeResetsBy("value", 90L * 1000000000L)).collect()
-    assert(eng.lastServePath == "analyze-raw")
-    val localBy = eng.analyzeCached(q, AnalyzeChangesBy("value", Hr))
-    assert(eng.lastServePath == "local-rollup-changes-by", eng.lastServePath)
+    analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeResetsBy("value", 90L * 1000000000L)))
+    val localBy = servedBy("local-rollup-changes-by")(
+      eng.serve(AnalyzeReq(q, AnalyzeChangesBy("value", Hr))))
     assert(localBy.map(_.toSeq).toSeq ==
       eng.analyze(q, AnalyzeChangesBy("value", Hr)).collect().map(_.toSeq).toSeq)
 
@@ -315,8 +319,7 @@ class RollupSpec extends SparkSpec {
     assert(eng.putBatch(Seq(graft.model.DataPoint("reqs",
       Map("host" -> "h0"), 120 * Min - 1, Map("value" ->
         graft.model.FieldValue.ofDouble(0.5))))).isRight)
-    val after = eng.analyzeCached(q, AnalyzeResets("value"))
-    assert(eng.lastServePath == "local-rollup-resets")
+    val after = servedBy("local-rollup-resets")(eng.serve(AnalyzeReq(q, AnalyzeResets("value"))))
     assert(after.map(_.toSeq).toSeq ==
       eng.analyze(q, AnalyzeResets("value")).collect().map(_.toSeq).toSeq)
   }
@@ -370,69 +373,56 @@ class RollupSpec extends SparkSpec {
     assert(eng.putBatch(points).isRight)
     val q = QueryParams("reqs", startNs = 0L, endNs = Some(120 * Min - 1))
     val dby = AnalyzeDeltaBy("value", Hr)
-    val rawD = eng.analyze(q, dby).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val rawD = analyzeOn("analyze-raw")(eng.analyzeRouted(q, dby))
     val rby = AnalyzeRateBy("value", Hr)
-    val rawRby = eng.analyze(q, rby).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val rawRby = analyzeOn("analyze-raw")(eng.analyzeRouted(q, rby))
     assert(rawRby.head.schema.fieldNames.toSeq == Seq("metric", "tags",
       "series_key", "window_start", "n_points", "rate_per_sec"))
     // rate_per_sec IS the DELTA BY increase over the window duration
     rawRby.zip(rawD).foreach { case (r, d) =>
       assert(r.getDouble(5) == d.getDouble(6) * 1e9 / Hr.toDouble) }
     val twa = AnalyzeTwa("value", Hr)
-    val rawT = eng.analyze(q, twa).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val rawT = analyzeOn("analyze-raw")(eng.analyzeRouted(q, twa))
     eng.registerRollup("reqs", Min, Seq("value"))
-    val routedD = eng.analyze(q, dby).collect()
-    assert(eng.lastServePath == "rollup-delta-by")
+    val routedD = analyzeOn("rollup-delta-by")(eng.analyzeRouted(q, dby))
     assert(rawD.map(_.toSeq).toSeq == routedD.map(_.toSeq).toSeq,
       "routed DELTA BY must equal the raw analytic")
-    val routedT = eng.analyze(q, twa).collect()
-    assert(eng.lastServePath == "rollup-twa")
+    val routedT = analyzeOn("rollup-twa")(eng.analyzeRouted(q, twa))
     assert(rawT.map(_.toSeq).toSeq == routedT.map(_.toSeq).toSeq,
       "routed TWA must equal the raw analytic")
-    val routedRby = eng.analyze(q, rby).collect()
-    assert(eng.lastServePath == "rollup-delta-by")
+    val routedRby = analyzeOn("rollup-delta-by")(eng.analyzeRouted(q, rby))
     assert(rawRby.map(_.toSeq).toSeq == routedRby.map(_.toSeq).toSeq,
       "routed RATE BY must equal the raw analytic")
-    val localRby = eng.analyzeCached(q, rby)
-    assert(eng.lastServePath == "local-rollup-rate-by", eng.lastServePath)
+    val localRby = servedBy("local-rollup-rate-by")(eng.serve(AnalyzeReq(q, rby)))
     assert(localRby.map(_.toSeq).toSeq == routedRby.map(_.toSeq).toSeq,
       "driver RATE BY tier must mirror the Spark rollup route row-for-row")
     // non-multiple target window / interval falls back to raw
-    eng.analyze(q, AnalyzeDeltaBy("value", 90L * 1000000000L)).collect()
-    assert(eng.lastServePath == "analyze-raw")
-    eng.analyze(q, AnalyzeTwa("value", 90L * 1000000000L)).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeDeltaBy("value", 90L * 1000000000L)))
+    analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeTwa("value", 90L * 1000000000L)))
     // LIMIT flows through the routed plans
     assert(eng.analyze(q.copy(limit = Some(3L)), dby).collect().length == 3)
 
     // the driver-resident tiers serve the same rows with NO Spark job
-    val localD = eng.analyzeCached(q, dby)
-    assert(eng.lastServePath == "local-rollup-delta-by", eng.lastServePath)
+    val localD = servedBy("local-rollup-delta-by")(eng.serve(AnalyzeReq(q, dby)))
     assert(localD.map(_.toSeq).toSeq == routedD.map(_.toSeq).toSeq,
       "driver DELTA BY tier must mirror the Spark rollup route row-for-row")
-    val localT = eng.analyzeCached(q, twa)
-    assert(eng.lastServePath == "local-rollup-twa", eng.lastServePath)
+    val localT = servedBy("local-rollup-twa")(eng.serve(AnalyzeReq(q, twa)))
     assert(localT.map(_.toSeq).toSeq == routedT.map(_.toSeq).toSeq,
       "driver TWA tier must mirror the Spark rollup route row-for-row")
     // cache hits on repeat; TAGGED + LIMIT compose through the folds
-    eng.analyzeCached(q, dby)
-    assert(eng.lastServePath == "analyze-cache")
+    servedBy("analyze-cache")(eng.serve(AnalyzeReq(q, dby)))
     val qt = q.copy(tags = Map("host" -> "h1"))
-    assert(eng.analyzeCached(qt, dby).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qt, dby)).rows.map(_.toSeq).toSeq ==
       eng.analyze(qt, dby).collect().map(_.toSeq).toSeq)
-    assert(eng.analyzeCached(qt, twa).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qt, twa)).rows.map(_.toSeq).toSeq ==
       eng.analyze(qt, twa).collect().map(_.toSeq).toSeq)
     val qLim = q.copy(limit = Some(2L))
-    assert(eng.analyzeCached(qLim, dby).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qLim, dby)).rows.map(_.toSeq).toSeq ==
       eng.analyze(qLim, dby).collect().map(_.toSeq).toSeq)
-    assert(eng.analyzeCached(qLim, twa).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qLim, twa)).rows.map(_.toSeq).toSeq ==
       eng.analyze(qLim, twa).collect().map(_.toSeq).toSeq)
     // a non-multiple window bails out of the local tier too (spark path)
-    eng.analyzeCached(q, AnalyzeTwa("value", 90L * 1000000000L))
-    assert(eng.lastServePath == "analyze-spark")
+    servedBy("analyze-spark")(eng.serve(AnalyzeReq(q, AnalyzeTwa("value", 90L * 1000000000L))))
   }
 
   test("engine: ANALYZE IRATE serves from the driver-resident tier") {
@@ -448,19 +438,16 @@ class RollupSpec extends SparkSpec {
     val spec = AnalyzeIrate("value")
     val raw = eng.analyze(q, spec).collect()
     eng.registerRollup("reqs", Min, Seq("value"))
-    val local = eng.analyzeCached(q, spec)
-    assert(eng.lastServePath == "local-rollup-irate", eng.lastServePath)
+    val local = servedBy("local-rollup-irate")(eng.serve(AnalyzeReq(q, spec)))
     assert(local.map(_.toSeq).toSeq == raw.map(_.toSeq).toSeq,
       "driver IRATE tier must mirror the raw analytic row-for-row")
     // second call hits the result cache; TAGGED + LIMIT compose
-    eng.analyzeCached(q, spec)
-    assert(eng.lastServePath == "analyze-cache")
+    servedBy("analyze-cache")(eng.serve(AnalyzeReq(q, spec)))
     val qt = q.copy(tags = Map("host" -> "h1"))
-    assert(eng.analyzeCached(qt, spec).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qt, spec)).rows.map(_.toSeq).toSeq ==
       eng.analyze(qt, spec).collect().map(_.toSeq).toSeq)
     val qLim = q.copy(limit = Some(1L))
-    val lim = eng.analyzeCached(qLim, spec)
-    assert(eng.lastServePath == "local-rollup-irate")
+    val lim = servedBy("local-rollup-irate")(eng.serve(AnalyzeReq(qLim, spec)))
     assert(lim.length == 1 &&
       lim.map(_.toSeq).toSeq ==
         eng.analyze(qLim, spec).collect().map(_.toSeq).toSeq)
@@ -480,8 +467,7 @@ class RollupSpec extends SparkSpec {
     val q = QueryParams("reqs", startNs = 0L, endNs = Some(8 * Hr - 1))
     val ewmaBy = AnalyzeEwmaBy("value", 0.25, 10 * Min)
     val holtBy = AnalyzeHoltBy("value", 0.25, 0.125, 10 * Min)
-    val rawE = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val rawE = analyzeOn("analyze-raw")(eng.analyzeRouted(q, ewmaBy))
     val rawH = eng.analyze(q, holtBy).collect()
     // windowed raw == per-point raw sampled at each window's last point
     val perPoint = eng.analyze(q, AnalyzeEwma("value", 0.25)).collect()
@@ -493,35 +479,30 @@ class RollupSpec extends SparkSpec {
     eng.registerRollup("reqs", 5 * Min, Seq("value"),
       smooth = Seq(SmoothSpec("value", "ewma", 0.25),
         SmoothSpec("value", "holt", 0.25, 0.125)))
-    val routedE = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma", eng.lastServePath)
+    val routedE = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(routedE.map(_.toSeq).toSeq == rawE.map(_.toSeq).toSeq,
       "rollup-served EWMA BY must be bit-identical to the raw fold")
-    val routedH = eng.analyze(q, holtBy).collect()
-    assert(eng.lastServePath == "rollup-holt", eng.lastServePath)
+    val routedH = analyzeOn("rollup-holt")(eng.analyzeRouted(q, holtBy))
     assert(routedH.map(_.toSeq).toSeq == rawH.map(_.toSeq).toSeq,
       "rollup-served HOLT BY must be bit-identical to the raw fold")
-    // driver-resident tier: analyzeCached folds the RESIDENT partials
+    // driver-resident tier: serve folds the RESIDENT partials
     // with zero Spark jobs and mirrors the Spark route row-for-row
-    val localE = eng.analyzeCached(q, ewmaBy)
-    assert(eng.lastServePath == "local-rollup-ewma", eng.lastServePath)
+    val localE = servedBy("local-rollup-ewma")(eng.serve(AnalyzeReq(q, ewmaBy)))
     assert(localE.map(_.toSeq).toSeq == rawE.map(_.toSeq).toSeq,
       "driver EWMA BY tier must mirror the raw fold row-for-row")
     val qt = q.copy(tags = Map("host" -> "h1"))
-    val localH = eng.analyzeCached(qt, holtBy)
-    assert(eng.lastServePath == "local-rollup-holt", eng.lastServePath)
+    val localH = servedBy("local-rollup-holt")(eng.serve(AnalyzeReq(qt, holtBy)))
     assert(localH.map(_.toSeq).toSeq ==
       eng.analyze(qt, holtBy).collect().map(_.toSeq).toSeq)
     // LIMIT parity; a mid-range start is refused by the PREFIX check
     // (stored states fold from the series' first sample)
     val qLim = q.copy(limit = Some(2L))
-    assert(eng.analyzeCached(qLim, ewmaBy).map(_.toSeq).toSeq ==
+    assert(eng.serve(AnalyzeReq(qLim, ewmaBy)).rows.map(_.toSeq).toSeq ==
       eng.analyze(qLim, ewmaBy).collect().map(_.toSeq).toSeq)
-    eng.analyzeCached(q.copy(startNs = 1 * Hr), ewmaBy)
-    assert(eng.lastServePath != "local-rollup-ewma", eng.lastServePath)
+    val mid = eng.serve(AnalyzeReq(q.copy(startNs = 1 * Hr), ewmaBy))
+    assert(mid.tier != "local-rollup-ewma", mid.tier)
     // a different alpha is a different fold — raw path
-    eng.analyze(q, AnalyzeEwmaBy("value", 0.5, 10 * Min)).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeEwmaBy("value", 0.5, 10 * Min)))
     // TWO alphas on one field coexist (param-encoded state columns):
     // each routes to ITS OWN stored fold, both bit-identical to raw
     val raw05 = eng.analyze(q, AnalyzeEwmaBy("value", 0.5, 10 * Min)).collect()
@@ -529,18 +510,15 @@ class RollupSpec extends SparkSpec {
       smooth = Seq(SmoothSpec("value", "ewma", 0.25),
         SmoothSpec("value", "ewma", 0.5),
         SmoothSpec("value", "holt", 0.25, 0.125)))
-    val r25 = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val r25 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(r25.map(_.toSeq).toSeq == rawE.map(_.toSeq).toSeq)
-    val r05 = eng.analyze(q, AnalyzeEwmaBy("value", 0.5, 10 * Min)).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val r05 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, AnalyzeEwmaBy("value", 0.5, 10 * Min)))
     assert(r05.map(_.toSeq).toSeq == raw05.map(_.toSeq).toSeq,
       "the second alpha must serve from its own stored fold")
     // mid-range start would re-seed the raw fold — the range-start probe
     // must refuse the stored prefix states
     val qMid = q.copy(startNs = 1 * Hr)
-    val rawMid = eng.analyze(qMid, ewmaBy).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val rawMid = analyzeOn("analyze-raw")(eng.analyzeRouted(qMid, ewmaBy))
     assert(rawMid.nonEmpty)
     // commit AFTER registration: the smoothing rollup full-rebuilds and
     // still serves the fresh fold bit-identically
@@ -552,8 +530,7 @@ class RollupSpec extends SparkSpec {
     val q2 = QueryParams("reqs", startNs = 0L, endNs = Some(8 * Hr - 1))
     val raw2 = TsAnalytics.ewmaSmoothBy(
       eng.loadPoints().get, q2, 0.25, 10 * Min).collect()
-    val routed2 = eng.analyze(q2, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val routed2 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q2, ewmaBy))
     assert(routed2.map(_.toSeq).toSeq == raw2.map(_.toSeq).toSeq,
       "post-commit full rebuild must serve the fresh fold")
   }
@@ -582,8 +559,7 @@ class RollupSpec extends SparkSpec {
     val eng = new TsdbEngine(spark, dir)
     assert(eng.putBatch(points).isRight)
     eng.registerRollup("reqs", Min, Seq("value"), smooth = smooth)
-    val served = eng.analyze(q, spec).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val served = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, spec))
     val files0 = listRollupFiles()
     assert(files0.nonEmpty)
     // a FRESH engine on the same root (new marker read — json4s
@@ -591,8 +567,7 @@ class RollupSpec extends SparkSpec {
     // materialization without rewriting a single file
     val eng2 = new TsdbEngine(spark, dir)
     eng2.registerRollup("reqs", Min, Seq("value"), smooth = smooth)
-    val served2 = eng2.analyze(q, spec).collect()
-    assert(eng2.lastServePath == "rollup-ewma")
+    val served2 = analyzeOn("rollup-ewma")(eng2.analyzeRouted(q, spec))
     assert(served2.map(_.toSeq).toSeq == served.map(_.toSeq).toSeq)
     assert(listRollupFiles() == files0,
       "unchanged version must not rewrite the materialization")
@@ -604,8 +579,7 @@ class RollupSpec extends SparkSpec {
     assert(eng2.putBatch(Seq(graft.model.DataPoint("reqs",
       Map("host" -> "h0"), 30 * Min + 1,
       Map("value" -> graft.model.FieldValue.ofDouble(500.0))))).isRight)
-    val served3 = eng2.analyze(q, spec).collect()
-    assert(eng2.lastServePath == "rollup-ewma")
+    val served3 = analyzeOn("rollup-ewma")(eng2.analyzeRouted(q, spec))
     val raw3 = TsAnalytics.ewmaSmoothBy(eng2.loadPoints().get, q, 0.25,
       10 * Min).collect()
     assert(served3.map(_.toSeq).toSeq == raw3.map(_.toSeq).toSeq)
@@ -645,8 +619,7 @@ class RollupSpec extends SparkSpec {
     val q = QueryParams("reqs", startNs = 0L, endNs = Some(3 * Day - 1))
     val ewmaBy = AnalyzeEwmaBy("value", 0.25, 10 * Min)
     val holtBy = AnalyzeHoltBy("value", 0.25, 0.125, 10 * Min)
-    eng.analyze(q, ewmaBy).collect() // forces the initial build
-    assert(eng.lastServePath == "rollup-ewma")
+    analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy)) // forces the initial build
     val (d0, d1, d2) = ("1970-01-01", "1970-01-02", "1970-01-03")
     val (f0, f1) = (filesOf(d0), filesOf(d1))
     assert(f0.nonEmpty && f1.nonEmpty && filesOf(d2).nonEmpty)
@@ -656,8 +629,7 @@ class RollupSpec extends SparkSpec {
     val more = (0 until 12).map(i => pt("h0", 2 * Day + Hr + i * 7 * Min,
       500.0 + i)) :+ pt("h2", 2 * Day + 2 * Hr, 7.25)
     assert(eng.putBatch(more).isRight)
-    val routedE = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val routedE = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(filesOf(d0) == f0 && filesOf(d1) == f1,
       "pre-boundary partitions must not be rewritten by a day-3 commit")
     assert(filesOf(d2).nonEmpty)
@@ -666,8 +638,7 @@ class RollupSpec extends SparkSpec {
     assert(routedE.map(_.toSeq).toSeq == rawE.map(_.toSeq).toSeq,
       "resumed EWMA folds must be bit-identical to the full fold" +
         " (incl. the unseeded new series h2)")
-    val routedH = eng.analyze(q, holtBy).collect()
-    assert(eng.lastServePath == "rollup-holt")
+    val routedH = analyzeOn("rollup-holt")(eng.analyzeRouted(q, holtBy))
     val rawH = TsAnalytics.holtSmoothBy(eng.loadPoints().get, q, 0.25,
       0.125, 10 * Min).collect()
     assert(routedH.map(_.toSeq).toSeq == rawH.map(_.toSeq).toSeq,
@@ -675,8 +646,7 @@ class RollupSpec extends SparkSpec {
     // commit touching day 2: boundary moves — day 1 still untouched,
     // days 2-3 rebuild, folds resume from day-1 states only
     assert(eng.putBatch(Seq(pt("h1", Day + 3 * Hr + 1, -42.0))).isRight)
-    val routedE2 = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val routedE2 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(filesOf(d0) == f0,
       "a day-2 commit must leave day 1 physically untouched")
     assert(filesOf(d1) != f1, "a day-2 commit must rebuild day 2")
@@ -684,8 +654,7 @@ class RollupSpec extends SparkSpec {
       10 * Min).collect()
     assert(routedE2.map(_.toSeq).toSeq == rawE2.map(_.toSeq).toSeq)
     // the driver-resident tier reads the same maintained frame
-    val localE = eng.analyzeCached(q, ewmaBy)
-    assert(eng.lastServePath == "local-rollup-ewma")
+    val localE = servedBy("local-rollup-ewma")(eng.serve(AnalyzeReq(q, ewmaBy)))
     assert(localE.map(_.toSeq).toSeq == rawE2.map(_.toSeq).toSeq)
   }
 
@@ -712,8 +681,7 @@ class RollupSpec extends SparkSpec {
     // day-6 commit touching only the steady series: every suffix series
     // resolves inside the 2-date recent window — no full-prefix read
     assert(eng.putBatch(Seq(pt("hot", 5 * Day + 30 * Min, 77.0))).isRight)
-    val routed1 = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val routed1 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(eng.lastSeedScan == "recent",
       s"steady series must resolve in the bounded window, got ${eng.lastSeedScan}")
     val raw1 = TsAnalytics.ewmaSmoothBy(eng.loadPoints().get, q, 0.25,
@@ -726,8 +694,7 @@ class RollupSpec extends SparkSpec {
     // of the older partitions distinguishes new from stale, and the
     // unseeded fold is already exact
     assert(eng.putBatch(Seq(pt("fresh", 5 * Day + 50 * Min, 9.0))).isRight)
-    val routedN = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val routedN = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(eng.lastSeedScan == "recent-new",
       s"a brand-new suffix series must keep the bounded scan, got ${eng.lastSeedScan}")
     val rawN = TsAnalytics.ewmaSmoothBy(eng.loadPoints().get, q, 0.25,
@@ -737,8 +704,7 @@ class RollupSpec extends SparkSpec {
     // the STALE series reappears on day 6: its resume state lives on
     // day 2, outside the recent window — exactness demands the fallback
     assert(eng.putBatch(Seq(pt("cold", 5 * Day + 40 * Min, 55.5))).isRight)
-    val routed2 = eng.analyze(q, ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma")
+    val routed2 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
     assert(eng.lastSeedScan == "full",
       s"a stale suffix series must force the full-prefix scan, got ${eng.lastSeedScan}")
     val raw2 = TsAnalytics.ewmaSmoothBy(eng.loadPoints().get, q, 0.25,
@@ -821,11 +787,10 @@ class RollupSpec extends SparkSpec {
     }
     assert(eng.putBatch(points).isRight)
     val q = QueryParams("disk", startNs = 0L, endNs = Some(120 * Min - 1))
-    val raw = eng.analyze(q, AnalyzePredict("value", 60 * Min)).collect()
-    assert(eng.lastServePath == "analyze-raw")
+    val raw = analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzePredict("value", 60 * Min)))
     eng.registerRollup("disk", Min, Seq("value"))
-    val routed = eng.analyze(q, AnalyzePredict("value", 60 * Min)).collect()
-    assert(eng.lastServePath == "rollup-predict")
+    val routed = analyzeOn("rollup-predict")(
+      eng.analyzeRouted(q, AnalyzePredict("value", 60 * Min)))
     assert(raw.length == routed.length)
     raw.zip(routed).foreach { case (a, b) =>
       assert(a.getString(2) == b.getString(2))
@@ -834,23 +799,21 @@ class RollupSpec extends SparkSpec {
     }
 
     // the driver-resident tier mirrors the Spark route with no job
-    val local = eng.analyzeCached(q, AnalyzePredict("value", 60 * Min))
-    assert(eng.lastServePath == "local-rollup-predict", eng.lastServePath)
+    val local = servedBy("local-rollup-predict")(
+      eng.serve(AnalyzeReq(q, AnalyzePredict("value", 60 * Min))))
     assert(local.length == routed.length)
     local.zip(routed).foreach { case (a, b) =>
       assert(a.getString(2) == b.getString(2))
       assert(math.abs(a.getDouble(5) - b.getDouble(5)) < 1e-9)
       assert(math.abs(a.getDouble(6) - b.getDouble(6)) < 1e-9)
     }
-    eng.analyzeCached(q, AnalyzePredict("value", 60 * Min))
-    assert(eng.lastServePath == "analyze-cache")
+    servedBy("analyze-cache")(eng.serve(AnalyzeReq(q, AnalyzePredict("value", 60 * Min))))
     // distinct horizons get distinct cache entries
-    eng.analyzeCached(q, AnalyzePredict("value", 120 * Min))
-    assert(eng.lastServePath == "local-rollup-predict")
+    servedBy("local-rollup-predict")(eng.serve(AnalyzeReq(q, AnalyzePredict("value", 120 * Min))))
     // LIMIT parity with the Spark path's df.limit
     val qLim = q.copy(limit = Some(1L))
-    val localLim = eng.analyzeCached(qLim, AnalyzePredict("value", 60 * Min))
-    assert(eng.lastServePath == "local-rollup-predict")
+    val localLim = servedBy("local-rollup-predict")(
+      eng.serve(AnalyzeReq(qLim, AnalyzePredict("value", 60 * Min))))
     assert(localLim.length == 1)
     assert(localLim.map(_.getString(2)).toSeq ==
       eng.analyze(qLim, AnalyzePredict("value", 60 * Min))
@@ -858,8 +821,7 @@ class RollupSpec extends SparkSpec {
 
     // DERIV: the same routed moment fit projected to slope — routed and
     // driver tiers match the raw fit's slope exactly
-    val deriv = eng.analyze(q, AnalyzeDeriv("value")).collect()
-    assert(eng.lastServePath == "rollup-predict")
+    val deriv = analyzeOn("rollup-predict")(eng.analyzeRouted(q, AnalyzeDeriv("value")))
     assert(deriv.head.schema.fieldNames.toSeq == Seq("metric", "tags",
       "series_key", "n_points", "last_ts", "slope_per_sec"))
     deriv.zip(raw).foreach { case (d, p) =>
@@ -867,12 +829,10 @@ class RollupSpec extends SparkSpec {
       assert(math.abs(d.getDouble(5) - p.getDouble(5)) < 1e-9,
         "DERIV slope must equal PREDICT's trend fit")
     }
-    val localDeriv = eng.analyzeCached(q, AnalyzeDeriv("value"))
-    assert(eng.lastServePath == "local-rollup-deriv", eng.lastServePath)
+    val localDeriv = servedBy("local-rollup-deriv")(eng.serve(AnalyzeReq(q, AnalyzeDeriv("value"))))
     assert(localDeriv.map(r => (r.getString(2), r.getDouble(5))).toSeq ==
       deriv.map(r => (r.getString(2), r.getDouble(5))).toSeq)
-    eng.analyzeCached(q, AnalyzeDeriv("value"))
-    assert(eng.lastServePath == "analyze-cache")
+    servedBy("analyze-cache")(eng.serve(AnalyzeReq(q, AnalyzeDeriv("value"))))
   }
 
   test("engine: ANALYZE DELTA routes through a registered rollup") {
@@ -887,50 +847,42 @@ class RollupSpec extends SparkSpec {
       }
       assert(eng.putBatch(points).isRight)
       val q = QueryParams("reqs", startNs = 0L, endNs = Some(120 * Min - 1))
-      val raw = eng.analyze(q, AnalyzeDelta("value")).collect()
-      assert(eng.lastServePath != "rollup-delta")
+      val raw = analyzeOn("analyze-raw")(eng.analyzeRouted(q, AnalyzeDelta("value")))
       eng.registerRollup("reqs", Min, Seq("value"))
-      val routed = eng.analyze(q, AnalyzeDelta("value")).collect()
-      assert(eng.lastServePath == "rollup-delta")
+      val routed = analyzeOn("rollup-delta")(eng.analyzeRouted(q, AnalyzeDelta("value")))
       assert(raw.map(_.toSeq).toSeq == routed.map(_.toSeq).toSeq,
         "routed answer must equal the raw analytic")
       // un-alignable range falls back to raw
       val q2 = q.copy(endNs = Some(90 * Min))
-      eng.analyze(q2, AnalyzeDelta("value")).collect()
-      assert(eng.lastServePath != "rollup-delta")
+      analyzeOn("analyze-raw")(eng.analyzeRouted(q2, AnalyzeDelta("value")))
 
       // the driver-resident tier serves the same rows with NO Spark job
-      val local = eng.analyzeCached(q, AnalyzeDelta("value"))
-      assert(eng.lastServePath == "local-rollup-delta", eng.lastServePath)
+      val local = servedBy("local-rollup-delta")(eng.serve(AnalyzeReq(q, AnalyzeDelta("value"))))
       assert(local.map(_.toSeq).toSeq == routed.map(_.toSeq).toSeq,
         "driver tier must mirror the Spark rollup route row-for-row")
       // second call hits the result cache
-      eng.analyzeCached(q, AnalyzeDelta("value"))
-      assert(eng.lastServePath == "analyze-cache")
+      servedBy("analyze-cache")(eng.serve(AnalyzeReq(q, AnalyzeDelta("value"))))
       // TAGGED composes through the resident rows
       val qt = q.copy(tags = Map("host" -> "h1"))
-      val localT = eng.analyzeCached(qt, AnalyzeDelta("value"))
-      assert(eng.lastServePath == "local-rollup-delta")
+      val localT = servedBy("local-rollup-delta")(eng.serve(AnalyzeReq(qt, AnalyzeDelta("value"))))
       assert(localT.map(_.toSeq).toSeq ==
         eng.analyze(qt, AnalyzeDelta("value")).collect().map(_.toSeq).toSeq)
       // LIMIT parity: the driver tier truncates exactly like the Spark
       // path's df.limit (and caches the truncated rows under the
       // limit-including key)
       val qLim = q.copy(limit = Some(1L))
-      val localLim = eng.analyzeCached(qLim, AnalyzeDelta("value"))
-      assert(eng.lastServePath == "local-rollup-delta")
+      val localLim = servedBy("local-rollup-delta")(
+        eng.serve(AnalyzeReq(qLim, AnalyzeDelta("value"))))
       assert(localLim.length == 1)
       assert(localLim.map(_.toSeq).toSeq ==
         eng.analyze(qLim, AnalyzeDelta("value")).collect().map(_.toSeq).toSeq)
-      val cachedLim = eng.analyzeCached(qLim, AnalyzeDelta("value"))
-      assert(eng.lastServePath == "analyze-cache")
+      val cachedLim = servedBy("analyze-cache")(eng.serve(AnalyzeReq(qLim, AnalyzeDelta("value"))))
       assert(cachedLim.length == 1)
       // a write invalidates: fresh rows, still locally served
       assert(eng.putBatch(Seq(graft.model.DataPoint("reqs",
         Map("host" -> "h0"), 120 * Min - 1, Map("value" ->
           graft.model.FieldValue.ofDouble(999.0))))).isRight)
-      val after = eng.analyzeCached(q, AnalyzeDelta("value"))
-      assert(eng.lastServePath == "local-rollup-delta")
+      val after = servedBy("local-rollup-delta")(eng.serve(AnalyzeReq(q, AnalyzeDelta("value"))))
       assert(after.map(_.toSeq).toSeq ==
         eng.analyze(q, AnalyzeDelta("value")).collect().map(_.toSeq).toSeq)
     }
@@ -1006,21 +958,18 @@ class RollupSpec extends SparkSpec {
     val p = q(Seq(AggSpec("count", "*"), AggSpec("avg", "value"),
       AggSpec("min", "value"), AggSpec("max", "value")))
     val truth = eng.query(p).collect().toSeq
-    assertSameRows(truth, eng.queryCached(p).toSeq)
-    assert(eng.lastServePath == "local-rollup", eng.lastServePath)
+    assertSameRows(truth, servedBy("local-rollup")(eng.serve(PointReq(p))).toSeq)
     // repeat hits the result cache, not the tier
-    eng.queryCached(p)
-    assert(eng.lastServePath == "cache")
+    servedBy("cache")(eng.serve(PointReq(p)))
     // percentile needs digest partials: this rollup has none, so the
     // shape is rollup-ineligible entirely and falls to the Spark path
     val pp = p.copy(aggs = Seq(AggSpec("p50", "value")))
-    eng.queryCached(pp)
-    assert(eng.lastServePath == "spark", eng.lastServePath)
+    servedBy("spark")(eng.serve(PointReq(pp)))
     // a commit invalidates: fresh collect, same answers as raw
     eng.putBatch(Seq(graft.model.DataPoint("cpu.usage", Map("host" -> "h1"),
       100L * Min, Map("value" -> graft.model.FieldValue(d = Some(77.5))))))
-    assertSameRows(eng.query(p).collect().toSeq, eng.queryCached(p).toSeq)
-    assert(eng.lastServePath == "local-rollup")
+    assertSameRows(eng.query(p).collect().toSeq,
+      servedBy("local-rollup")(eng.serve(PointReq(p))).toSeq)
   }
 
   test("driver tier digest percentiles: sketches merge driver-side") {
@@ -1044,8 +993,7 @@ class RollupSpec extends SparkSpec {
     val eng = new TsdbEngine(spark, s"$dir/db")
     eng.putDF(pts)
     eng.registerRollup("cpu.usage", Min, Seq("value"), withDigests = true)
-    val served = eng.queryCached(q(aggs)).toSeq
-    assert(eng.lastServePath == "local-rollup", eng.lastServePath)
+    val served = servedBy("local-rollup")(eng.serve(PointReq(q(aggs)))).toSeq
     assertSameRows(
       Rollup.run(rollup, Min, q(aggs)).collect().toSeq, served)
   }
@@ -1085,7 +1033,7 @@ class RollupSpec extends SparkSpec {
     val truth = rows(eng.query(p))
     assert(truth.nonEmpty)
     assert(rows(eng.queryServing(p)) == truth)
-    assert(eng.queryCached(p).map(_.toString).toSeq == truth)
+    assert(eng.serve(PointReq(p)).rows.map(_.toString).toSeq == truth)
     // the routed plan computes over rollup partials, not raw fields
     val plan = eng.queryServing(p).queryExecution.executedPlan.toString
     assert(plan.contains("value__sum") || plan.contains("__cnt_star"),
@@ -1168,18 +1116,15 @@ class RollupSpec extends SparkSpec {
       // DRIVER tier: resident partials re-aggregate in pure Scala,
       // row-identical to the Spark rollup path, no scan in the plan
       val sparkPath = rows(eng.queryByTags(query, Seq("dc")))
-      val served = eng.queryByTagsServingDF(query, Seq("dc"))
-      assert(eng.lastServePath == "local-rollup-tags", eng.lastServePath)
-      assert(rows(served) == sparkPath)
-      assert(!served.queryExecution.executedPlan.toString.contains("FileScan"),
-        "driver tier must serve from a LocalRelation")
+      val served = eng.serve(ByTagsReq(query, Seq("dc")))
+      assert(served.tier == "local-rollup-tags", served.tier)
+      assert(served.result.isLeft, "driver tier must answer on the driver")
+      assert(served.rows.map(_.toString).toSeq == sparkPath)
       // collapse-all through the same tier
-      val allServed = eng.queryByTagsServingDF(query, Nil)
-      assert(eng.lastServePath == "local-rollup-tags")
-      assert(rows(allServed) == rows(eng.queryByTags(query, Nil)))
+      val allServed = servedBy("local-rollup-tags")(eng.serve(ByTagsReq(query, Nil)))
+      assert(allServed.map(_.toString).toSeq == rows(eng.queryByTags(query, Nil)))
       // ineligible shape (misaligned end) falls to Spark
-      eng.queryByTagsServingDF(query.copy(endNs = Some(2 * Hr)), Seq("dc")).collect()
-      assert(eng.lastServePath == "spark")
+      servedBy("spark")(eng.serve(ByTagsReq(query.copy(endNs = Some(2 * Hr)), Seq("dc"))))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
@@ -1197,25 +1142,23 @@ class RollupSpec extends SparkSpec {
           dp("a", "u2", i, i + 1.0), dp("b", "u2", i + 3, 720.0 - 2 * i))
       })
       val (s0, e0) = (0L, 6 * Hr - 1)
-      def corr() = eng.analyze(
+      def corr() = eng.analyzeRouted(
         QueryParams("a", startNs = s0, endNs = Some(e0)),
         AnalyzeCorrelate("value", "b", "user", Hr, 3))
-      def ratio() = eng.analyze(
+      def ratio() = eng.analyzeRouted(
         QueryParams("a", startNs = s0, endNs = Some(e0)),
         AnalyzeRatio("value", "b", "user", Hr))
-      val truthC = corr().collect().toSeq
-      val truthR = ratio().collect().toSeq
+      val truthC = analyzeOn("analyze-raw")(corr()).toSeq
+      val truthR = analyzeOn("analyze-raw")(ratio()).toSeq
       assert(truthC.nonEmpty && truthR.nonEmpty)
-      assert(eng.lastServePath != "rollup-correlate")
 
       eng.registerRollup("a", Min, Seq("value"))
       // only ONE side covered → still the point path
-      corr().collect()
-      assert(eng.lastServePath != "rollup-correlate")
+      analyzeOn("analyze-raw")(corr())
       eng.registerRollup("b", Min, Seq("value"))
 
-      val routedC = corr()
-      assert(eng.lastServePath == "rollup-correlate")
+      val (routedC, routeC) = corr()
+      assert(routeC == "rollup-correlate", routeC)
       val planC = routedC.queryExecution.executedPlan.toString
       assert(planC.contains("value__sum"),
         s"expected rollup partial columns in plan:\n$planC")
@@ -1229,9 +1172,8 @@ class RollupSpec extends SparkSpec {
           s"r mismatch: $r1 vs $r2") // decomposed avg re-associates the sum
       }
 
-      val routedR = ratio()
-      assert(eng.lastServePath == "rollup-ratio")
-      val gotR = routedR.collect().toSeq
+      val routedR = analyzeOn("rollup-ratio")(ratio())
+      val gotR = routedR.toSeq
       assert(gotR.size == truthR.size)
       truthR.zip(gotR).foreach { case (t, g) =>
         assert(t.getAs[String]("tag_value") == g.getAs[String]("tag_value") &&
@@ -1243,14 +1185,13 @@ class RollupSpec extends SparkSpec {
       }
 
       // misaligned bucket (not a multiple of the rollup grain) → point path
-      eng.analyze(QueryParams("a", startNs = s0, endNs = Some(e0)),
-        AnalyzeCorrelate("value", "b", "user", Min + 1, 3)).collect()
-      assert(eng.lastServePath != "rollup-correlate")
+      analyzeOn("analyze-raw")(eng.analyzeRouted(
+        QueryParams("a", startNs = s0, endNs = Some(e0)),
+        AnalyzeCorrelate("value", "b", "user", Min + 1, 3)))
       // new data on metric B invalidates the routed answer
-      val before = corr().collect().toSeq
+      val before = analyzeOn("rollup-correlate")(corr()).toSeq
       eng.putBatch(Seq(dp("b", "u1", 30, 1e6)))
-      assert(corr().collect().toSeq != before)
-      assert(eng.lastServePath == "rollup-correlate")
+      assert(analyzeOn("rollup-correlate")(corr()).toSeq != before)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
@@ -1502,8 +1443,7 @@ class RollupSpec extends SparkSpec {
       aggs = Seq(AggSpec("sum", "value"), AggSpec("count", "*"),
         AggSpec("min", "value"), AggSpec("max", "value")))
     val ewmaBy = AnalyzeEwmaBy("value", 0.25, 12 * Hr)
-    eng.analyze(q.copy(downsampleNs = None, aggs = Nil), ewmaBy).collect()
-    assert(eng.lastServePath == "rollup-ewma", eng.lastServePath)
+    analyzeOn("rollup-ewma")(eng.analyzeRouted(q.copy(downsampleNs = None, aggs = Nil), ewmaBy))
     // drop days 1-5 as metadata (cutoff = day 6.5)
     eng.retentionPeriodNs = Some(Math.round(3.5 * Day))
     assert(eng.enforceRetention(nowNs = Some(10 * Day)) == Right(5))
@@ -1513,13 +1453,11 @@ class RollupSpec extends SparkSpec {
     val rawDs = raw.query(q).collect()
     assert(canon(routedDs) == canon(rawDs) && rawDs.nonEmpty,
       "routed downsample must equal raw after the partition drop")
-    val routedE = eng.analyze(q.copy(downsampleNs = None, aggs = Nil), ewmaBy)
-      .collect()
-    assert(eng.lastServePath == "rollup-ewma",
-      s"the smoothing route must still serve: ${eng.lastServePath}")
-    val rawE = raw.analyze(q.copy(downsampleNs = None, aggs = Nil), ewmaBy)
-      .collect()
-    assert(raw.lastServePath == "analyze-raw", raw.lastServePath)
+    // the smoothing route must still serve
+    val routedE = analyzeOn("rollup-ewma")(
+      eng.analyzeRouted(q.copy(downsampleNs = None, aggs = Nil), ewmaBy))
+    val rawE = analyzeOn("analyze-raw")(
+      raw.analyzeRouted(q.copy(downsampleNs = None, aggs = Nil), ewmaBy))
     assert(canon(routedE) == canon(rawE) && rawE.nonEmpty,
       "stored EWMA folds must restart from the post-drop first sample")
   }

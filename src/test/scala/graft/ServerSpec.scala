@@ -76,8 +76,10 @@ class ServerSpec extends SparkSpec {
       assert(post(port, """PUSH m TAGGED (h="a") SET (v=1.0) AT 100""").statusCode() == 200)
       assert(post(port, """PUSH m TAGGED (h="a") SET (v=2.0) AT 100""").statusCode() == 200)
       assert(ex.engine.compact().isRight)
-      ex.engine.queryCached(graft.tsdb.QueryParams("m", startNs = 0L, endNs = Some(1000L)))
-      ex.engine.queryCached(graft.tsdb.QueryParams("m", startNs = 0L, endNs = Some(1000L)))
+      ex.engine.serve(graft.tsdb.PointReq(
+        graft.tsdb.QueryParams("m", startNs = 0L, endNs = Some(1000L))))
+      ex.engine.serve(graft.tsdb.PointReq(
+        graft.tsdb.QueryParams("m", startNs = 0L, endNs = Some(1000L))))
 
       val m = get("/metrics")
       assert(m.statusCode() == 200)
@@ -559,6 +561,67 @@ class ServerSpec extends SparkSpec {
         val all = c.queryAllPages("QUERY m FROM 0 TO 1000 LIMIT 3")
         assert(all.map(_.timestamp) == (1 to 7).map(_ * 100L))
       } finally c.close()
+    }
+  }
+
+  test("client: driver-rollup tier answers stream over TCP, value-identical to in process") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tcp_tier").toString
+    val ex = new NbqlExecutor(new TsdbEngine(spark, s"$dir/db"))
+    val srv = new GraftTcpServer(ex, port = 0)
+    srv.start()
+    val c = NbqlClient.connect("127.0.0.1", srv.boundPort)
+    try {
+      val Min = 60L * 1000000000L
+      assert(c.pushBulk(for (i <- 0 until 120; (h, dc) <- Seq("a" -> "east", "b" -> "west"))
+        yield ("cpu", Map("host" -> h, "dc" -> dc), i * Min,
+          Map("value" -> FieldValue.ofDouble(i * 2.0 + (if (h == "a") 0 else 1))))) == 240L)
+      assert(ex.execute("CREATE ROLLUP cpu BY 1m (value)").isRight)
+      val range = s"FROM 0 TO ${120 * Min - 1}"
+      val keys = Set("metric", "tags", "series_key", "window_start",
+        "window_end", "timestamp")
+      // (metric, window, numeric values) of each row in process, read by
+      // position: the driver tiers' rows carry no schema
+      def inProcess(q: String): (String, Seq[(String, Long, Map[String, Double])]) =
+        ex.execute(q) match {
+          case Right(r: ex.Rows @unchecked) =>
+            val names = r.schema.fieldNames
+            val iW = names.indexOf("window_start")
+            val nums = r.schema.fields.indices.filter(i => !keys(names(i)) &&
+              r.schema(i).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+            (r.tier, r.rowIterator().map { row =>
+              (row.getString(names.indexOf("metric")), if (iW < 0) 0L else row.getLong(iW),
+                nums.filterNot(row.isNullAt).map(i =>
+                  names(i) -> row.get(i).asInstanceOf[Number].doubleValue).toMap)
+            }.toSeq)
+          case other => fail(s"$other")
+        }
+      Seq(
+        s"QUERY cpu $range AGGREGATE BY 10m (sum(value), count(*))" -> "local-rollup",
+        s"QUERY cpu $range ANALYZE DELTA(value)" -> "local-rollup-delta",
+        s"QUERY cpu $range ANALYZE RATE(value) BY 10m" -> "local-rollup-rate-by",
+        s"QUERY cpu $range AGGREGATE BY 10m (sum(value)) GROUP BY TAGS (dc)" ->
+          "local-rollup-tags"
+      ).foreach { case (q, tier) =>
+        val (servedBy, want) = inProcess(q)
+        assert(servedBy == tier, s"$q: $servedBy")
+        // windowed rows ride the aggregate slots, one-row-per-series
+        // analytics ride as field values
+        val got = c.query(q).rows.map { p =>
+          if (p.isAggregated) (p.metric, p.windowStart, p.aggregated.toMap)
+          else (p.fields("metric").s.get, 0L, p.fields.collect {
+            case (k, v) if !keys(k) && (v.d.isDefined || v.l.isDefined) =>
+              k -> v.d.getOrElse(v.l.get.toDouble)
+          })
+        }
+        assert(want.nonEmpty && got == want, q)
+      }
+      // a LIMIT-full page from that tier carries its resume cursor
+      val page = c.query(s"QUERY cpu $range AGGREGATE BY 10m (sum(value)) LIMIT 3")
+      assert(page.rows.size == 3 && page.hasMore)
+    } finally {
+      c.close()
+      srv.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 

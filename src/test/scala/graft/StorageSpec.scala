@@ -415,9 +415,9 @@ class StorageSpec extends SparkSpec {
       (0 until 3).foreach(i =>
         assert(e.putBatch(Seq(pt("m", s"h$i", i * 1000L, i.toDouble))).isRight))
       // build Spark-resident serving state: a serving view + a rollup
-      e.queryCached(QueryParams("m", startNs = 0L, endNs = Some(1L << 40)))
+      e.serve(PointReq(QueryParams("m", startNs = 0L, endNs = Some(1L << 40))))
       e.registerRollup("m", 3600000000000L, Seq("value"))
-      e.queryRouted(QueryParams("m", startNs = 0L, endNs = Some(1L << 40),
+      e.queryServing(QueryParams("m", startNs = 0L, endNs = Some(1L << 40),
         downsampleNs = Some(3600000000000L),
         aggs = Seq(AggSpec("sum", "value")))).collect()
       e.close()

@@ -100,18 +100,18 @@ class QueryCacheSpec extends SparkSpec {
         DataPoint("m", Map("a" -> "1", "b" -> "2"), 200L, Map("v" -> FieldValue.ofDouble(2.0)))))
       val q1 = QueryParams("m", Map("a" -> "1", "b" -> "2"), endNs = Some(1000))
       val q2 = QueryParams("m", Map("b" -> "2", "a" -> "1"), endNs = Some(1000)) // same, reordered
-      assert(eng.queryCached(q1).length == 2)
+      assert(eng.serve(PointReq(q1)).rows.length == 2)
       val (h0, m0) = eng.cacheStats
-      assert(eng.queryCached(q2).length == 2) // canonical key → hit
+      assert(eng.serve(PointReq(q2)).rows.length == 2) // canonical key → hit
       val (h1, _) = eng.cacheStats
       assert(h1 == h0 + 1, s"expected a cache hit, stats=${eng.cacheStats}")
       // mutation bumps the epoch → stale entry dropped, fresh data served
       eng.putBatch(Seq(
         DataPoint("m", Map("a" -> "1", "b" -> "2"), 300L, Map("v" -> FieldValue.ofDouble(3.0)))))
-      assert(eng.queryCached(q1).length == 3)
+      assert(eng.serve(PointReq(q1)).rows.length == 3)
       // un-pinned RELATIVE queries are never cached
       val rel = QueryParams("m", relativeNs = Some(1000L))
-      eng.queryCached(rel); eng.queryCached(rel)
+      eng.serve(PointReq(rel)); eng.serve(PointReq(rel))
       val (h2, _) = eng.cacheStats
       assert(h2 == h1, "relative query without pinned now must bypass the cache")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

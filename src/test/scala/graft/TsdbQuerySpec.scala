@@ -470,12 +470,12 @@ class TsdbQuerySpec extends SparkSpec {
     try {
       eng.putDF(pts)
       val p = QueryParams("web.*", endNs = Some(1000))
-      assert(eng.queryCached(p).map(_.toString).toSeq ==
+      val served = eng.serve(PointReq(p))
+      assert(served.rows.map(_.toString).toSeq ==
         eng.query(p).collect().map(_.toString).toSeq)
-      assert(eng.lastServePath == "spark", eng.lastServePath)
+      assert(served.tier == "spark", served.tier)
       // and twice: never a cache hit (no per-metric epoch to invalidate it)
-      eng.queryCached(p)
-      assert(eng.lastServePath == "spark")
+      assert(eng.serve(PointReq(p)).tier == "spark")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
@@ -636,11 +636,11 @@ class TsdbQuerySpec extends SparkSpec {
     same(QueryParams("cpu.usage", endNs = Some(1000 * M),
       afterKey = Some(Cursor(100 * M, "cpu.usage"))))
 
-    // queryCached misses execute UNORDERED and sort driver-side — the
+    // serving-tier misses execute UNORDERED and sort driver-side — the
     // returned row order must still equal the Spark-side global sort
     def sameOrdered(p: QueryParams): Unit = {
       val a = eng.query(p).collect().map(_.toString).toSeq
-      val b = eng.queryCached(p).map(_.toString).toSeq
+      val b = eng.serve(PointReq(p)).rows.map(_.toString).toSeq
       assert(a == b, s"presentation-order mismatch for $p")
     }
     sameOrdered(QueryParams("cpu.usage", endNs = Some(1000 * M)))
@@ -740,34 +740,45 @@ class TsdbQuerySpec extends SparkSpec {
     val p = QueryParams("cpu.usage", endNs = Some(1000 * M))
     val full = eng.query(p).collect().map(_.toString).toSeq
     assert(full.length == 50)
+    val ex = new graft.nbql.NbqlExecutor(eng)
+    def rowsOf(nbql: String): ex.Rows = ex.execute(nbql) match {
+      case Right(r: ex.Rows @unchecked) => r
+      case other => fail(s"$other")
+    }
+    val text = s"QUERY cpu.usage FROM 0 TO ${1000 * M}"
 
-    // over budget: truncated flag set, rows are EXACTLY the first page of
-    // the full presentation order, never a 50-row driver materialization
-    val (page, truncated) = eng.queryCachedCapped(p)
+    // over budget: the serving entry never collects the 50 rows on the
+    // driver — it hands back the ordered plan to stream
+    val over = eng.serve(PointReq(p))
+    assert(over.result.isRight && over.tier == "spark", over.tier)
+    // the buffered protocol path pages it: EXACTLY the first page of the
+    // full presentation order, with the truncation flag and a cursor
+    val (page, next, truncated) = rowsOf(text).pageBudgeted(eng.servingRowBudget)
     assert(truncated, "50 rows over a 10-row budget must report truncation")
-    assert(page.length == 10)
     assert(page.map(_.toString).toSeq == full.take(10))
-
     // the cursor continues from the truncation point (W3 pages the rest)
-    val last = page.last
-    val cur = Cursor(last.getAs[Long]("timestamp"), last.getAs[String]("series_key"))
-    val (page2, _) = eng.queryCachedCapped(p.copy(afterKey = Some(cur)))
+    assert(next.nonEmpty, "a budget-cut page must carry a resume cursor")
+    val (page2, _, _) = rowsOf(s"$text AFTER ${next.get}")
+      .pageBudgeted(eng.servingRowBudget)
     assert(page2.map(_.toString).toSeq == full.slice(10, 20))
 
-    // truncated results were NOT cached: a raised budget serves the full set
+    // over-budget results were NOT cached: a raised budget serves the
+    // full set from the Spark tier, then the cache
     eng.servingRowBudget = 2000000L
-    val (all, t2) = eng.queryCachedCapped(p)
-    assert(!t2 && all.map(_.toString).toSeq == full)
+    val all = eng.serve(PointReq(p))
+    assert(all.tier == "spark" && all.result.isLeft &&
+      all.rows.map(_.toString).toSeq == full)
+    assert(eng.serve(PointReq(p)).tier == "cache")
 
     // an explicit LIMIT stays caller-controlled (bounded via TakeOrdered)
     eng.servingRowBudget = 10
-    val (lim, t3) = eng.queryCachedCapped(p.copy(limit = Some(20L)))
-    assert(!t3 && lim.length == 20 && lim.map(_.toString).toSeq == full.take(20))
+    val lim = eng.serve(PointReq(p.copy(limit = Some(20L))))
+    assert(lim.result.isLeft && lim.rows.map(_.toString).toSeq == full.take(20))
 
-    // aggregates stay un-truncated (tiny by construction)
-    val (agg, t4) = eng.queryCachedCapped(p.copy(
-      aggs = Seq(AggSpec("count", "*"), AggSpec("sum", "value"))))
-    assert(!t4 && agg.length == 1)
+    // aggregates stay on the driver (tiny by construction)
+    val agg = eng.serve(PointReq(p.copy(
+      aggs = Seq(AggSpec("count", "*"), AggSpec("sum", "value")))))
+    assert(agg.result.isLeft && agg.rows.length == 1)
   }
 
   test("driver tier orders supplementary-plane series keys like Spark") {
@@ -788,17 +799,17 @@ class TsdbQuerySpec extends SparkSpec {
     def keys(rs: Seq[Row]): Seq[String] =
       rs.map(_.getAs[String]("series_key"))
     val sparkOrder = keys(eng.query(p).collect().toSeq)
-    val localOrder = keys(eng.queryCached(p).toSeq)
+    val localOrder = keys(eng.serve(PointReq(p)).rows.toSeq)
     assert(localOrder == sparkOrder,
       s"local tier order $localOrder != spark order $sparkOrder")
     // keyset pagination agrees across the seam too: page 1 from the
     // local tier, page 2 computed by BOTH paths from its cursor
-    val first = eng.queryCached(p.copy(limit = Some(1))).head
+    val first = eng.serve(PointReq(p.copy(limit = Some(1)))).rows.head
     val cur = Cursor(first.getAs[Long]("timestamp"),
       first.getAs[String]("series_key"))
-    val localPage = keys(eng.queryCached(p.copy(afterKey = Some(cur))).toSeq)
+    val localPage = keys(eng.serve(PointReq(p.copy(afterKey = Some(cur)))).rows.toSeq)
     eng.localServingMaxRows = 0 // force the Spark serving path
-    val sparkPage = keys(eng.queryCached(p.copy(afterKey = Some(cur))).toSeq)
+    val sparkPage = keys(eng.serve(PointReq(p.copy(afterKey = Some(cur)))).rows.toSeq)
     assert(localPage == sparkPage, s"$localPage != $sparkPage")
     assert(localPage.size == 2 && !localPage.contains(cur.seriesKey))
   }

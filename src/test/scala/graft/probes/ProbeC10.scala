@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Throwaway: decompose the c10 wire-path gap (VERDICT r12 agenda #3).
   * Ladder, same query shapes as Bench's qps_cold_c10:
-  *   1. engine.queryCached direct            (driver tier, no wire)
+  *   1. engine.serve direct                  (driver tier, no wire)
   *   2. executor.run + row drain             (+ NBQL parse/dispatch)
   *   3. one wire client, serial              (+ framing + TCP round-trip)
   *   4. 10 wire clients, 10 threads          (+ concurrency)
@@ -44,9 +44,9 @@ object ProbeC10 {
       println(f"$name%-28s ${el / n * 1e6}%9.1f us/query ${n / el}%9.0f qps")
     }
     // row-count sanity: how many rows does one of these queries stream?
-    println(s"rows/query ~ ${engine.queryCached(params(0)).length}")
+    println(s"rows/query ~ ${engine.serve(graft.tsdb.PointReq(params(0))).rows.length}")
 
-    timeIt("engine.queryCached", 3000)(i => { engine.queryCached(params(i)); () })
+    timeIt("engine.serve", 3000)(i => { engine.serve(graft.tsdb.PointReq(params(i))); () })
     val ex = new graft.nbql.NbqlExecutor(engine)
     timeIt("nbql parse only", 2000) { i =>
       graft.nbql.NbqlParser.parse(qText(i)).fold(sys.error, identity); ()

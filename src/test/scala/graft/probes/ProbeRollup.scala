@@ -37,48 +37,48 @@ object ProbeRollup {
       // incremental-maintenance cost: full build vs one-day rebuild
       engine.registerRollup("purchase", DayNs, Seq("value"))
       var t0 = System.nanoTime()
-      engine.queryCached(dq(55)) // full materialization
+      engine.serve(graft.tsdb.PointReq(dq(55))).rows // full materialization
       println(f"full build+first query: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       t0 = System.nanoTime()
-      engine.queryCached(dq(56))
+      engine.serve(graft.tsdb.PointReq(dq(56))).rows
       println(f"routed steady read: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       // one-day append → only that date partition rebuilds
       engine.putBatch(Seq(graft.model.DataPoint("purchase", Map("user" -> "7"),
         1704067200000000000L + 5 * DayNs + 1234L,
         Map("value" -> graft.model.FieldValue(d = Some(42.0))))))
       t0 = System.nanoTime()
-      engine.queryCached(dq(57)) // incremental rebuild + query
+      engine.serve(graft.tsdb.PointReq(dq(57))).rows // incremental rebuild + query
       println(f"one-day incremental rebuild+query: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       t0 = System.nanoTime()
-      engine.queryCached(dq(58))
+      engine.serve(graft.tsdb.PointReq(dq(58))).rows
       println(f"routed steady read after incr: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       spark.stop()
       return
     }
-    engine.queryCached(dq(55))
+    engine.serve(graft.tsdb.PointReq(dq(55))).rows
     // measure raw steady state WITHOUT a rollup registered, then register
     // and interleave: distinct params per call so the result cache never
     // answers (triples (i%3, i%2, i%5) distinct per 10-window)
     var rawNs = 0L; var routedNs = 0L
-    (0 until 10).foreach(i => time(s"raw $i")(engine.queryCached(dq(i))))
+    (0 until 10).foreach(i => time(s"raw $i")(engine.serve(graft.tsdb.PointReq(dq(i))).rows))
     engine.registerRollup("purchase", DayNs, Seq("value"))
-    time("rollup build")(engine.queryCached(dq(56)))
+    time("rollup build")(engine.serve(graft.tsdb.PointReq(dq(56))).rows)
     (0 until 10).foreach { k =>
       val t0 = System.nanoTime()
-      engine.queryCached(dq(100 + k))
+      engine.serve(graft.tsdb.PointReq(dq(100 + k))).rows
       routedNs += System.nanoTime() - t0
     }
     engine.dropRollup("purchase")
     (0 until 10).foreach { k =>
       val t0 = System.nanoTime()
-      engine.queryCached(dq(200 + k))
+      engine.serve(graft.tsdb.PointReq(dq(200 + k))).rows
       rawNs += System.nanoTime() - t0
     }
     println(f"steady raw: ${rawNs / 10 / 1e9}%.3f s/q   routed: ${routedNs / 10 / 1e9}%.3f s/q")
 
     // dissect: plan construction vs execution on both paths
     engine.registerRollup("purchase", DayNs, Seq("value"))
-    engine.queryCached(dq(57)) // rebuild materialization (dropRollup wiped it)
+    engine.serve(graft.tsdb.PointReq(dq(57))).rows // rebuild materialization (dropRollup wiped it)
     (0 until 3).foreach { k =>
       val i = 300 + k
       var t0 = System.nanoTime()
@@ -95,7 +95,7 @@ object ProbeRollup {
       val n2 = raw.limit(2000001).collect().length
       val tExecW = (System.nanoTime() - t0) / 1e9
       engine.registerRollup("purchase", DayNs, Seq("value"))
-      engine.queryCached(dq(58 + k)) // re-materialize, excluded
+      engine.serve(graft.tsdb.PointReq(dq(58 + k))).rows // re-materialize, excluded
       println(f"dissect $k: routed plan $tPlanR%.3f exec $tExecR%.3f ($n1 rows)  " +
         f"raw plan $tPlanW%.3f exec $tExecW%.3f ($n2 rows)")
       if (k == 2) {

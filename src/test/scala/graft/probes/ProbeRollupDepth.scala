@@ -50,13 +50,16 @@ object ProbeRollupDepth {
         val end = days * Day - 1
         val q = QueryParams("deep", startNs = 0L, endNs = Some(end))
         val spec = AnalyzeEwmaBy("value", 0.25, Hr)
+        var tier = "" // the route of the last timed read
         def timedAnalyze(): Double = {
           val t0 = System.nanoTime()
-          eng.analyze(q, spec).noop()
+          val (df, route) = eng.analyzeRouted(q, spec)
+          df.noop()
+          tier = route
           (System.nanoTime() - t0) / 1e9
         }
         val buildS = timedAnalyze() // initial FULL build + serve
-        assert(eng.lastServePath == "rollup-ewma", eng.lastServePath)
+        assert(tier == "rollup-ewma", tier)
         // steady-state routed read, nothing to maintain
         val warmS = timedAnalyze()
         // ONE tail-day point per iteration -> suffix-incremental rebuild
@@ -66,7 +69,7 @@ object ProbeRollupDepth {
             Map("value" -> FieldValue.ofDouble(1.0)))).fold(sys.error, identity)
           timedAnalyze()
         }.sorted.apply(1)
-        assert(eng.lastServePath == "rollup-ewma", eng.lastServePath)
+        assert(tier == "rollup-ewma", tier)
         // forced full rebuild of the identical tree (marker removed)
         java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
           s"$tmp/db$days/_rollup/metric=deep/_built.json"))

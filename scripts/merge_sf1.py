@@ -17,21 +17,14 @@ import sys
 chunks_dir, serving_path, out_path = sys.argv[1], sys.argv[2], sys.argv[3]
 
 queries, runs, errors = {}, {}, {}
-count_mode = {}
 for f in sorted(glob.glob(f"{chunks_dir}/chunk_*.json")):
     d = json.load(open(f))
     queries.update(d["queries"])
     runs.update(d["runs"])
     errors.update(d.get("errors", {}))
-    # later chunks supersede earlier ones (re-measurements), so totals
-    # must come from the MERGED map, not a per-chunk sum; count-mode
-    # totals are only attributable per chunk, keep the superseding
-    # chunk's share by scaling its chunk total across its queries
-    share = d.get("total_count_mode", 0.0) / max(1, len(d["queries"]))
-    for q in d["queries"]:
-        count_mode[q] = share
+# later chunks supersede earlier ones (re-measurements), so totals must
+# come from the MERGED map, not a per-chunk sum
 total = sum(queries.values())
-total_count = sum(count_mode.values())
 
 serving = json.load(open(serving_path))
 lat = sorted(queries.values())
@@ -45,7 +38,6 @@ out = dict(serving)  # serving/ingest keys + serving_runs from the qps run
 out.update({
     "metric": "total", "value": total, "unit": "sec",
     "queries": queries, "runs": runs, "passes": 3,
-    "total_count_mode": total_count,
     "p50": pct(0.5), "p90": pct(0.9), "p99": pct(0.99),
     "n_errors": len(errors), "errors": errors,
     "n_queries": len(queries), "sf": "/tmp/sf1",

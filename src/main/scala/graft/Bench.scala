@@ -119,8 +119,8 @@ object Bench {
     // ------------------------------------------------------------------
     val servingRuns =
       scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    // key -> median qps of the loop (the JSON's named serving metrics
-    // read from this map — a missing key reports 0.0, like skipServing)
+    // key -> median qps of the loop; every entry is a top-level key of
+    // the JSON line (a loop that failed or was skipped has none)
     val servingMedians =
       scala.collection.mutable.LinkedHashMap[String, Double]()
     /** Median-of-3-passes throughput: each pass runs `n` iterations of
@@ -618,73 +618,29 @@ object Bench {
     val byQuery: Seq[(String, Seq[Double])] =
       qs.map { case (name, _) => name -> samples.map(_.toMap.apply(name)) }
     val results = byQuery.map { case (name, ts) => name -> median(ts) }
-    // count()-mode pass: Catalyst prunes result projections, so this
-    // UNDERSTATES serving cost — reported only for apples-to-apples
-    // comparison with rounds benched before the materialization fix.
-    val resultsCount = qs.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      run(name, { fn(spark, sfDir).count(); () })
-      name -> (System.nanoTime() - t0) / 1e9
-    }
     val lat = results.map(_._2).sorted
     def pct(p: Double): Double =
       if (lat.isEmpty) 0.0 else lat(math.min(lat.size - 1, (p * lat.size).toInt))
-    val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    // a JSON object with one `"k":v` member per entry, rendered by `v`
+    def obj[V](kvs: Iterable[(String, V)])(v: V => Any): String =
+      kvs.map { case (k, x) => "\"" + k + "\":" + v(x) }.mkString("{", ",", "}")
+    val qjson = obj(results)(identity)
     // per-query MIN alongside the median: on a host with documented
     // same-day 1.9x upper-quartile drift (SCALE.md r14), the min is the
     // more code-faithful statistic for cross-round comparisons — the
     // r14 ANN-family "regression" was medians-of-3 inflated by host
     // noise while every pass minimum sat at the prior round's level
-    val qminJson = byQuery.map { case (k, ts) => "\"" + k + "\":" + ts.min }
-      .mkString("{", ",", "}")
-    val runsJson = byQuery.map { case (k, ts) =>
-      "\"" + k + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    val qminJson = obj(byQuery)(_.min)
+    val runsJson = obj(byQuery)(_.mkString("[", ",", "]"))
     val total = results.map(_._2).sum
-    val totalCount = resultsCount.map(_._2).sum
-
-    def sm(k: String): Double = servingMedians.getOrElse(k, 0.0)
-    val servingRunsJson = servingRuns.map { case (k, ts) =>
-      "\"" + k + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,""" +
       s""""queries_min":$qminJson,""" +
       s""""runs":$runsJson,"passes":$nPasses,""" +
-      s""""total_count_mode":$totalCount,""" +
       s""""p50":${pct(0.5)},"p90":${pct(0.9)},"p99":${pct(0.99)},""" +
-      s""""ingest_rows_per_sec":${sm("ingest_rows_per_sec")},""" +
+      servingMedians.map { case (k, v) => s""""$k":$v,""" }.mkString +
       s""""ingest_stream_rows_per_sec":$ingestStreamRps,""" +
-      s""""query_qps_cold":${sm("query_qps_cold")},""" +
-      s""""query_qps_cached":${sm("query_qps_cached")},""" +
-      s""""qps_downsample_raw":${sm("qps_downsample_raw")},""" +
-      s""""qps_downsample_rollup":${sm("qps_downsample_rollup")},""" +
-      s""""qps_groupby_raw":${sm("qps_groupby_raw")},""" +
-      s""""qps_groupby_rollup":${sm("qps_groupby_rollup")},""" +
-      s""""qps_analyze_cold":${sm("qps_analyze_cold")},""" +
-      s""""qps_analyze_cached":${sm("qps_analyze_cached")},""" +
-      s""""qps_correlate_raw":${sm("qps_correlate_raw")},""" +
-      s""""qps_correlate_rollup":${sm("qps_correlate_rollup")},""" +
-      s""""qps_delta_raw":${sm("qps_delta_raw")},""" +
-      s""""qps_delta_rollup":${sm("qps_delta_rollup")},""" +
-      s""""qps_delta_by_raw":${sm("qps_delta_by_raw")},""" +
-      s""""qps_delta_by_rollup":${sm("qps_delta_by_rollup")},""" +
-      s""""qps_twa_raw":${sm("qps_twa_raw")},""" +
-      s""""qps_twa_rollup":${sm("qps_twa_rollup")},""" +
-      s""""qps_delta_local":${sm("qps_delta_local")},""" +
-      s""""qps_irate_local":${sm("qps_irate_local")},""" +
-      s""""qps_resets_raw":${sm("qps_resets_raw")},""" +
-      s""""qps_resets_rollup":${sm("qps_resets_rollup")},""" +
-      s""""qps_resets_by_local":${sm("qps_resets_by_local")},""" +
-      s""""qps_ewma_by_raw":${sm("qps_ewma_by_raw")},""" +
-      s""""qps_ewma_by_rollup":${sm("qps_ewma_by_rollup")},""" +
-      s""""qps_ewma_local":${sm("qps_ewma_local")},""" +
-      s""""qps_cold_c10":${sm("qps_cold_c10")},""" +
-      s""""ingest_rows_per_sec_c10":${sm("ingest_rows_per_sec_c10")},""" +
-      s""""serving_runs":$servingRunsJson,""" +
+      s""""serving_runs":${obj(servingRuns)(_.mkString("[", ",", "]"))},""" +
       // host-drift sentinel (start/middle/end): normalize cross-round
       // absolutes by the ratio of sentinel MEDIANS before judging a
       // regression; a spread within one run flags an intra-run phase
@@ -696,7 +652,7 @@ object Bench {
       s""""notes":{"qps_analyze_cached":"repeats ANALYZE DELTA """ +
       s"""(bounded-output shape) since r10; r4-r9 repeated ANALYZE RATE, """ +
       s"""which silently exceeds the result-cache row cap at sf>=1"},""" +
-      s""""n_errors":${errors.size},"errors":$errJson,""" +
+      s""""n_errors":${errors.size},"errors":${obj(errors)("\"" + _ + "\"")},""" +
       s""""n_queries":${results.size},"sf":"$sfDir"}"""
     println(line)
     // The driver archives only a short tail of stdout per round, which

@@ -110,7 +110,8 @@ final class GraftHttpServer(executor: NbqlExecutor, port: Int = 0,
     * (`server/metric_server.go:41`, expvar under `/metrics`). Engine
     * figures come from the live components (commit-log version, WAF
     * accounting via the default PostCompaction listener, result-cache
-    * hit/miss, hook post-listener errors); the `memstats` block is the
+    * hit/miss, hook post-listener errors, maintenance decision counts);
+    * the `memstats` block is the
     * JVM analog of Go's runtime.MemStats that `ui/memstats.html` charts. */
   private def handleMetrics(ex: HttpExchange): Unit = {
     if (ex.getRequestMethod != "GET") return err(ex, 405, "Only GET is allowed")
@@ -131,7 +132,7 @@ final class GraftHttpServer(executor: NbqlExecutor, port: Int = 0,
     // plus a checkpoint lookup, and /metrics is scraped continuously
     val (lastCkpt, logManifests) = eng.logStats
     reply(ex, 200, JObject(
-      "engine" -> JObject(
+      "engine" -> JObject(List[JField](
         "version" -> JLong(eng.version),
         "data_files" -> JLong(dataFiles.toLong),
         "l0_files" -> JLong(l0Files.toLong),
@@ -145,7 +146,8 @@ final class GraftHttpServer(executor: NbqlExecutor, port: Int = 0,
         "compaction_waf" -> JDouble(cs.waf),
         "query_cache_hits" -> JLong(hits),
         "query_cache_misses" -> JLong(misses),
-        "hook_errors" -> JLong(eng.hooks.errorCount)),
+        "hook_errors" -> JLong(eng.hooks.errorCount)) ++
+        eng.maintenanceCounts.map { case (k, n) => JField(k, JLong(n)) }),
       "memstats" -> JObject(
         "heap_used" -> JLong(heap.getUsed),
         "heap_committed" -> JLong(heap.getCommitted),

@@ -1,31 +1,18 @@
 package graft.tsdb
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.StructType
-
-/** Query-result cache with the reference's canonical key semantics
-  * (`api/nbql/cache_key.go:17-60`): tags sorted, RELATIVE ranges keyed by
-  * duration (not resolved instants) so repeating relative queries hit,
-  * while absolute ranges key on exact bounds. Entries are invalidated by
-  * write epoch — any put/delete bumps the engine epoch and orphans every
-  * older entry (the reference invalidates on flush; epoch is stricter and
-  * race-free).
+/** Canonical keys of the query-result cache ([[Derived]]), with the
+  * reference's key semantics (`api/nbql/cache_key.go:17-60`): tags
+  * sorted, RELATIVE ranges keyed by duration (not resolved instants) so
+  * repeating relative queries hit, while absolute ranges key on exact
+  * bounds. Entries are invalidated by write epoch — any put/delete bumps
+  * the metric's epoch and orphans every older entry (the reference
+  * invalidates on flush; epoch is stricter and race-free).
   *
-  * Driver-side LRU over COLLECTED results, capped per entry: this caches
-  * serving-layer answers (the reference's use case — dashboards repeating
-  * the same NBQL), never intermediate distributed state, so it adds no
-  * executor memory pressure at scale. */
-final class QueryCache(capacity: Int = 256, maxRowsPerEntry: Int = 100000) {
-
-  final case class Entry(epoch: Long, rows: Array[Row], schema: StructType)
-
-  private val lru = new java.util.LinkedHashMap[String, Entry](capacity, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
-      size() > capacity
-  }
-
-  private var hitCount = 0L
-  private var missCount = 0L
+  * The cache is a driver-side LRU over COLLECTED results, capped per
+  * entry: it caches serving-layer answers (the reference's use case —
+  * dashboards repeating the same NBQL), never intermediate distributed
+  * state, so it adds no executor memory pressure at scale. */
+object QueryCache {
 
   /** Percent-escape a user-controlled name so the structural separators
     * below ('|', ',', '=', parens, the filter ops) can never be forged
@@ -60,64 +47,20 @@ final class QueryCache(capacity: Int = 256, maxRowsPerEntry: Int = 100000) {
 
   /** Canonical key for an ANALYZE query: the point-query key (TAGGED/
     * range/FILTER/LIMIT compose with ANALYZE and must distinguish
-    * entries) extended with the analytic's own parameters and the split
-    * width. Every user-chosen name rides [[esc]] — an ANALYZE entry may
+    * entries) extended with the analytic's case-class name and every
+    * parameter, and the split width. Every user-chosen name rides [[esc]]
+    * (so raw commas only ever separate parameters) — an ANALYZE entry may
     * never collide with its plain-QUERY twin (the `|ANALYZE|` segment
     * separates the namespaces) or with a differently-parameterized
     * analytic. */
   def analyzeKeyOf(p: QueryParams, spec: AnalyzeSpec,
       splitNs: Option[Long]): String = {
-    val specKey = spec match {
-      case AnalyzeRate(f) => s"rate(${esc(f)})"
-      case AnalyzeRateBy(f, w) => s"rateby(${esc(f)},$w)"
-      case AnalyzeDelta(f) => s"delta(${esc(f)})"
-      case AnalyzeDeltaBy(f, w) => s"deltaby(${esc(f)},$w)"
-      case AnalyzeIrate(f) => s"irate(${esc(f)})"
-      case AnalyzeResets(f) => s"resets(${esc(f)})"
-      case AnalyzeChanges(f) => s"changes(${esc(f)})"
-      case AnalyzeResetsBy(f, w) => s"resetsby(${esc(f)},$w)"
-      case AnalyzeChangesBy(f, w) => s"changesby(${esc(f)},$w)"
-      case AnalyzePredict(f, h) => s"predict(${esc(f)},$h)"
-      case AnalyzeDeriv(f) => s"deriv(${esc(f)})"
-      case AnalyzeEwma(f, a) => s"ewma(${esc(f)},$a)"
-      case AnalyzeEwmaBy(f, a, w) => s"ewmaby(${esc(f)},$a,$w)"
-      case AnalyzeHolt(f, a, b) => s"holt(${esc(f)},$a,$b)"
-      case AnalyzeHoltBy(f, a, b, w) => s"holtby(${esc(f)},$a,$b,$w)"
-      case AnalyzeTwa(f, iv) => s"twa(${esc(f)},$iv)"
-      case AnalyzeCumsum(f) => s"cumsum(${esc(f)})"
-      case AnalyzeZScore(f, lb, th) => s"zscore(${esc(f)},$lb,$th)"
-      case AnalyzeCorrelate(f, b, k, iv, mb) =>
-        s"corr(${esc(f)},${esc(b)},${esc(k)},$iv,$mb)"
-      case AnalyzeRatio(f, b, k, iv) =>
-        s"ratio(${esc(f)},${esc(b)},${esc(k)},$iv)"
-      case AnalyzeTopK(k, by, keys, asc) =>
-        s"topk($k,${esc(by)},${keys.map(esc).mkString(",")},$asc)"
+    val params = spec.productIterator.map {
+      case s: String => esc(s)
+      case ss: Seq[_] => ss.map(x => esc(x.toString)).mkString("[", ",", "]")
+      case x => x.toString
     }
-    s"${keyOf(p)}|ANALYZE|$specKey|${splitNs.getOrElse(0L)}"
+    s"${keyOf(p)}|ANALYZE|${spec.productPrefix}${params.mkString("(", ",", ")")}|" +
+      splitNs.getOrElse(0L)
   }
-
-  /** The entry under a [[keyOf]] or [[analyzeKeyOf]] key, when it was
-    * stored at `currentEpoch`. */
-  def getByKey(key: String, currentEpoch: Long): Option[(Array[Row], StructType)] =
-    synchronized {
-      Option(lru.get(key)) match {
-        case Some(e) if e.epoch == currentEpoch =>
-          hitCount += 1; Some((e.rows, e.schema))
-        case Some(_) => lru.remove(key); missCount += 1; None // stale epoch
-        case None => missCount += 1; None
-      }
-    }
-
-  def putByKey(key: String, epoch: Long, rows: Array[Row],
-      schema: StructType): Unit =
-    synchronized {
-      if (rows.length <= maxRowsPerEntry) lru.put(key, Entry(epoch, rows, schema))
-    }
-
-  def stats: (Long, Long) = synchronized((hitCount, missCount))
-  def size: Int = synchronized(lru.size())
-
-  /** Drop every entry (engine close / explicit reset); hit/miss counters
-    * keep accumulating. */
-  def clear(): Unit = synchronized(lru.clear())
 }

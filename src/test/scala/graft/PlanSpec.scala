@@ -291,8 +291,10 @@ class PlanSpec extends SparkSpec {
       // a one-day append takes the delta path...
       e.putBatch(Seq(DataPoint("cpu", Map("h" -> "1"), 2 * day + 6L,
         Map("v" -> FieldValue.ofDouble(9.0)))))
-      val df = e.queryServing(QueryParams("cpu", endNs = Some(10 * day)))
-      assert(e.lastServingBuild == "incremental")
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(maintenanceDelta(e) {
+        df = e.queryServing(QueryParams("cpu", endNs = Some(10 * day)))
+      } == Map("serving_build_incremental" -> 1L))
       // ...and the served raw scan is filters + union over CACHED frames
       assert(cachedScans(df).size >= 2,
         "base + delta cached scans expected:\n" + df.queryExecution.executedPlan)

@@ -681,9 +681,11 @@ class RollupSpec extends SparkSpec {
     // day-6 commit touching only the steady series: every suffix series
     // resolves inside the 2-date recent window — no full-prefix read
     assert(eng.putBatch(Seq(pt("hot", 5 * Day + 30 * Min, 77.0))).isRight)
-    val routed1 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
-    assert(eng.lastSeedScan == "recent",
-      s"steady series must resolve in the bounded window, got ${eng.lastSeedScan}")
+    var routed1: Array[Row] = null
+    val scan1 = maintenanceDelta(eng) {
+      routed1 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy)) }
+    assert(scan1 == Map("seed_scan_recent" -> 1L),
+      s"steady series must resolve in the bounded window, got $scan1")
     val raw1 = TsAnalytics.ewmaSmoothBy(eng.loadPoints().get, q, 0.25,
       2 * Hr).collect()
     assert(routed1.map(_.toSeq).toSeq == raw1.map(_.toSeq).toSeq,
@@ -694,9 +696,11 @@ class RollupSpec extends SparkSpec {
     // of the older partitions distinguishes new from stale, and the
     // unseeded fold is already exact
     assert(eng.putBatch(Seq(pt("fresh", 5 * Day + 50 * Min, 9.0))).isRight)
-    val routedN = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
-    assert(eng.lastSeedScan == "recent-new",
-      s"a brand-new suffix series must keep the bounded scan, got ${eng.lastSeedScan}")
+    var routedN: Array[Row] = null
+    val scanN = maintenanceDelta(eng) {
+      routedN = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy)) }
+    assert(scanN == Map("seed_scan_recent_new" -> 1L),
+      s"a brand-new suffix series must keep the bounded scan, got $scanN")
     val rawN = TsAnalytics.ewmaSmoothBy(eng.loadPoints().get, q, 0.25,
       2 * Hr).collect()
     assert(routedN.map(_.toSeq).toSeq == rawN.map(_.toSeq).toSeq,
@@ -704,9 +708,11 @@ class RollupSpec extends SparkSpec {
     // the STALE series reappears on day 6: its resume state lives on
     // day 2, outside the recent window — exactness demands the fallback
     assert(eng.putBatch(Seq(pt("cold", 5 * Day + 40 * Min, 55.5))).isRight)
-    val routed2 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy))
-    assert(eng.lastSeedScan == "full",
-      s"a stale suffix series must force the full-prefix scan, got ${eng.lastSeedScan}")
+    var routed2: Array[Row] = null
+    val scan2 = maintenanceDelta(eng) {
+      routed2 = analyzeOn("rollup-ewma")(eng.analyzeRouted(q, ewmaBy)) }
+    assert(scan2 == Map("seed_scan_full" -> 1L),
+      s"a stale suffix series must force the full-prefix scan, got $scan2")
     val raw2 = TsAnalytics.ewmaSmoothBy(eng.loadPoints().get, q, 0.25,
       2 * Hr).collect()
     assert(routed2.map(_.toSeq).toSeq == raw2.map(_.toSeq).toSeq,

@@ -93,6 +93,10 @@ class ServerSpec extends SparkSpec {
       val JInt(logManifests) = (j \ "engine" \ "log_manifests"): @unchecked
       assert(logManifests.toLong > 0, "log health must report live manifests")
       assert((j \ "engine" \ "write_stalls") == JInt(0))
+      // maintenance decisions: the first serve built the view in full
+      assert((j \ "engine" \ "serving_build_full") == JInt(1))
+      TsdbEngine.MaintenanceKeys.foreach(k =>
+        assert((j \ "engine" \ k).isInstanceOf[JInt], s"/metrics lacks $k"))
       val JInt(heapUsed) = (j \ "memstats" \ "heap_used"): @unchecked
       assert(heapUsed.toLong > 0)
 
@@ -922,6 +926,44 @@ class ServerSpec extends SparkSpec {
         (u.isDelete, u.item.metric, u.item.tags, u.item.timestamp, u.item.fields)
       assert(viaRing.map(shape) == viaParquet.map(shape),
         "ring-served and parquet-served updates must be byte-identical in content")
+      s.close()
+    } finally {
+      try sub.close() catch { case _: Exception => () }
+      srv.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("client: after RESTORE, a TCP subscriber gets the reused version's " +
+      "DELETE, never the pre-restore PUT") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_subrestore").toString
+    val eng = new TsdbEngine(spark, s"$dir/db")
+    def pt(ts: Long, v: Double) =
+      graft.model.DataPoint("rs.m", Map("host" -> "a"), ts,
+        Map("v" -> FieldValue.ofDouble(v)))
+    assert(eng.putBatch(Seq(pt(1000L, 1.0))).isRight) // v1
+    assert(eng.snapshot(s"$dir/snap").isRight)
+    assert(eng.putBatch(Seq(pt(2000L, 2.0))).isRight) // v2, retained as rows
+    assert(eng.restore(s"$dir/snap", overwrite = true).isRight)
+    val srv = new GraftTcpServer(new NbqlExecutor(eng), port = 0)
+    srv.subscriptionPollMs = 20L
+    srv.start()
+    val sub = NbqlClient.connect("127.0.0.1", srv.boundPort)
+    try {
+      val s = sub.subscribe("rs.*", Map.empty)
+      assert(s.sinceVersion == 1L)
+      // the reused version 2 is a delete; then a sentinel put at v3
+      assert(eng.deletePoint("rs.m", Map("host" -> "a"), 1000L).isRight)
+      assert(eng.version == 2L)
+      assert(eng.putBatch(Seq(pt(4000L, 4.0))).isRight)
+      val u1 = s.next()
+      assert(u1.isDelete && u1.item.timestamp == 1000L,
+        s"expected v2's DELETE, got ${u1.updateType} at ${u1.item.timestamp}")
+      val u2 = s.next()
+      assert(!u2.isDelete && u2.item.timestamp == 4000L,
+        s"expected the v3 PUT, got ${u2.updateType} at ${u2.item.timestamp}")
+      assert(eng.commitChangesLocal(2L).isEmpty,
+        "the subscription ring answered for the restored log's version 2")
       s.close()
     } finally {
       try sub.close() catch { case _: Exception => () }

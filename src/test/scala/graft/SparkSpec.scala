@@ -21,4 +21,13 @@ object SparkTestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** The maintenance counters of `eng` that moved while `f` ran, with
+    * how far ([[graft.tsdb.TsdbEngine.maintenanceCounts]]). */
+  def maintenanceDelta(eng: graft.tsdb.TsdbEngine)(f: => Any): Map[String, Long] = {
+    val before = eng.maintenanceCounts.toMap
+    f
+    eng.maintenanceCounts.map { case (k, n) => k -> (n - before(k)) }
+      .filter(_._2 != 0L).toMap
+  }
 }

@@ -430,6 +430,54 @@ class StorageSpec extends SparkSpec {
     }
   }
 
+  test("RESTORE drops the old log's cached answers: a reused version " +
+      "serves the restored data, not the pre-restore result") {
+    withDir { dir =>
+      val e = new TsdbEngine(spark, s"$dir/db")
+      val snapDir = s"$dir/snap"
+      assert(e.putBatch(Seq(pt("m", "h1", 1000L, 1.0))).isRight) // v1
+      assert(e.snapshot(snapDir).isRight)
+      assert(e.putBatch(Seq(pt("m", "h1", 2000L, 2.0))).isRight) // v2
+      val q = QueryParams("m", startNs = 0L, endNs = Some(10000L))
+      def stamps(rows: Array[org.apache.spark.sql.Row]): Seq[Long] =
+        rows.map(_.getAs[Long]("timestamp")).toSeq.sorted
+      assert(stamps(e.serve(PointReq(q)).rows) == Seq(1000L, 2000L)) // cached
+      assert(e.restore(snapDir, overwrite = true).isRight)
+      // a different point at the reused log version 2
+      assert(e.putBatch(Seq(pt("m", "h1", 3000L, 3.0))).isRight)
+      assert(e.version == 2L)
+      val served = e.serve(PointReq(q))
+      assert(served.tier != "cache", "a pre-restore cache entry answered")
+      assert(stamps(served.rows) == stamps(e.query(q).collect()))
+      assert(stamps(served.rows) == Seq(1000L, 3000L))
+      e.close()
+    }
+  }
+
+  test("RESTORE to an older version: SHOW CARDINALITY ESTIMATE matches the " +
+      "exact counts of the restored data") {
+    withDir { dir =>
+      val e = new TsdbEngine(spark, s"$dir/db")
+      val snapDir = s"$dir/snap"
+      assert(e.putBatch(Seq(pt("m", "h1", 1000L, 1.0))).isRight)
+      assert(e.snapshot(snapDir).isRight)
+      assert(e.putBatch(Seq(pt("m", "h2", 2000L, 2.0), pt("m", "h3", 3000L, 3.0))).isRight)
+      e.registerCardinalitySummary(baseWindowNs = 1000000000L)
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+        df.collect().map(_.toSeq).toSeq
+      val before = rows(e.showCardinalityEstimate(None, None))
+      assert(before == rows(e.showCardinality(None, None)))
+      assert(before.map(_(2)) == Seq(3L))
+      assert(e.restore(snapDir, overwrite = true).isRight)
+      assert(e.version == 1L)
+      val after = rows(e.showCardinalityEstimate(None, None))
+      assert(after == rows(e.showCardinality(None, None)),
+        s"the pre-restore summary answered: $after")
+      assert(after.map(_(2)) == Seq(1L))
+      e.close()
+    }
+  }
+
   test("commit log race: two writers never drop a commit") {
     withDir { dir =>
       val log = new TxLog(s"$dir/_log")

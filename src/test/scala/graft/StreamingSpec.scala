@@ -72,8 +72,7 @@ class StreamingSpec extends SparkSpec {
       // incrementally off the streaming commit, answers stay identical
       mem.addData(row(1, 30, 4.5))
       q.processAllAvailable()
-      same()
-      assert(engine.lastServingBuild == "incremental",
+      assert(maintenanceDelta(engine)(same()) == Map("serving_build_incremental" -> 1L),
         "a one-day streaming micro-batch must take the serving delta path")
     } finally q.stop()
   }

@@ -688,21 +688,18 @@ class TsdbQuerySpec extends SparkSpec {
       assert(a.nonEmpty)
       assert(eng.queryServing(p).collect().map(_.toString).toSeq == a)
     }
-    same()
-    assert(eng.lastServingBuild == "full")
+    assert(maintenanceDelta(eng)(same()) == Map("serving_build_full" -> 1L))
 
     // a one-day append re-merges ONLY that day (delta path), same answers
     eng.reserveSeqBlock()
     eng.putBatch(Seq(graft.model.DataPoint("cpu.usage", Map("host" -> "h0"),
       2 * Day + 555 * M, Map("value" -> graft.model.FieldValue(d = Some(7.5))))))
-    same()
-    assert(eng.lastServingBuild == "incremental",
+    assert(maintenanceDelta(eng)(same()) == Map("serving_build_incremental" -> 1L),
       "single-day append must take the delta path")
 
     // a point delete on day 0 is another delta; latest data still wins
     eng.deletePoint("cpu.usage", Map("host" -> "h0"), 0L)
-    same()
-    assert(eng.lastServingBuild == "incremental")
+    assert(maintenanceDelta(eng)(same()) == Map("serving_build_incremental" -> 1L))
 
     // the new point and the tombstone are both visible through the view
     val served = eng.queryServing(p).collect().map(_.toString).toSeq
@@ -714,20 +711,21 @@ class TsdbQuerySpec extends SparkSpec {
 
     // compaction rewrites every date → full rebuild, answers unchanged
     assert(eng.compact().isRight)
-    same()
-    assert(eng.lastServingBuild == "full",
+    assert(maintenanceDelta(eng)(same()) == Map("serving_build_full" -> 1L),
       "most-data churn must collapse back to a full build")
 
     // delta budget: exhausting it forces a full rebuild
     eng.servingDeltaMax = 2
-    (0 until 3).foreach { k =>
+    val builds = (0 until 3).map { k =>
       eng.putBatch(Seq(graft.model.DataPoint("cpu.usage", Map("host" -> "h1"),
         1 * Day + (600 + k) * M,
         Map("value" -> graft.model.FieldValue(d = Some(k.toDouble))))))
-      same()
+      maintenanceDelta(eng)(same())
     }
-    assert(eng.lastServingBuild == "full",
+    assert(builds.last == Map("serving_build_full" -> 1L),
       "third delta exceeds servingDeltaMax=2 and must trigger a full rebuild")
+    assert(builds.init.forall(_ == Map("serving_build_incremental" -> 1L)),
+      s"the first two deltas fit the budget: $builds")
     eng.servingDeltaMax = 16
   }
 

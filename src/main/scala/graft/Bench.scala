@@ -621,18 +621,25 @@ object Bench {
     val lat = results.map(_._2).sorted
     def pct(p: Double): Double =
       if (lat.isEmpty) 0.0 else lat(math.min(lat.size - 1, (p * lat.size).toInt))
-    // a JSON object with one `"k":v` member per entry, rendered by `v`
-    def obj[V](kvs: Iterable[(String, V)])(v: V => Any): String =
-      kvs.map { case (k, x) => "\"" + k + "\":" + v(x) }.mkString("{", ",", "}")
-    val qjson = obj(results)(identity)
+    val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
     // per-query MIN alongside the median: on a host with documented
     // same-day 1.9x upper-quartile drift (SCALE.md r14), the min is the
     // more code-faithful statistic for cross-round comparisons — the
     // r14 ANN-family "regression" was medians-of-3 inflated by host
     // noise while every pass minimum sat at the prior round's level
-    val qminJson = obj(byQuery)(_.min)
-    val runsJson = obj(byQuery)(_.mkString("[", ",", "]"))
+    val qminJson = byQuery.map { case (k, ts) => "\"" + k + "\":" + ts.min }
+      .mkString("{", ",", "}")
+    val runsJson = byQuery.map { case (k, ts) =>
+      "\"" + k + "\":" + ts.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
+
+    val servingRunsJson = servingRuns.map { case (k, ts) =>
+      "\"" + k + "\":" + ts.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,""" +
       s""""queries_min":$qminJson,""" +
@@ -640,7 +647,7 @@ object Bench {
       s""""p50":${pct(0.5)},"p90":${pct(0.9)},"p99":${pct(0.99)},""" +
       servingMedians.map { case (k, v) => s""""$k":$v,""" }.mkString +
       s""""ingest_stream_rows_per_sec":$ingestStreamRps,""" +
-      s""""serving_runs":${obj(servingRuns)(_.mkString("[", ",", "]"))},""" +
+      s""""serving_runs":$servingRunsJson,""" +
       // host-drift sentinel (start/middle/end): normalize cross-round
       // absolutes by the ratio of sentinel MEDIANS before judging a
       // regression; a spread within one run flags an intra-run phase
@@ -652,7 +659,7 @@ object Bench {
       s""""notes":{"qps_analyze_cached":"repeats ANALYZE DELTA """ +
       s"""(bounded-output shape) since r10; r4-r9 repeated ANALYZE RATE, """ +
       s"""which silently exceeds the result-cache row cap at sf>=1"},""" +
-      s""""n_errors":${errors.size},"errors":${obj(errors)("\"" + _ + "\"")},""" +
+      s""""n_errors":${errors.size},"errors":$errJson,""" +
       s""""n_queries":${results.size},"sf":"$sfDir"}"""
     println(line)
     // The driver archives only a short tail of stdout per round, which

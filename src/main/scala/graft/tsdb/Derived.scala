@@ -21,14 +21,10 @@ import org.apache.spark.storage.StorageLevel
 private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
   import Derived._
 
-  private val lock = new java.util.concurrent.locks.ReentrantLock()
   @volatile private var released = false
 
   /** Run `f` serialized with every build of this holder. */
-  def exclusive[A](f: => A): A = {
-    lock.lock()
-    try f finally lock.unlock()
-  }
+  def exclusive[A](f: => A): A = synchronized(f)
 
   /** Drop every piece; the holder stays final. Waits for an in-flight
     * build, which then finds the holder released. */
@@ -58,18 +54,21 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
     }
   }
 
-  /** Evict the least recently used entries of `m` past `max`, never
-    * `keep`, handing each to `drop`. */
+  /** Of the entries of `m` that `holds` something evictable, hand the
+    * least recently used past `max` of them to `drop`, never `keep`. */
   private def evict[V <: Used](m: java.util.concurrent.ConcurrentHashMap[String, V],
-      max: Int, keep: String)(drop: V => Unit): Unit =
-    while (m.size() > max) {
+      max: Int, keep: String)(holds: V => Boolean)(drop: (String, V) => Unit): Unit = {
+    var over = if (m.size() > max) m.values().stream().filter(holds(_)).count() - max else 0L
+    while (over > 0) {
       var eldest: java.util.Map.Entry[String, V] = null
       m.entrySet().forEach { e =>
-        if (e.getKey != keep && (eldest == null || e.getValue.used < eldest.getValue.used))
-          eldest = e
+        if (e.getKey != keep && holds(e.getValue) &&
+            (eldest == null || e.getValue.used < eldest.getValue.used)) eldest = e
       }
-      if (eldest != null && m.remove(eldest.getKey, eldest.getValue)) drop(eldest.getValue)
+      over -= 1
+      if (eldest == null) over = 0 else drop(eldest.getKey, eldest.getValue)
     }
+  }
 
   // ---- result cache: LRU over collected answers, epoch-checked ----------
 
@@ -78,8 +77,9 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
   private val results = new java.util.concurrent.ConcurrentHashMap[String, Answer]()
 
   /** The answer cached under `key` ([[QueryCache.keyOf]]) at `epoch`. The
-    * caller reads `epoch` before this checks `released`, so a hit is never
-    * from a root RESTORE swapped away. */
+    * caller reads `epoch` after it picked this holder and before this
+    * checks `released`, so a hit is never from a root RESTORE swapped
+    * away. */
   def cachedResult(key: String, epoch: Long): Option[(Array[Row], StructType)] = {
     val a = results.get(key)
     if (a != null && a.epoch != epoch) results.remove(key, a)
@@ -90,7 +90,7 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
   def cacheResult(key: String, epoch: Long, rows: Array[Row], schema: StructType): Unit =
     if (!released && rows.length <= ResultRowsMax) {
       results.put(key, new Answer(epoch, rows, schema))
-      evict(results, ResultEntries, key)(_ => ())
+      evict(results, ResultEntries, key)(_ => true)((k, a) => results.remove(k, a))
     }
 
   // ---- per-metric state -------------------------------------------------
@@ -111,9 +111,10 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
 
   /** `get`, or else under the build lock `build` from the metric's state
     * at the current epoch (a stale one advanced first) and install the
-    * state it returns, evicting the least recently used metric past
-    * [[MaxMetrics]]. On a released holder the new frames are unpersisted
-    * instead. */
+    * state it returns, unpersisting the Spark frames of the least recently
+    * used metric past [[MaxMetrics]] (its driver-resident rows stay until
+    * its epoch moves). On a released holder the new frames are
+    * unpersisted instead. */
   private def derive[A](metric: String)(get: MetricState => Option[A])(
       build: MetricState => (MetricState, A)): A =
     hit(metric)(get).getOrElse(exclusive {
@@ -128,7 +129,10 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
         if (released) next.unpersist()
         else {
           metrics.put(metric, new Slot(next))
-          evict(metrics, MaxMetrics, metric)(_.state.unpersist())
+          evict(metrics, MaxMetrics, metric)(_.state.holdsFrames) { (_, s) =>
+            s.state.unpersist()
+            s.state = s.state.withoutFrames
+          }
         }
         out
       }
@@ -159,16 +163,17 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
 
   /** The metric's persisted rollup frame for `spec`. */
   def rollup(metric: String, spec: RollupReg)(build: => DataFrame): DataFrame =
-    derive(metric)(_.rollupFor(spec).map(_.frame)) { st =>
-      st.rollup.foreach(_.frame.unpersist(blocking = false))
+    derive(metric)(_.rollupFor(spec).flatMap(_.frame)) { st =>
+      st.rollup.foreach(_.unpersist())
       val f = build.persist(StorageLevel.MEMORY_AND_DISK)
-      (st.copy(rollup = Some(RollupState(spec, f))), f)
+      (st.copy(rollup = Some(st.rollupFor(spec).getOrElse(RollupState(spec))
+        .copy(frame = Some(f)))), f)
     }
 
   def dropRollup(metric: String): Unit = exclusive {
     val slot = metrics.get(metric)
     if (slot != null) {
-      slot.state.rollup.foreach(_.frame.unpersist(blocking = false))
+      slot.state.rollup.foreach(_.unpersist())
       slot.state = slot.state.copy(rollup = None)
     }
   }
@@ -245,11 +250,7 @@ private[tsdb] final class Derived(snapshot: () => LogSnapshot) {
 
   def retainedBytes: Long = ringBytes.get()
 
-  def retainedExactBytes: Long = {
-    var n = 0L
-    ring.values().forEach(v => n += v._2)
-    n
-  }
+  def retainedExactBytes: Long = ring.values().stream().mapToLong(_._2).sum()
 }
 
 private[tsdb] object Derived {
@@ -257,8 +258,9 @@ private[tsdb] object Derived {
   /** An entry stamped at its last use, for LRU eviction. */
   abstract class Used { @volatile var used: Long = System.nanoTime() }
 
-  /** Metrics whose derived state is kept at once (MEMORY_AND_DISK frames
-    * — an eviction degrades to recompute, never to wrong results). */
+  /** Metrics whose Spark frames are kept persisted at once
+    * (MEMORY_AND_DISK — an eviction degrades to recompute, never to wrong
+    * results). Driver-resident rows are bounded per metric instead. */
   val MaxMetrics = 8
   /** Result-cache entries, and the most rows one entry may hold. */
   val ResultEntries = 256
@@ -285,8 +287,12 @@ private[tsdb] object Derived {
     val TooBig = Resident(null, null, null)
   }
 
-  final case class RollupState(spec: RollupReg, frame: DataFrame,
-      minWs: Option[Long] = None, local: Option[Resident] = None)
+  /** A rollup spec's persisted frame (None once evicted), with its min
+    * stored window_start and driver-resident rows, which outlive it. */
+  final case class RollupState(spec: RollupReg, frame: Option[DataFrame] = None,
+      minWs: Option[Long] = None, local: Option[Resident] = None) {
+    def unpersist(): Unit = frame.foreach(_.unpersist(blocking = false))
+  }
 
   /** Every derived piece of one metric at `epoch`. `seed` is an older
     * epoch's serving state, kept only as the input of incremental
@@ -298,13 +304,17 @@ private[tsdb] object Derived {
     def onRollup(spec: RollupReg)(f: RollupState => RollupState): MetricState =
       copy(rollup = rollup.map(r => if (r.spec == spec) f(r) else r))
     def advance(e: Long): MetricState = {
-      rollup.foreach(_.frame.unpersist(blocking = false))
+      rollup.foreach(_.unpersist())
       MetricState(e, seed = serving.orElse(seed))
     }
+    def holdsFrames: Boolean =
+      serving.nonEmpty || seed.nonEmpty || rollup.exists(_.frame.nonEmpty)
+    def withoutFrames: MetricState =
+      copy(serving = None, seed = None, rollup = rollup.map(_.copy(frame = None)))
     def unpersist(): Unit = {
       serving.foreach(_.unpersist())
       seed.foreach(_.unpersist())
-      rollup.foreach(_.frame.unpersist(blocking = false))
+      rollup.foreach(_.unpersist())
     }
   }
 }

@@ -47,20 +47,39 @@ object QueryCache {
 
   /** Canonical key for an ANALYZE query: the point-query key (TAGGED/
     * range/FILTER/LIMIT compose with ANALYZE and must distinguish
-    * entries) extended with the analytic's case-class name and every
-    * parameter, and the split width. Every user-chosen name rides [[esc]]
-    * (so raw commas only ever separate parameters) — an ANALYZE entry may
+    * entries) extended with the analytic's own parameters and the split
+    * width. Every user-chosen name rides [[esc]] — an ANALYZE entry may
     * never collide with its plain-QUERY twin (the `|ANALYZE|` segment
     * separates the namespaces) or with a differently-parameterized
     * analytic. */
   def analyzeKeyOf(p: QueryParams, spec: AnalyzeSpec,
       splitNs: Option[Long]): String = {
-    val params = spec.productIterator.map {
-      case s: String => esc(s)
-      case ss: Seq[_] => ss.map(x => esc(x.toString)).mkString("[", ",", "]")
-      case x => x.toString
+    val specKey = spec match {
+      case AnalyzeRate(f) => s"rate(${esc(f)})"
+      case AnalyzeRateBy(f, w) => s"rateby(${esc(f)},$w)"
+      case AnalyzeDelta(f) => s"delta(${esc(f)})"
+      case AnalyzeDeltaBy(f, w) => s"deltaby(${esc(f)},$w)"
+      case AnalyzeIrate(f) => s"irate(${esc(f)})"
+      case AnalyzeResets(f) => s"resets(${esc(f)})"
+      case AnalyzeChanges(f) => s"changes(${esc(f)})"
+      case AnalyzeResetsBy(f, w) => s"resetsby(${esc(f)},$w)"
+      case AnalyzeChangesBy(f, w) => s"changesby(${esc(f)},$w)"
+      case AnalyzePredict(f, h) => s"predict(${esc(f)},$h)"
+      case AnalyzeDeriv(f) => s"deriv(${esc(f)})"
+      case AnalyzeEwma(f, a) => s"ewma(${esc(f)},$a)"
+      case AnalyzeEwmaBy(f, a, w) => s"ewmaby(${esc(f)},$a,$w)"
+      case AnalyzeHolt(f, a, b) => s"holt(${esc(f)},$a,$b)"
+      case AnalyzeHoltBy(f, a, b, w) => s"holtby(${esc(f)},$a,$b,$w)"
+      case AnalyzeTwa(f, iv) => s"twa(${esc(f)},$iv)"
+      case AnalyzeCumsum(f) => s"cumsum(${esc(f)})"
+      case AnalyzeZScore(f, lb, th) => s"zscore(${esc(f)},$lb,$th)"
+      case AnalyzeCorrelate(f, b, k, iv, mb) =>
+        s"corr(${esc(f)},${esc(b)},${esc(k)},$iv,$mb)"
+      case AnalyzeRatio(f, b, k, iv) =>
+        s"ratio(${esc(f)},${esc(b)},${esc(k)},$iv)"
+      case AnalyzeTopK(k, by, keys, asc) =>
+        s"topk($k,${esc(by)},${keys.map(esc).mkString(",")},$asc)"
     }
-    s"${keyOf(p)}|ANALYZE|${spec.productPrefix}${params.mkString("(", ",", ")")}|" +
-      splitNs.getOrElse(0L)
+    s"${keyOf(p)}|ANALYZE|$specKey|${splitNs.getOrElse(0L)}"
   }
 }

@@ -119,7 +119,7 @@ object ValueFilter {
   * [[AnalyzeRatio]]) reject TAGGED/FILTER (alignment is BY the key
   * tag) and route through rollup partials when both metrics carry
   * covering rollups. */
-sealed trait AnalyzeSpec extends Product { def field: String }
+sealed trait AnalyzeSpec { def field: String }
 /** `ANALYZE RATE(field)` — counter-reset-aware per-second rate
   * ([[TsAnalytics.rate]]). */
 final case class AnalyzeRate(field: String) extends AnalyzeSpec

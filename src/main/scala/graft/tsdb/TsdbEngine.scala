@@ -1096,7 +1096,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         // the epoch for the cross-metric analytics is the SUM of both
         // metrics' epochs — epochs only move forward, so the sum is
         // strictly monotone and a write to EITHER side invalidates
-        val epoch = spec match {
+        def epoch = spec match {
           case AnalyzeCorrelate(_, b, _, _, _) => metricEpoch(q.metric) + metricEpoch(b)
           case AnalyzeRatio(_, b, _, _) => metricEpoch(q.metric) + metricEpoch(b)
           case _ => metricEpoch(q.metric)
@@ -1130,20 +1130,27 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
   /** The result cache in front of `miss`: a hit answers as `hitTier`, a
     * driver-side answer of `miss` is stored under (`key`, `epoch`).
     * RELATIVE queries with an un-pinned `now`, and PREFIX metrics (no
-    * per-metric epoch can invalidate them), bypass the cache. */
-  private def cached(p: QueryParams, key: => String, epoch: Long,
+    * per-metric epoch can invalidate them), bypass the cache.
+    *
+    * The holder is read BEFORE the epoch: [[restore]] installs its new
+    * holder after the restored log's snapshot, so an answer is filed
+    * either in the holder its epoch came from or in a released one, which
+    * drops it — never in the new holder under the old log's epoch, where
+    * a reused log version would hit it. */
+  private def cached(p: QueryParams, key: => String, epoch: => Long,
       hitTier: String)(miss: => Served): Served = {
     val cacheable = (p.relativeNs.isEmpty || p.nowNs.isDefined) &&
       !TagMatch.isPrefix(p.metric)
     val d = derived
+    val e = epoch
     lazy val k = key
-    (if (cacheable) d.cachedResult(k, epoch) else None) match {
+    (if (cacheable) d.cachedResult(k, e) else None) match {
       case Some(hit) => cacheHits.incrementAndGet(); Served(Left(hit), hitTier)
       case None =>
         if (cacheable) cacheMisses.incrementAndGet()
         val out = miss
         out.result match {
-          case Left((rows, sch)) if cacheable => d.cacheResult(k, epoch, rows, sch)
+          case Left((rows, sch)) if cacheable => d.cacheResult(k, e, rows, sch)
           case _ => ()
         }
         out
@@ -1174,87 +1181,139 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     * pure Scala ([[LocalRollup]]) — no job, no planning floor. None when
     * no resident rollup covers the analytic. */
   private def localAnalytic(p: QueryParams, spec: AnalyzeSpec): Option[Served] = {
-    type Schema = org.apache.spark.sql.types.StructType
-    def aligned(w: Long)(s: RollupReg): Boolean = w > 0 && w % s.intervalNs == 0
-    // fold the [q.startNs, q.endNs] slice of `f`'s partials, which must
-    // carry `__inc` and the `__tsum` family (they ship together, checked
-    // by the first) plus `extra`, as tier `local-rollup-<op>`
-    def fold(f: String, op: String, extra: Seq[String] = Nil,
-        gate: RollupReg => Boolean = _ => true, q: QueryParams = p)(
-        run: (Array[Row], Schema) => Array[Row], schema: => Schema): Option[Served] =
-      localRollup(q)(s => s.fields.contains(f) && gate(s)).collect {
-        case Resident(rows, ws, sch)
-            if (Seq(s"${f}__inc", s"${f}__tsum") ++ extra).forall(sch.fieldNames.contains) =>
-          Served(Left((run(timeSlice(rows, ws, q.startNs, q.endNs.get), sch), schema)),
-            s"local-rollup-$op")
-      }
-    def transitions(f: String) = Seq(s"${f}__resets", s"${f}__changes")
+    val transitionCols = (f: String) => Seq(s"${f}__resets", s"${f}__changes")
+    def aligned(w: Long): Long => Boolean = grain => w > 0 && w % grain == 0
     spec match {
       case AnalyzeDelta(f) =>
-        fold(f, "delta")(LocalRollup.runDelta(_, _, p, f), LocalRollup.outputSchemaDelta)
+        serveLocalRollupAnalytic(p, f, "local-rollup-delta") {
+          (slice, sch) => (LocalRollup.runDelta(slice, sch, p, f),
+            LocalRollup.outputSchemaDelta)
+        }
       case AnalyzePredict(f, h) =>
-        fold(f, "predict")(LocalRollup.runPredict(_, _, p, f, h),
-          LocalRollup.outputSchemaPredict)
+        serveLocalRollupAnalytic(p, f, "local-rollup-predict") {
+          (slice, sch) => (LocalRollup.runPredict(slice, sch, p, f, h),
+            LocalRollup.outputSchemaPredict)
+        }
       case AnalyzeDeriv(f) =>
-        fold(f, "deriv")((sl, sch) => LocalRollup.runPredict(sl, sch, p, f, 0L)
-          .map(r => Row(r(0), r(1), r(2), r(3), r(4), r(5))), LocalRollup.outputSchemaDeriv)
+        serveLocalRollupAnalytic(p, f, "local-rollup-deriv") {
+          (slice, sch) =>
+            (LocalRollup.runPredict(slice, sch, p, f, 0L)
+              .map(r => Row(r(0), r(1), r(2), r(3), r(4), r(5))),
+              LocalRollup.outputSchemaDeriv)
+        }
       case AnalyzeIrate(f) =>
-        fold(f, "irate", Seq(s"${f}__plast"))(LocalRollup.runIrate(_, _, p, f),
-          LocalRollup.outputSchemaIrate)
+        serveLocalRollupAnalytic(p, f, "local-rollup-irate",
+          extraCols = Seq(s"${f}__plast")) {
+          (slice, sch) => (LocalRollup.runIrate(slice, sch, p, f),
+            LocalRollup.outputSchemaIrate)
+        }
       case AnalyzeResets(f) =>
-        fold(f, "resets", transitions(f))(LocalRollup.runTransitions(_, _, p, f, "resets"),
-          LocalRollup.outputSchemaTransitions("resets"))
+        serveLocalRollupAnalytic(p, f, "local-rollup-resets",
+          extraCols = transitionCols(f)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitions(slice, sch, p, f, "resets"),
+              LocalRollup.outputSchemaTransitions("resets"))
+        }
       case AnalyzeChanges(f) =>
-        fold(f, "changes", transitions(f))(LocalRollup.runTransitions(_, _, p, f, "changes"),
-          LocalRollup.outputSchemaTransitions("changes"))
+        serveLocalRollupAnalytic(p, f, "local-rollup-changes",
+          extraCols = transitionCols(f)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitions(slice, sch, p, f, "changes"),
+              LocalRollup.outputSchemaTransitions("changes"))
+        }
       case AnalyzeDeltaBy(f, w) =>
-        fold(f, "delta-by", gate = aligned(w))(LocalRollup.runDeltaBy(_, _, p, f, w),
-          LocalRollup.outputSchemaDeltaBy)
+        serveLocalRollupAnalytic(p, f, "local-rollup-delta-by",
+          alignGate = aligned(w)) {
+          (slice, sch) => (LocalRollup.runDeltaBy(slice, sch, p, f, w),
+            LocalRollup.outputSchemaDeltaBy)
+        }
       case AnalyzeRateBy(f, w) =>
-        fold(f, "rate-by", gate = aligned(w))((sl, sch) =>
-          LocalRollup.runDeltaBy(sl, sch, p, f, w).map(r => Row(r(0), r(1), r(2), r(3),
-            r(4), r.getDouble(6) * 1e9 / w.toDouble)), LocalRollup.outputSchemaRateBy)
+        serveLocalRollupAnalytic(p, f, "local-rollup-rate-by",
+          alignGate = aligned(w)) {
+          (slice, sch) =>
+            (LocalRollup.runDeltaBy(slice, sch, p, f, w).map(r =>
+              Row(r(0), r(1), r(2), r(3), r(4),
+                r.getDouble(6) * 1e9 / w.toDouble)),
+              LocalRollup.outputSchemaRateBy)
+        }
       case AnalyzeResetsBy(f, w) =>
-        fold(f, "resets-by", transitions(f), aligned(w))(
-          LocalRollup.runTransitionsBy(_, _, p, f, w, "resets"),
-          LocalRollup.outputSchemaTransitionsBy("resets"))
+        serveLocalRollupAnalytic(p, f, "local-rollup-resets-by",
+          extraCols = transitionCols(f), alignGate = aligned(w)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "resets"),
+              LocalRollup.outputSchemaTransitionsBy("resets"))
+        }
       case AnalyzeChangesBy(f, w) =>
-        fold(f, "changes-by", transitions(f), aligned(w))(
-          LocalRollup.runTransitionsBy(_, _, p, f, w, "changes"),
-          LocalRollup.outputSchemaTransitionsBy("changes"))
+        serveLocalRollupAnalytic(p, f, "local-rollup-changes-by",
+          extraCols = transitionCols(f), alignGate = aligned(w)) {
+          (slice, sch) =>
+            (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "changes"),
+              LocalRollup.outputSchemaTransitionsBy("changes"))
+        }
       case AnalyzeTwa(f, iv) =>
         val pTwa = p.copy(downsampleNs = Some(iv))
-        fold(f, "twa", Seq(s"${f}__area"), aligned(iv), pTwa)(
-          LocalRollup.runTwa(_, _, pTwa, f), LocalRollup.outputSchemaTwa)
-      case AnalyzeEwmaBy(f, a, w) => serveLocalSmooth(p, SmoothSpec(f, "ewma", a), w)
-      case AnalyzeHoltBy(f, a, b, w) => serveLocalSmooth(p, SmoothSpec(f, "holt", a, b), w)
+        serveLocalRollupAnalytic(pTwa, f, "local-rollup-twa",
+          extraCols = Seq(s"${f}__area"), alignGate = aligned(iv)) {
+          (slice, sch) => (LocalRollup.runTwa(slice, sch, pTwa, f),
+            LocalRollup.outputSchemaTwa)
+        }
+      case AnalyzeEwmaBy(f, a, w) =>
+        serveLocalSmooth(p, SmoothSpec(f, "ewma", a), w)
+      case AnalyzeHoltBy(f, a, b, w) =>
+        serveLocalSmooth(p, SmoothSpec(f, "holt", a, b), w)
       case _ => None
     }
   }
 
-  /** The resident partials of the rollup registered for `p`'s metric, when
-    * `covers` accepts it and `p` is a plain whole-window range — the shape
-    * every driver-resident ANALYZE fold needs. A cursor resume (afterKey)
-    * takes the Spark path, whose generic keyset filter + limit handle it
-    * ([[analyze]]) — the local folds apply LIMIT internally, which would
-    * otherwise re-serve page 1. */
-  private def localRollup(p: QueryParams)(covers: RollupReg => Boolean): Option[Resident] =
-    Option(rollupSpecs.get(p.metric)).filter(s => covers(s) && p.afterKey.isEmpty &&
-        p.valueFilters.isEmpty && !TagMatch.isPrefix(p.metric) &&
-        p.relativeNs.isEmpty && p.startNs % s.intervalNs == 0 &&
-        p.endNs.exists(e => e != 0L && (e + 1) % s.intervalNs == 0))
-      .flatMap(s => residentRows(p.metric, Some(s)))
+  /** Driver-resident whole-range-analytic serving (DELTA/PREDICT/…):
+    * slice the resident partial rows to the window range and fold in
+    * pure Scala when a registered rollup covers the field and the frame
+    * carries the needed partial columns (`__inc`; `__tsum` family —
+    * both ship together, schema-checked by the first). */
+  private def serveLocalRollupAnalytic(p: QueryParams, field: String,
+      tier: String, extraCols: Seq[String] = Nil,
+      alignGate: Long => Boolean = _ => true)(
+      fold: (Array[Row], org.apache.spark.sql.types.StructType) =>
+        (Array[Row], org.apache.spark.sql.types.StructType)): Option[Served] = {
+    val spec = rollupSpecs.get(p.metric)
+    // afterKey: a cursor resume takes the Spark path, whose generic
+    // keyset filter + limit handle it ([[analyze]]) — the local folds
+    // apply LIMIT internally, which would otherwise re-serve page 1
+    if (spec == null || !spec.fields.contains(field) ||
+        p.afterKey.isDefined ||
+        p.valueFilters.nonEmpty || TagMatch.isPrefix(p.metric) ||
+        p.relativeNs.isDefined || p.startNs % spec.intervalNs != 0 ||
+        !p.endNs.exists(e => e != 0L && (e + 1) % spec.intervalNs == 0) ||
+        !alignGate(spec.intervalNs))
+      None
+    else residentRows(p.metric, Some(spec)).flatMap { case Resident(rows, ws, sch) =>
+      if (!sch.fieldNames.contains(s"${field}__inc") ||
+          !sch.fieldNames.contains(s"${field}__tsum") ||
+          !extraCols.forall(sch.fieldNames.contains)) None
+      else Some(Served(Left(fold(timeSlice(rows, ws, p.startNs, p.endNs.get), sch)),
+        tier))
+    }
+  }
 
-  /** Driver-resident EWMA/HOLT … BY: eligible only when the registration
-    * carries the EXACT [[SmoothSpec]], the bounds align, the window is a
-    * grain multiple, AND no matched non-empty window precedes startNs (the
-    * stored state is a prefix fold; the prefix check scans the resident
-    * rows BEFORE the range slice, so it costs a driver array walk, not a
-    * job). */
-  private def serveLocalSmooth(p: QueryParams, s: SmoothSpec, w: Long): Option[Served] =
-    localRollup(p)(r => r.smooth.contains(s) && w > 0 && w % r.intervalNs == 0)
-      .filter(_.schema.fieldNames.contains(Rollup.smoothStateCol(s)))
-      .flatMap { case Resident(rows, ws, sch) =>
+  /** Driver-resident EWMA/HOLT … BY: the [[serveLocalRollupAnalytic]]
+    * analog for the smoothing recurrences — eligible only when the
+    * registration carries the EXACT [[SmoothSpec]], the bounds align,
+    * the window is a grain multiple, AND no matched non-empty window
+    * precedes startNs (the stored state is a prefix fold; the prefix
+    * check scans the resident rows BEFORE the range slice, so it costs
+    * a driver array walk, not a job). */
+  private def serveLocalSmooth(p: QueryParams, s: SmoothSpec, w: Long): Option[Served] = {
+    val spec = rollupSpecs.get(p.metric)
+    if (spec == null || !spec.smooth.contains(s) ||
+        p.afterKey.isDefined || // see serveLocalRollupAnalytic
+        p.valueFilters.nonEmpty || TagMatch.isPrefix(p.metric) ||
+        p.relativeNs.isDefined || p.startNs % spec.intervalNs != 0 ||
+        !p.endNs.exists(e => e != 0L && (e + 1) % spec.intervalNs == 0) ||
+        w <= 0 || w % spec.intervalNs != 0)
+      None
+    else residentRows(p.metric, Some(spec)).flatMap { case Resident(rows, ws, sch) =>
+      if (!sch.fieldNames.contains(Rollup.smoothStateCol(s))) None
+      else {
         val lo = lowerBound(ws, p.startNs)
         val iMetric = sch.fieldIndex("metric")
         val iTags = sch.fieldIndex("tags")
@@ -1269,6 +1328,8 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
             timeSlice(rows, ws, p.startNs, p.endNs.get), sch, p, s, w),
           LocalRollup.outputSchemaSmooth(s.kind))), s"local-rollup-${s.kind}"))
       }
+    }
+  }
 
   /** Paired (tag_value, bucket, va, vb, n_a, n_b) frame for the
     * cross-metric analytics from ROLLUP PARTIALS — Σ window sums /
@@ -2687,7 +2748,13 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     val destLog = Paths.get(s"$dest/_log")
     deleteDir(destLog)
     copyDir(Paths.get(s"$rootDir/_log"), destLog)
-    dropHeartbeats(destLog)
+    locally {
+      val s = Files.list(destLog)
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("_writer."))
+        .toSeq.foreach(Files.deleteIfExists(_))
+      finally s.close()
+    }
     firePost(EventType.PostCreateSnapshot, Payloads.PostCreateSnapshot(dest))
     Right(())
   }
@@ -2817,8 +2884,18 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     // heartbeats that rode in with the copied log are other roots'
     // writers (and Files.copy refreshed their mtimes) — scrub them, or
     // they would block the NEXT restore for a full TTL
-    dropHeartbeats(Paths.get(s"$rootDir/_log"))
+    locally {
+      val logDir = Paths.get(s"$rootDir/_log")
+      if (Files.isDirectory(logDir)) {
+        val s = Files.list(logDir)
+        try s.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("_writer."))
+          .toSeq.foreach(Files.deleteIfExists(_))
+        finally s.close()
+      }
+    }
     synchronized {
+      // the snapshot before the holder: [[cached]] relies on this order
       snap = log.replay()
       derived = new Derived(() => snap)
       // the whole root was swapped: every dereference this instance
@@ -3024,15 +3101,6 @@ object TsdbEngine {
 
   def emptyPoints(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DataPoint.storageSchema)
-
-  /** Delete the writer heartbeats (`_writer.<id>`) in a log directory. */
-  private def dropHeartbeats(logDir: Path): Unit =
-    if (Files.isDirectory(logDir)) {
-      val s = Files.list(logDir)
-      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("_writer."))
-        .toSeq.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
 
   private[tsdb] def deleteDir(p: Path): Unit =
     if (Files.exists(p))

@@ -779,6 +779,31 @@ class TsdbQuerySpec extends SparkSpec {
     assert(agg.result.isLeft && agg.rows.length == 1)
   }
 
+  test("driver-resident rows outlive frame eviction: ten hot metrics stay on the local tier") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_hot").toString
+    val eng = new TsdbEngine(spark, s"$dir/db")
+    try {
+      val metrics = (0 until 10).map(i => s"hot$i")
+      eng.putDF(mkDf(metrics.flatMap(m => series("h1", 3, step = M).map(_.copy(metric = m)))))
+      def served(m: String, end: Long) = eng.serve(PointReq(QueryParams(m, endNs = Some(end))))
+      // one full serving build per metric: ten overflow the 8-metric frame
+      // bound, so the two least recently used metrics lose their frames
+      val first = maintenanceDelta(eng)(metrics.foreach(m =>
+        assert(served(m, 1000 * M).tier == "local", m)))
+      assert(first == Map("serving_build_full" -> 10L), first)
+      // a new range misses the result cache; every metric, the evicted two
+      // included, answers from its resident rows with nothing rebuilt
+      val second = maintenanceDelta(eng)(metrics.foreach { m =>
+        val s = served(m, 999 * M)
+        assert(s.tier == "local" && s.rows.length == 3, s"$m: ${s.tier}")
+      })
+      assert(second.isEmpty, s"resident rows must survive frame eviction: $second")
+    } finally {
+      eng.close()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("driver tier orders supplementary-plane series keys like Spark") {
     // U+1F600 (surrogate pair) vs U+FA00: Scala String order puts the
     // emoji key FIRST, UTF-8 binary order puts it LAST — the tiers must

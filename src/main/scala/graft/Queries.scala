@@ -1384,8 +1384,19 @@ object Queries {
     TsAnalytics.ratio(pts(s, dir), "click", "view", "user",
         bucketNs = 24L * HourNs, startNs = 0L, endNs = FarFuture)
       .select(col("tag_value").as("user"), col("bucket"),
-        col("n_a"), col("n_b"), round(col("ratio"), 4).as("ratio"))
+        col("n_a"), col("n_b"), roundHalfAway4(col("ratio")).as("ratio"))
       .orderBy("user", "bucket")
+  }
+
+  /** DuckDB's `round(x, 4)` on a double: C `round(x * 1e4) / 1e4`, half
+    * away from zero on the binary product. Spark's `round` goes through a
+    * decimal instead, and the two part on a ratio whose decimal form sits
+    * on the half: 81.96 / 32.0 prints as 2.56125, Spark rounds it to
+    * 2.5613, DuckDB to 2.5612 (the double is just below the half). */
+  private[graft] def roundHalfAway4(x: Column): Column = {
+    val y = abs(x * 1e4)
+    val f = floor(y)
+    signum(x) * when(y - f >= 0.5, f + 1).otherwise(f) / 1e4
   }
 
   /** PromQL `topk(5, sum by (user)(purchase))`: top groups by the

@@ -67,6 +67,13 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
 
   // ---- request/response --------------------------------------------------
 
+  /** One request frame, flushed: frames are written unflushed
+    * ([[Wire.writeFrame]]), and each request is a whole message. */
+  private def send(cmd: Byte, payload: Array[Byte]): Unit = {
+    Wire.writeFrame(out, cmd, payload)
+    out.flush()
+  }
+
   private def fail(payload: Array[Byte]): Nothing = {
     val i = Wire.dis(payload)
     val code = i.readUnsignedShort()
@@ -78,7 +85,7 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
     * an empty-row [[QueryResult]] whose `totalRows` is rows affected. */
   def query(q: String, params: Any*): QueryResult = synchronized {
     val text = if (params.isEmpty) q else formatQuery(q, params)
-    Wire.writeFrame(out, Wire.CmdQuery, Wire.withDOS(Wire.writeString(_, text)))
+    send(Wire.CmdQuery, Wire.withDOS(Wire.writeString(_, text)))
     val rows = Seq.newBuilder[Wire.PointItem]
     var cursor = ""
     while (true) {
@@ -124,7 +131,7 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
   }
 
   private def manipulate(cmd: Byte, payload: Array[Byte]): Long = synchronized {
-    Wire.writeFrame(out, cmd, payload)
+    send(cmd, payload)
     val frame = Wire.readFrame(in)
     frame.cmd match {
       case Wire.CmdError => fail(frame.payload)
@@ -171,8 +178,7 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
     * trailing-`*` patterns. Takes over this connection until closed. */
   def subscribe(metricPattern: String,
       tagPatterns: Map[String, String] = Map.empty): Subscription = synchronized {
-    Wire.writeFrame(out, Wire.CmdSubscribe,
-      Wire.encodeSubscribe(metricPattern, tagPatterns))
+    send(Wire.CmdSubscribe, Wire.encodeSubscribe(metricPattern, tagPatterns))
     val frame = Wire.readFrame(in)
     frame.cmd match {
       case Wire.CmdError => fail(frame.payload)

@@ -116,14 +116,17 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
       while (true) {
         val frame = Wire.readFrame(in)
         dispatch(frame, out, user)
+        out.flush() // one flush per message: frames are written unflushed
       }
     } catch {
       case _: EOFException => () // client closed
       case _: java.io.IOException => ()
       case e: Exception =>
-        try Wire.writeFrame(out, Wire.CmdError, Wire.encodeError(500,
-          s"internal: ${e.getMessage}"))
-        catch { case _: Exception => () }
+        try {
+          Wire.writeFrame(out, Wire.CmdError, Wire.encodeError(500,
+            s"internal: ${e.getMessage}"))
+          out.flush()
+        } catch { case _: Exception => () }
     } finally {
       try sock.close() catch { case _: Exception => () }
     }
@@ -197,7 +200,9 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     * poll the commit log and push every LATER commit's matching changes as
     * QueryResultPart frames in commit order — pure-append commits as PUT
     * rows (seq order), tombstones as DELETE frames ([[Wire.FlagIsDelete]],
-    * fields carry delete_kind/start_ns/end_ns). Runs until the client
+    * fields carry delete_kind/start_ns/end_ns). The ack and each
+    * commit's frames are flushed as one message. A commit of other
+    * metrics only is skipped without reading it. Runs until the client
     * disconnects (a push fails) or the server stops. */
   private def streamSubscription(out: java.io.OutputStream,
       metricPat: String, tagPats: Map[String, String]): Unit = {
@@ -207,6 +212,7 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     var since = engine.sync()
     Wire.writeFrame(out, Wire.CmdManipulate,
       Wire.encodeManipulateResponse(since, Nil))
+    out.flush()
     try {
       while (running) {
         val tip = engine.sync()
@@ -228,7 +234,8 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
               }
               Nil // an append commit never carries tombstones
             case None =>
-              val (puts, ts) = try engine.commitChanges(v) catch {
+              val (puts, ts) = try engine.commitChanges(v,
+                  PubSub.matchesMetric(filter, _)) catch {
                 case _: IllegalStateException =>
                   // lagging past the truncation horizon: commit v's
                   // manifest was truncated under a checkpoint, so its
@@ -268,6 +275,7 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
               Wire.writeFrame(out, Wire.CmdQueryResultPart,
                 Wire.encodeQueryResultPart(item, extraFlags = Wire.FlagIsDelete))
             }
+          out.flush() // one flush per commit
           since = v
           v += 1
         }
@@ -288,7 +296,10 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     * plan, no job), `toLocalIterator` over the full plan otherwise
     * (partitions stream as they finish, driver memory stays O(1 row));
     * then QueryEnd with the row count
-    * (`tcp_connection_handler.go:216-280`). */
+    * (`tcp_connection_handler.go:216-280`). Frames go into the
+    * connection's buffer unflushed — the buffer writes to the socket as
+    * it fills, and [[handle]] flushes once after the QueryEnd, so a
+    * 360-row answer is a few socket writes, not 360. */
   private def streamRows(out: java.io.OutputStream, r: NbqlExecutor#Rows): Unit = {
     val encode = pointEncoder(r.schema)
     var delivered = 0L

@@ -51,18 +51,25 @@ object Wire {
 
   final case class Frame(cmd: Byte, payload: Array[Byte])
 
+  /** Writes one frame — header, payload and CRC — as ONE `write` of one
+    * array, and does not flush: a message (a query's result parts plus
+    * its QueryEnd, an ack, one commit's subscription frames) is flushed
+    * once by the caller at its end, so a buffered stream sends a result
+    * in buffer-sized writes instead of one socket write per row. */
   def writeFrame(out: OutputStream, cmd: Byte, payload: Array[Byte]): Unit = {
-    val header = new Array[Byte](5)
-    header(0) = cmd
-    val len = payload.length + 4 // CRC included in the on-wire length
-    header(1) = (len >>> 24).toByte; header(2) = (len >>> 16).toByte
-    header(3) = (len >>> 8).toByte; header(4) = len.toByte
+    val n = payload.length
+    val len = n + 4 // CRC included in the on-wire length
+    val frame = new Array[Byte](5 + len)
+    frame(0) = cmd
+    frame(1) = (len >>> 24).toByte; frame(2) = (len >>> 16).toByte
+    frame(3) = (len >>> 8).toByte; frame(4) = len.toByte
+    System.arraycopy(payload, 0, frame, 5, n)
     val crc = new java.util.zip.CRC32C
-    crc.update(header); crc.update(payload)
-    out.write(header); out.write(payload)
+    crc.update(frame, 0, 5 + n)
     val c = crc.getValue.toInt
-    out.write(Array((c >>> 24).toByte, (c >>> 16).toByte, (c >>> 8).toByte, c.toByte))
-    out.flush()
+    frame(5 + n) = (c >>> 24).toByte; frame(6 + n) = (c >>> 16).toByte
+    frame(7 + n) = (c >>> 8).toByte; frame(8 + n) = c.toByte
+    out.write(frame)
   }
 
   /** Reads one frame, verifying the checksum (`nbql.go:798-830`). */

@@ -33,12 +33,16 @@ object PubSub {
     * updates that never enter a DataFrame — tombstone DELETE
     * notifications on the TCP subscription path. */
   def matchesDriver(f: SubscriptionFilter, metric: String,
-      tags: Map[String, String]): Boolean = {
-    def pm(s: String, pat: String): Boolean =
-      pat == "*" || (if (pat.endsWith("*")) s.startsWith(pat.dropRight(1)) else s == pat)
-    pm(metric, f.metric) &&
-      f.tags.forall { case (k, pat) => tags.get(k).exists(pm(_, pat)) }
-  }
+      tags: Map[String, String]): Boolean =
+    matchesMetric(f, metric) &&
+      f.tags.forall { case (k, pat) => tags.get(k).exists(patternMatches(_, pat)) }
+
+  /** Whether `metric` matches the filter's metric pattern alone. */
+  def matchesMetric(f: SubscriptionFilter, metric: String): Boolean =
+    patternMatches(metric, f.metric)
+
+  private def patternMatches(s: String, pat: String): Boolean =
+    pat == "*" || (if (pat.endsWith("*")) s.startsWith(pat.dropRight(1)) else s == pat)
 
   /** Apply a subscription to an update stream (works identically on batch
     * and streaming frames). */

@@ -280,12 +280,52 @@ private[tsdb] object Derived {
   }
 
   /** Driver-resident rows sorted by `keys` (one long per row, for
-    * binary-searched slicing). */
-  final case class Resident(rows: Array[Row], keys: Array[Long], schema: StructType)
+    * binary-searched slicing). Raw rows (sorted by (timestamp,
+    * series_key)) also index by series on first use: [[series]] is built
+    * once per Resident and read lock-free after, so rollup rows and
+    * untagged reads never pay for it. */
+  final case class Resident(rows: Array[Row], keys: Array[Long], schema: StructType) {
+    /** One entry per series, in `Utf8Order` of series_key; each holds that
+      * series' rows in time order. A series_key two tag maps encode alike
+      * (a tag value holding the key separator) gets one entry per tag
+      * map, with the same rank. */
+    lazy val series: Array[Series] = {
+      val iKey = schema.fieldIndex("series_key")
+      val iTags = schema.fieldIndex("tags")
+      final class Acc(val key: String, val tags: scala.collection.Map[String, String]) {
+        val rows = Array.newBuilder[Row]; val ts = Array.newBuilder[Long]
+      }
+      val byKey = new java.util.HashMap[String, List[Acc]]()
+      var i = 0
+      while (i < rows.length) {
+        val r = rows(i)
+        val k = r.getString(iKey)
+        val tags = r.getMap[String, String](iTags)
+        val accs = byKey.getOrDefault(k, Nil)
+        val acc = accs.find(_.tags == tags).getOrElse {
+          val a = new Acc(k, tags); byKey.put(k, a :: accs); a
+        }
+        acc.rows += r; acc.ts += keys(i)
+        i += 1
+      }
+      val keysSorted = byKey.keySet().toArray(new Array[String](0)).sorted(Utf8Order)
+      keysSorted.iterator.zipWithIndex.flatMap { case (k, rank) =>
+        byKey.get(k).iterator.map(a =>
+          new Series(rank, a.tags, a.rows.result(), a.ts.result()))
+      }.toArray
+    }
+  }
   object Resident {
     /** Memoized "over the row bound at this epoch" verdict. */
     val TooBig = Resident(null, null, null)
   }
+
+  /** One series of a raw [[Resident]]: its tags, rows and their
+    * timestamps in time order, and `rank`, its series_key's position in
+    * `Utf8Order`, so merging series in (timestamp, series_key) order
+    * compares two longs. */
+  final class Series(val rank: Int, val tags: scala.collection.Map[String, String],
+      val rows: Array[Row], val ts: Array[Long])
 
   /** A rollup spec's persisted frame (None once evicted), with its min
     * stored window_start and driver-resident rows, which outlive it. */

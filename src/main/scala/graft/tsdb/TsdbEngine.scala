@@ -40,7 +40,7 @@ import scala.collection.JavaConverters._
   */
 class TsdbEngine(val spark: SparkSession, val rootDir: String) {
   import TsdbEngine._
-  import Derived.{Resident, ServingMat}
+  import Derived.{Resident, Series, ServingMat}
 
   private val dataDir = s"$rootDir/data"
   private val log = new TxLog(s"$rootDir/_log")
@@ -1386,25 +1386,30 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         loadPoints().getOrElse(TsdbEngine.emptyPoints(spark)), loadTombstones())
     else servingView(p.metric)
 
-  /** One commit's observable changes, for polling subscriptions (S8/ST6
-    * over the TCP transport): PUT rows come from PURE-APPEND commits only
-    * — compaction/restore commits carry `removes` and are storage
-    * rewrites, not new data, so a subscriber must never see them as puts
-    * — and tombstones surface as DELETE updates. Files vacuumed since the
-    * commit are skipped (their rows were rewritten, not new). */
   /** Oldest commit manifest still on disk — the subscription push
     * loop's lag horizon (commits below it were truncated under a
     * checkpoint and can no longer be replayed per-commit). */
   private[graft] def oldestAvailableCommitVersion: Option[Long] =
     log.availableCommitVersions().headOption
 
-  def commitChanges(version: Long): (Option[DataFrame], Seq[TombRow]) = {
+  /** One commit's observable changes, for polling subscriptions (S8/ST6
+    * over the TCP transport): PUT rows come from PURE-APPEND commits only
+    * — compaction/restore commits carry `removes` and are storage
+    * rewrites, not new data, so a subscriber must never see them as puts
+    * — and tombstones surface as DELETE updates. Files vacuumed since the
+    * commit are skipped (their rows were rewritten, not new). A commit
+    * that records its metrics and none of them is `wanted` has no puts
+    * to read, so it costs no frame and no job; its tombstones are still
+    * returned, for the caller's own filter. */
+  def commitChanges(version: Long, wanted: String => Boolean = _ => true)
+      : (Option[DataFrame], Seq[TombRow]) = {
     val c = log.read(version)
     val puts =
       // removes / clearInline / foldedInline mark storage REWRITES
       // (compaction, L0 or inline fold-down) — their rows were already
       // published, never re-delivered as puts
       if (c.removes.nonEmpty || c.clearInline || c.foldedInline.nonEmpty) None
+      else if (c.metrics.nonEmpty && !c.metrics.exists(wanted)) None
       else if (c.inline.isDefined)
         inlineDF(LogSnapshot.empty.copy(
           inline = Vector(InlineCommit(version, c.inline.get, c.metrics, c.dates))))
@@ -2071,7 +2076,12 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     }
 
   /** Serve a raw-scan query from the driver-resident tier: pure Scala
-    * filter/slice over the sorted merged rows — no Spark job, sub-ms.
+    * slices of the sorted merged rows — no Spark job, sub-ms. A tagged
+    * query reads through the per-series index ([[Derived.Resident.series]]):
+    * it picks the series whose tags match, binary-searches each one's
+    * time slice and merges them in (timestamp, series_key) order, so it
+    * touches only the rows it returns, like the reference's seek to one
+    * series key. An untagged query slices the global time order.
     * Aggregating shapes and over-threshold metrics return None and take
     * the Spark path. Semantics mirror `QueryEngine` exactly (inclusive
     * bounds, RELATIVE against the tag-filtered max ts, cursor keyset,
@@ -2082,31 +2092,25 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     // enough that one plan's cost is the honest trade)
     if (p.aggs.nonEmpty || p.isDownsample || p.valueFilters.nonEmpty ||
         TagMatch.isPrefix(p.metric)) return None
-    residentRows(p.metric, None).map { case Resident(all, ts, sch) =>
-      def tagFilter(rs: Array[Row]): Array[Row] =
-        if (p.tags.isEmpty) rs
-        else rs.filter { r =>
-          val tg = r.getAs[scala.collection.Map[String, String]]("tags")
-          p.tags.forall { case (k, v) => TagMatch.matches(v, tg.get(k).orNull) }
-        }
+    residentRows(p.metric, None).map { res =>
       val now = p.nowNs.getOrElse(System.currentTimeMillis() * 1000000L)
+      // (rows in [from, to], the max timestamp RELATIVE resolves against)
+      val (slice, dataMax): ((Long, Long) => Array[Row], Option[Long]) =
+        if (p.tags.isEmpty)
+          ((from, to) => timeSlice(res.rows, res.keys, from, to), res.keys.lastOption)
+        else {
+          val matched = res.series.filter { s =>
+            p.tags.forall { case (k, v) => TagMatch.matches(v, s.tags.get(k).orNull) }
+          }
+          ((from, to) => mergeSeries(matched, from, to),
+            matched.iterator.map(_.ts.last).maxOption)
+        }
       var rows = p.relativeNs match {
         case Some(d) =>
-          // RELATIVE resolves against the tag-filtered max ts — needs the
-          // tagged view first, then the range filter
-          val tagged = tagFilter(all)
-          val dataMax =
-            if (tagged.isEmpty) now
-            else tagged.iterator.map(_.getAs[Long]("timestamp")).max
-          val end = math.min(now, dataMax)
-          val start = end - d
-          tagged.filter { r =>
-            val t = r.getAs[Long]("timestamp"); t >= start && t <= end
-          }
-        case None =>
-          // absolute range: binary-search the slice, tag-filter only it
-          val (startNs, endNs) = (p.startNs, p.endNs.filter(_ != 0L).getOrElse(now))
-          tagFilter(timeSlice(all, ts, startNs, endNs))
+          // RELATIVE resolves against the tag-filtered max ts
+          val end = math.min(now, dataMax.getOrElse(now))
+          slice(end - d, end)
+        case None => slice(p.startNs, p.endNs.filter(_ != 0L).getOrElse(now))
       }
       if (p.order == Descending) rows = rows.reverse
       p.afterKey.foreach { c =>
@@ -2119,9 +2123,35 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         }
       }
       p.limit.foreach(n => rows = rows.take(n.toInt))
-      (rows, sch)
+      (rows, res.schema)
     }
   }
+
+  /** The rows of `series` timestamped in [from, to], in (timestamp,
+    * series_key) order: one series' slice as is, several merged on
+    * (timestamp, rank) — (timestamp, series_key) is unique after the
+    * latest-version merge, so the order is total. */
+  private def mergeSeries(series: Array[Series], from: Long, to: Long): Array[Row] =
+    if (series.length == 1) timeSlice(series(0).rows, series(0).ts, from, to)
+    else {
+      val pos = series.map(s => lowerBound(s.ts, from))
+      val end = series.indices.map(i => math.max(pos(i), upperBound(series(i).ts, to))).toArray
+      val heap = new java.util.PriorityQueue[Int](math.max(1, series.length),
+        (a: Int, b: Int) => {
+          val c = java.lang.Long.compare(series(a).ts(pos(a)), series(b).ts(pos(b)))
+          if (c != 0) c else Integer.compare(series(a).rank, series(b).rank)
+        })
+      series.indices.foreach(i => if (pos(i) < end(i)) heap.add(i))
+      val out = new Array[Row](series.indices.map(i => end(i) - pos(i)).sum)
+      var n = 0
+      while (!heap.isEmpty) {
+        val i = heap.poll()
+        out(n) = series(i).rows(pos(i)); n += 1
+        pos(i) += 1
+        if (pos(i) < end(i)) heap.add(i)
+      }
+      out
+    }
 
   /** Serve an eligible downsample from the driver-resident rollup tier:
     * pure Scala re-aggregation over the collected partials

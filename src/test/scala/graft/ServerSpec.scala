@@ -568,6 +568,26 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  test("client: a 6,000-row TCP answer arrives whole, and the connection serves on") {
+    // frames are written unflushed and the server flushes once per
+    // message: the tail of a large answer must still leave, and the
+    // next request on the same connection must still be answered
+    withClientServer() { port =>
+      val c = NbqlClient.connect("127.0.0.1", port)
+      try {
+        assert(c.pushBulk((0 until 6000).map(i =>
+          ("big", Map("h" -> s"h${i % 2}"), 1000L + i / 2,
+            Map("v" -> FieldValue.ofDouble(i.toDouble))))) == 6000L)
+        val all = c.query("QUERY big FROM 0 TO 99999")
+        assert(all.totalRows == 6000L && all.rows.size == 6000)
+        assert(all.rows.map(_.timestamp) == (0 until 6000).map(1000L + _ / 2))
+        val one = c.query("QUERY big TAGGED (h=\"h1\") FROM 0 TO 99999")
+        assert(one.totalRows == 3000L && one.rows.forall(_.tags == Map("h" -> "h1")))
+        assert(c.query("QUERY big FROM 0 TO 99999 LIMIT 3").rows.size == 3)
+      } finally c.close()
+    }
+  }
+
   test("client: driver-rollup tier answers stream over TCP, value-identical to in process") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tcp_tier").toString
     val ex = new NbqlExecutor(new TsdbEngine(spark, s"$dir/db"))

@@ -837,6 +837,70 @@ class TsdbQuerySpec extends SparkSpec {
     assert(localPage.size == 2 && !localPage.contains(cur.seriesKey))
   }
 
+  test("local tier reads tagged queries through the per-series index, row for row like query") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_series_ix").toString
+    val eng = new TsdbEngine(spark, s"$dir/db")
+    try {
+      // every series shares timestamps 0, 10 ms, ...; h2 stops early, so
+      // its RELATIVE end differs from the metric's
+      def tagged(host: String, dc: String, n: Int, seq0: Long) =
+        series(host, n, step = 10 * M, seq0 = seq0)
+          .map(tp => tp.copy(tags = tp.tags + ("dc" -> dc)))
+      eng.putDF(mkDf(tagged("h1", "a", 30, 0) ++ tagged("h10", "a", 30, 100) ++
+        tagged("h2", "b", 20, 200) ++ tagged("h1x", "b", 30, 300) ++
+        series("h3", 30, step = 10 * M, seq0 = 400)))
+      def same(p: QueryParams, n: Int): Seq[Row] = {
+        val s = eng.serve(PointReq(p))
+        assert(s.tier == "local", s"$p: ${s.tier}")
+        val want = eng.query(p).collect().toSeq
+        assert(s.rows.map(_.toString).toSeq == want.map(_.toString),
+          s"local != query for $p")
+        assert(n < 0 || want.size == n, s"$p: ${want.size} rows")
+        want
+      }
+      val end = Some(1000 * M)
+      same(QueryParams("cpu.usage", Map("host" -> "h2"),
+        startNs = 50 * M, endNs = Some(150 * M)), 11)
+      // two series at equal timestamps: merged in (ts, series_key) order
+      same(QueryParams("cpu.usage", Map("dc" -> "a"), endNs = end), 60)
+      same(QueryParams("cpu.usage", Map("host" -> "h1*"), endNs = end), 90)
+      same(QueryParams("cpu.usage", Map("rack" -> "r1"), endNs = end), 0)
+      same(QueryParams("cpu.usage", Map("dc" -> "b"), startNs = 100 * M,
+        endNs = Some(200 * M), order = Descending), 21)
+      // LIMIT + AFTER: the pages walk the three series exactly once
+      val whole = same(QueryParams("cpu.usage", Map("host" -> "h1*"),
+        startNs = 10 * M, endNs = Some(120 * M), order = Descending), 36)
+      val pages = Iterator.iterate(Option.empty[Cursor] -> Seq.empty[Row]) {
+        case (cur, _) =>
+          val page = same(QueryParams("cpu.usage", Map("host" -> "h1*"),
+            startNs = 10 * M, endNs = Some(120 * M), order = Descending,
+            limit = Some(5), afterKey = cur), -1)
+          (page.lastOption.map(r => Cursor(r.getAs[Long]("timestamp"),
+            r.getAs[String]("series_key"))), page)
+      }.drop(1).takeWhile(_._2.nonEmpty).flatMap(_._2).toSeq
+      assert(pages.map(_.toString) == whole.map(_.toString))
+      // RELATIVE ends at the matched series' own last point: 190 ms for h2
+      same(QueryParams("cpu.usage", Map("host" -> "h2"),
+        relativeNs = Some(35 * M), nowNs = Some(1000 * M)), 4)
+      same(QueryParams("cpu.usage", Map("dc" -> "b"),
+        relativeNs = Some(35 * M), nowNs = Some(1000 * M)), 4)
+      same(QueryParams("cpu.usage", Map("rack" -> "r1"),
+        relativeNs = Some(35 * M), nowNs = Some(1000 * M)), 0)
+    } finally {
+      eng.close()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("ts_ratio rounds like DuckDB: half away from zero on the binary double") {
+    // 81.96 / 32.0 prints as 2.56125 but the double lies just below it:
+    // DuckDB's round gives 2.5612, a decimal HALF_UP round 2.5613
+    val got = Seq((81.96, 32.0), (-81.96, 32.0), (1.0, 8.0), (2.00005, 1.0))
+      .toDF("a", "b")
+      .select(Queries.roundHalfAway4($"a" / $"b").as("r")).as[Double].collect().toSeq
+    assert(got == Seq(2.5612, -2.5612, 0.125, 2.0001))
+  }
+
   test("direct-API ANALYZE rejects out-of-range smoothing rates eagerly") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rate_chk").toString
     val eng = new TsdbEngine(spark, s"$dir/db")

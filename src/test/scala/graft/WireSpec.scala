@@ -55,6 +55,45 @@ class WireSpec extends AnyFunSuite {
     })
   }
 
+  test("writeFrame: one write per frame, no flush, bytes as before") {
+    final class Counting extends java.io.OutputStream {
+      val bytes = new java.io.ByteArrayOutputStream()
+      var writes = 0; var flushes = 0
+      override def write(b: Int): Unit = { writes += 1; bytes.write(b) }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        writes += 1; bytes.write(b, off, len)
+      }
+      override def flush(): Unit = flushes += 1
+    }
+    val item = Wire.PointItem(7L, "cpu", Map("h" -> "a"), 123L,
+      Map("v" -> FieldValue.ofDouble(1.5)), 0L, Nil, isAggregated = false)
+    val frames = Seq(Wire.CmdQueryResultPart -> Wire.encodeQueryResultPart(item),
+      Wire.CmdQueryResultPart -> Wire.encodeQueryResultPart(item.copy(seq = 8L)),
+      Wire.CmdQueryEnd -> Wire.encodeQueryEnd(2L),
+      Wire.CmdManipulate -> Array.emptyByteArray)
+    val out = new Counting
+    frames.foreach { case (cmd, payload) => Wire.writeFrame(out, cmd, payload) }
+    assert(out.writes == frames.size && out.flushes == 0)
+    // the layout spelled out: [type][length BE = payload + 4][payload][crc32c BE]
+    val want = new java.io.ByteArrayOutputStream()
+    frames.foreach { case (cmd, payload) =>
+      val len = payload.length + 4
+      val header = Array(cmd, (len >>> 24).toByte, (len >>> 16).toByte,
+        (len >>> 8).toByte, len.toByte)
+      val crc = new java.util.zip.CRC32C
+      crc.update(header); crc.update(payload)
+      val c = crc.getValue.toInt
+      want.write(header); want.write(payload)
+      want.write(Array((c >>> 24).toByte, (c >>> 16).toByte, (c >>> 8).toByte, c.toByte))
+    }
+    assert(out.bytes.toByteArray.toSeq == want.toByteArray.toSeq)
+    val in = new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(out.bytes.toByteArray))
+    val read = frames.map(_ => Wire.readFrame(in))
+    assert(read.map(_.cmd) == frames.map(_._1))
+    assert(Wire.decodeQueryResultPart(read(1).payload)._1 == item.copy(seq = 8L))
+  }
+
   test("query result part round-trips raw and aggregated items") {
     val raw = Wire.PointItem(7L, "cpu", Map("h" -> "a"), 123L,
       Map("v" -> FieldValue.ofDouble(1.5), "s" -> FieldValue.ofString("x")),

@@ -75,9 +75,16 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
   }
 
   private def fail(payload: Array[Byte]): Nothing = {
-    val i = Wire.dis(payload)
+    val i = new Wire.Reader(payload)
     val code = i.readUnsignedShort()
-    throw new NbqlApiError(code, Wire.readString(i))
+    throw new NbqlApiError(code, i.readString())
+  }
+
+  /** The count a QueryEnd or Manipulate payload carries after its status. */
+  private def countOf(payload: Array[Byte]): Long = {
+    val i = new Wire.Reader(payload)
+    i.readByte() // status
+    i.readLong()
   }
 
   /** Execute an NBQL statement, with optional `?` parameter substitution.
@@ -85,7 +92,7 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
     * an empty-row [[QueryResult]] whose `totalRows` is rows affected. */
   def query(q: String, params: Any*): QueryResult = synchronized {
     val text = if (params.isEmpty) q else formatQuery(q, params)
-    send(Wire.CmdQuery, Wire.withDOS(Wire.writeString(_, text)))
+    send(Wire.CmdQuery, Wire.build(_.string(text)))
     val rows = Seq.newBuilder[Wire.PointItem]
     var cursor = ""
     while (true) {
@@ -97,13 +104,9 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
           rows ++= items
           if (c.nonEmpty) cursor = c
         case Wire.CmdQueryEnd =>
-          val i = Wire.dis(frame.payload)
-          i.readByte() // status
-          return QueryResult(rows.result(), i.readLong(), cursor)
+          return QueryResult(rows.result(), countOf(frame.payload), cursor)
         case Wire.CmdManipulate =>
-          val i = Wire.dis(frame.payload)
-          i.readByte() // status
-          return QueryResult(Nil, i.readLong(), "")
+          return QueryResult(Nil, countOf(frame.payload), "")
         case other => throw new NbqlApiError(500,
           s"unexpected frame 0x${"%02x".format(other)} during query")
       }
@@ -132,13 +135,14 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
 
   private def manipulate(cmd: Byte, payload: Array[Byte]): Long = synchronized {
     send(cmd, payload)
+    rowsAffected()
+  }
+
+  private def rowsAffected(): Long = {
     val frame = Wire.readFrame(in)
     frame.cmd match {
       case Wire.CmdError => fail(frame.payload)
-      case Wire.CmdManipulate =>
-        val i = Wire.dis(frame.payload)
-        i.readByte() // status
-        i.readLong() // rows affected
+      case Wire.CmdManipulate => countOf(frame.payload)
       case other => throw new NbqlApiError(500,
         s"unexpected frame 0x${"%02x".format(other)} for push")
     }
@@ -164,9 +168,8 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
       frame.cmd match {
         case Wire.CmdError => fail(frame.payload)
         case Wire.CmdQueryResultPart =>
-          val isDelete = (frame.payload(1) & Wire.FlagIsDelete) != 0
           val (items, _) = Wire.decodeQueryResultParts(frame.payload)
-          SubscriptionUpdate(items.head, isDelete)
+          SubscriptionUpdate(items.head, (frame.payload(1) & Wire.FlagIsDelete) != 0)
         case other => throw new NbqlApiError(500,
           s"unexpected frame 0x${"%02x".format(other)} on subscription")
       }
@@ -182,10 +185,7 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
     val frame = Wire.readFrame(in)
     frame.cmd match {
       case Wire.CmdError => fail(frame.payload)
-      case Wire.CmdManipulate =>
-        val i = Wire.dis(frame.payload)
-        i.readByte() // status
-        new Subscription(i.readLong())
+      case Wire.CmdManipulate => new Subscription(countOf(frame.payload))
       case other => throw new NbqlApiError(500,
         s"unexpected frame 0x${"%02x".format(other)} for subscribe")
     }
@@ -197,15 +197,18 @@ final class NbqlClient private (sock: Socket) extends AutoCloseable {
     manipulate(Wire.CmdPush, Wire.encodePush(metric, tags, timestampNs, fields))
 
   /** Binary bulk push (CmdPushs — the high-volume fast path). Points are
-    * (metric, tags, timestampNs, fields). Returns rows affected. */
+    * (metric, tags, timestampNs, fields), encoded in place into the one
+    * frame of the request ([[Wire.FrameBuilder]]). Returns rows affected. */
   def pushBulk(points: Seq[(String, Map[String, String], Long, Map[String, FieldValue])]): Long =
-    manipulate(Wire.CmdPushs, Wire.withDOS { o =>
-      o.writeInt(points.size)
+    synchronized {
+      val b = new Wire.FrameBuilder().frame(Wire.CmdPushs).int32(points.size)
       points.foreach { case (metric, tags, ts, fields) =>
-        Wire.writeString(o, metric); Wire.writeTags(o, tags)
-        o.writeLong(ts); Wire.writeFields(o, fields)
+        Wire.writePush(b, metric, tags, ts, fields)
       }
-    })
+      b.send(out)
+      out.flush()
+      rowsAffected()
+    }
 
   def close(): Unit = {
     try sock.close() catch { case _: Exception => () }
@@ -234,9 +237,9 @@ object NbqlClient {
       val payload = new Array[Byte](plen); in.readFully(payload)
       if (ver != 1 || op != Wire.AuthResponseOp)
         throw new EOFException("malformed auth response")
-      val pi = Wire.dis(payload)
+      val pi = new Wire.Reader(payload)
       val status = pi.readByte()
-      val message = Wire.readString(pi)
+      val message = pi.readString()
       if (status != Wire.AuthOk) {
         sock.close()
         throw new NbqlApiError(401, message)

@@ -31,6 +31,9 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     java.net.InetAddress.getByName("127.0.0.1"))
   private val pool = Executors.newCachedThreadPool()
   @volatile private var running = false
+  /** Open connections, so [[stop]] can close them: a thread blocked in a
+    * socket read ignores the pool's interrupt. */
+  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
 
   /** Liveness fallback for live subscriptions (S8 over TCP): the push
     * loop normally wakes on [[commitSignal]] the instant a commit lands,
@@ -65,7 +68,10 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
         try {
           val sock = server.accept()
           sock.setTcpNoDelay(true) // see NbqlClient.connect — small frames
-          pool.submit(new Runnable { def run(): Unit = handle(sock) })
+          conns.add(sock)
+          // a stop() that ran since accept returned may have missed it
+          if (!running) closeQuietly(sock)
+          else pool.submit(new Runnable { def run(): Unit = handle(sock) })
           ()
         } catch { case _: Exception if !running => () case _: Exception => () }
       }
@@ -73,13 +79,20 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     ()
   }
 
+  /** Stops accepting, closes every open connection — a handler blocked
+    * reading its next frame sees the socket close at once — and
+    * interrupts the handlers (a subscription waiting for a commit). */
   def stop(): Unit = {
     running = false
     executor.engine.hooks.unregister(
       graft.hooks.EventType.PostManifestWrite, commitListener)
     try server.close() catch { case _: Exception => () }
+    conns.forEach(closeQuietly(_))
     pool.shutdownNow(); ()
   }
+
+  private def closeQuietly(sock: Socket): Unit =
+    try sock.close() catch { case _: Exception => () }
 
   private def requiredRole(st: Statement): String = st match {
     case _: QueryStatement | _: ShowStatement => Auth.RoleReader
@@ -100,8 +113,8 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
           val ok =
             if (ver != 1 || op != Wire.AuthRequestOp) None
             else {
-              val pi = Wire.dis(payload)
-              auth.authenticate(Wire.readString(pi), Wire.readString(pi))
+              val pi = new Wire.Reader(payload)
+              auth.authenticate(pi.readString(), pi.readString())
             }
           ok match {
             case None =>
@@ -128,28 +141,18 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
           out.flush()
         } catch { case _: Exception => () }
     } finally {
-      try sock.close() catch { case _: Exception => () }
+      conns.remove(sock)
+      closeQuietly(sock)
     }
   }
 
   private def dispatch(frame: Wire.Frame, out: java.io.OutputStream,
       user: Option[Auth.UserRecord]): Unit = {
     val stmtE: Either[String, Statement] = frame.cmd match {
-      case Wire.CmdPush =>
-        val i = Wire.dis(frame.payload)
-        val metric = Wire.readString(i); val tags = Wire.readTags(i)
-        val ts = i.readLong(); val fields = Wire.readFields(i)
-        Right(PushStatement(metric, tags, fields, Some(ts)))
-      case Wire.CmdPushs =>
-        val i = Wire.dis(frame.payload)
-        val n = i.readInt()
-        Right(PushsStatement((0 until n).map { _ =>
-          val metric = Wire.readString(i); val tags = Wire.readTags(i)
-          val ts = i.readLong(); val fields = Wire.readFields(i)
-          PushStatement(metric, tags, fields, Some(ts))
-        }))
+      case Wire.CmdPush => Right(GraftTcpServer.readPush(new Wire.Reader(frame.payload)))
+      case Wire.CmdPushs => Right(GraftTcpServer.decodePushs(frame.payload))
       case Wire.CmdQuery =>
-        NbqlParser.parse(Wire.readString(Wire.dis(frame.payload)))
+        NbqlParser.parse(new Wire.Reader(frame.payload).readString())
       case Wire.CmdSubscribe =>
         // long-running: takes over the connection (like the reference's
         // gRPC Subscribe stream) — never returns to the dispatch loop
@@ -160,8 +163,8 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
           Wire.writeFrame(out, Wire.CmdError, Wire.encodeError(403,
             s"user '${user.map(_.username).getOrElse("")}' is not authorized"))
         else {
-          val i = Wire.dis(frame.payload)
-          streamSubscription(out, Wire.readString(i), Wire.readTags(i))
+          val i = new Wire.Reader(frame.payload)
+          streamSubscription(out, i.readString(), i.readTags())
         }
         return
       case other => Left(s"unknown command type: 0x${"%02x".format(other)}")
@@ -200,10 +203,12 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     * poll the commit log and push every LATER commit's matching changes as
     * QueryResultPart frames in commit order — pure-append commits as PUT
     * rows (seq order), tombstones as DELETE frames ([[Wire.FlagIsDelete]],
-    * fields carry delete_kind/start_ns/end_ns). The ack and each
-    * commit's frames are flushed as one message. A commit of other
-    * metrics only is skipped without reading it. Runs until the client
-    * disconnects (a push fails) or the server stops. */
+    * fields carry delete_kind/start_ns/end_ns). Every frame is encoded in
+    * place in the subscription's one [[Wire.FrameBuilder]] — retained
+    * points from their own maps, Spark-read rows from the `Row` — and
+    * the ack and each commit's frames are flushed as one message. A
+    * commit of other metrics only is skipped without reading it. Runs
+    * until the client disconnects (a push fails) or the server stops. */
   private def streamSubscription(out: java.io.OutputStream,
       metricPat: String, tagPats: Map[String, String]): Unit = {
     import graft.streaming.PubSub
@@ -213,6 +218,7 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     Wire.writeFrame(out, Wire.CmdManipulate,
       Wire.encodeManipulateResponse(since, Nil))
     out.flush()
+    val b = new Wire.FrameBuilder()
     try {
       while (running) {
         val tip = engine.sync()
@@ -227,10 +233,8 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
             case Some(pts) =>
               pts.sortBy(_._2).foreach { case (p, seq) =>
                 if (PubSub.matchesDriver(filter, p.metric, p.tags))
-                  Wire.writeFrame(out, Wire.CmdQueryResultPart,
-                    Wire.encodeQueryResultPart(Wire.PointItem(seq, p.metric,
-                      p.tags, p.timestamp, p.fields, 0L, Nil,
-                      isAggregated = false)))
+                  Wire.writeRawPart(b.frame(Wire.CmdQueryResultPart), seq,
+                    p.metric, p.tags, p.timestamp, p.fields).send(out)
               }
               Nil // an append commit never carries tombstones
             case None =>
@@ -257,23 +261,22 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
                 // instead of materializing the whole matched set on the
                 // driver (the same seam the query result path uses)
                 val it = matched.toLocalIterator()
-                val encode = pointEncoder(matched.schema)
-                while (it.hasNext)
-                  Wire.writeFrame(out, Wire.CmdQueryResultPart,
-                    Wire.encodeQueryResultPart(encode(it.next())))
+                val write = GraftTcpServer.rowWriter(matched.schema)
+                while (it.hasNext) {
+                  write(b.frame(Wire.CmdQueryResultPart), it.next())
+                  b.send(out)
+                }
               }
               ts
           }
           tombs.filter(t => PubSub.matchesDriver(filter, t.metric, t.tags))
             .foreach { t =>
-              val item = Wire.PointItem(t.seq, t.metric, t.tags, t.fromNs,
-                Map(
+              Wire.writeRawPart(b.frame(Wire.CmdQueryResultPart), t.seq,
+                t.metric, t.tags, t.fromNs, Map(
                   "delete_kind" -> FieldValue.ofString(t.kind),
                   "start_ns" -> FieldValue.ofLong(t.fromNs),
                   "end_ns" -> FieldValue.ofLong(t.toNs)),
-                0L, Nil, isAggregated = false)
-              Wire.writeFrame(out, Wire.CmdQueryResultPart,
-                Wire.encodeQueryResultPart(item, extraFlags = Wire.FlagIsDelete))
+                extraFlags = Wire.FlagIsDelete).send(out)
             }
           out.flush() // one flush per commit
           since = v
@@ -296,19 +299,22 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     * plan, no job), `toLocalIterator` over the full plan otherwise
     * (partitions stream as they finish, driver memory stays O(1 row));
     * then QueryEnd with the row count
-    * (`tcp_connection_handler.go:216-280`). Frames go into the
-    * connection's buffer unflushed — the buffer writes to the socket as
-    * it fills, and [[handle]] flushes once after the QueryEnd, so a
-    * 360-row answer is a few socket writes, not 360. */
+    * (`tcp_connection_handler.go:216-280`). Each frame is encoded in
+    * place in the result's one [[Wire.FrameBuilder]], a raw point row
+    * straight from its `Row` ([[GraftTcpServer.rowWriter]]). Frames go
+    * into the connection's buffer unflushed — the buffer writes to the
+    * socket as it fills, and [[handle]] flushes once after the QueryEnd,
+    * so a 360-row answer is a few socket writes, not 360. */
   private def streamRows(out: java.io.OutputStream, r: NbqlExecutor#Rows): Unit = {
-    val encode = pointEncoder(r.schema)
+    val write = GraftTcpServer.rowWriter(r.schema)
+    val b = new Wire.FrameBuilder()
     var delivered = 0L
     var last: Option[Row] = None
     val it = r.rowIterator()
     while (it.hasNext) {
       val row = it.next()
-      Wire.writeFrame(out, Wire.CmdQueryResultPart,
-        Wire.encodeQueryResultPart(encode(row)))
+      write(b.frame(Wire.CmdQueryResultPart), row)
+      b.send(out)
       delivered += 1
       last = Some(row)
     }
@@ -317,47 +323,93 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     // on the LAST result part per `nbql.go:137-143`. Simpler and
     // compatible: a final empty result-part carrying only the cursor.
     r.nextCursor(delivered, last).foreach { c =>
-      Wire.writeFrame(out, Wire.CmdQueryResultPart, Wire.withDOS { o =>
-        o.writeByte(Wire.StatusDataRow); o.writeByte(0)
-        Wire.writeString(o, c); o.writeInt(0)
-      })
+      Wire.writePartHead(b.frame(Wire.CmdQueryResultPart), 0, c, items = 0).send(out)
     }
-    Wire.writeFrame(out, Wire.CmdQueryEnd, Wire.encodeQueryEnd(delivered))
+    b.frame(Wire.CmdQueryEnd).int8(Wire.StatusDataEnd).int64(delivered).string("")
+      .send(out)
+  }
+}
+
+object GraftTcpServer {
+
+  /** One PUSH point (PUSHS repeats it): metric, tags, ts, fields. */
+  private[graft] def readPush(i: Wire.Reader): PushStatement = {
+    val metric = i.readString(); val tags = i.readTags(); val ts = i.readLong()
+    PushStatement(metric, tags, i.readFields(), Some(ts))
   }
 
-  /** Row → wire item for one result schema: column indices are resolved
-    * ONCE per result and every row is read BY POSITION, as the HTTP
-    * renderer does — the driver-resident tiers hand back schema-less
-    * rows, where name lookup throws. */
+  /** PUSHS payload: int32 point count, then the points. The count is
+    * claimed, not trusted — a short payload ends in `EOFException`; a
+    * negative one is an empty batch. */
+  private[graft] def decodePushs(payload: Array[Byte]): PushsStatement = {
+    val i = new Wire.Reader(payload)
+    val n = i.readInt()
+    val points = Vector.newBuilder[PushStatement]
+    var k = 0
+    while (k < n) { points += readPush(i); k += 1 }
+    PushsStatement(points.result())
+  }
+
+  /** Writes a result row of `schema` as one QueryResultPart payload into
+    * a builder whose frame is open. Column indices are resolved ONCE per
+    * result and every row is read BY POSITION, as the HTTP renderer does
+    * — the driver-resident tiers hand back schema-less rows, where name
+    * lookup throws. A raw point row (metric, tags, timestamp, fields,
+    * seq) is encoded straight from the `Row`'s columns, with no item or
+    * map built; aggregated and SHOW-style rows go through
+    * [[pointEncoder]]. */
+  private[graft] def rowWriter(schema: StructType): (Wire.FrameBuilder, Row) => Unit = {
+    val names = schema.fieldNames
+    val iFields = names.indexOf("fields")
+    if (iFields < 0) {
+      val encode = pointEncoder(schema)
+      (b, row) => { Wire.writeQueryResultPart(b, encode(row)); () }
+    } else {
+      val Seq(iMetric, iTags, iTs, iSeq) =
+        Seq("metric", "tags", "timestamp", "seq").map(names.indexOf(_))
+      val value = schema(iFields).dataType.asInstanceOf[MapType].valueType
+        .asInstanceOf[StructType]
+      val Seq(iD, iL, iS, iB) = Seq("d", "l", "s", "b").map(value.fieldIndex)
+      (b, row) => {
+        Wire.writePartHead(b, 0, "")
+        b.int64(if (iSeq >= 0) row.getLong(iSeq) else 0L)
+        b.string(if (iMetric < 0 || row.isNullAt(iMetric)) "" else row.getString(iMetric))
+        if (iTags < 0 || row.isNullAt(iTags)) b.int16(0)
+        else b.tags(row.getMap[String, String](iTags))
+        b.int64(row.getLong(iTs))
+        // the FieldValues block, in Wire.FrameBuilder.fields' layout
+        val mark = b.beginBlock()
+        if (row.isNullAt(iFields)) b.int16(0)
+        else {
+          val fields = row.getMap[String, Row](iFields)
+          b.int16(fields.size)
+          fields.foreachEntry { (k, v) =>
+            b.string(k)
+            if (v == null) b.nilValue()
+            else if (!v.isNullAt(iD)) b.doubleValue(v.getDouble(iD))
+            else if (!v.isNullAt(iL)) b.longValue(v.getLong(iL))
+            else if (!v.isNullAt(iS)) b.stringValue(v.getString(iS))
+            else if (!v.isNullAt(iB)) b.boolValue(v.getBoolean(iB))
+            else b.nilValue()
+          }
+        }
+        b.endBlock(mark); ()
+      }
+    }
+  }
+
+  /** Row → wire item for a result without a `fields` column, by
+    * position like [[rowWriter]]. */
   private def pointEncoder(schema: StructType): Row => Wire.PointItem = {
     val names = schema.fieldNames
-    val Seq(iMetric, iTags, iTs, iFields, iSeq, iWs) =
-      Seq("metric", "tags", "timestamp", "fields", "seq", "window_start")
-        .map(names.indexOf(_))
+    val Seq(iMetric, iTags, iTs, iWs) =
+      Seq("metric", "tags", "timestamp", "window_start").map(names.indexOf(_))
     def metricOf(row: Row): String =
       if (iMetric < 0 || row.isNullAt(iMetric)) "" else row.getString(iMetric)
     def tagsOf(row: Row): Map[String, String] =
       if (iTags < 0 || row.isNullAt(iTags)) Map.empty
       else row.getMap[String, String](iTags).toMap
-    if (iFields >= 0) {
-      // raw point row: metric, tags, timestamp, fields, seq
-      val value = schema(iFields).dataType.asInstanceOf[MapType].valueType
-        .asInstanceOf[StructType]
-      val Seq(iD, iL, iS, iB) = Seq("d", "l", "s", "b").map(value.fieldIndex)
-      def opt[A](v: Row, i: Int)(get: Int => A): Option[A] =
-        if (v.isNullAt(i)) None else Some(get(i))
-      row => {
-        val fv =
-          if (row.isNullAt(iFields)) Map.empty[String, FieldValue]
-          else row.getMap[String, Row](iFields).iterator.map { case (k, v) =>
-            k -> (if (v == null) FieldValue.NilValue
-            else FieldValue(opt(v, iD)(v.getDouble), opt(v, iL)(v.getLong),
-              opt(v, iS)(v.getString), opt(v, iB)(v.getBoolean)))
-          }.toMap
-        Wire.PointItem(if (iSeq >= 0) row.getLong(iSeq) else 0L, metricOf(row),
-          tagsOf(row), row.getLong(iTs), fv, 0L, Nil, isAggregated = false)
-      }
-    } else if (iWs >= 0 || iTs >= 0) {
+    if (iWs >= 0 || iTs >= 0) {
       // aggregated row: every numeric column past the keys is an aggregate
       val iW = if (iWs >= 0) iWs else iTs
       val skip = Set("metric", "tags", "series_key", "window_start", "window_end",

@@ -325,30 +325,33 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         p.fields.map { case (k, v) => k -> StoredValue(v.d, v.l, v.s, v.b) },
         nextSeq())
     }
-    val committedVersion =
-      if (points.size <= inlineMaxRows && points.forall(InlineRows.encodable)) {
-        // WAL shape for the wire PUSH/PUSHS path: the rows ride INSIDE
-        // the commit manifest — durable at the rename, NO Spark job, no
-        // data file. A serial putBatch of 500 rows paid ~330 ms of
-        // plan+job submission for a one-task parquet write (ProbeC10Ingest,
-        // SCALE.md r13); the inline commit pays serialization only.
-        // compactInline() folds accumulated blobs into the clustered
-        // layout, like the reference's memtable flush (`wal/wal.go`).
-        commitInline(points.lazyZip(rows).map((p, r) => (p, r.seq)).toSeq)
-      } else {
-        // big/odd batches: staged clustered write. Size the shuffle to
-        // the batch's actual (metric, day) spread — a backfill spanning
-        // many days fans out (see commitAppend's AQE note)
-        val dirs = points.iterator
-          .map(p => (p.metric, Math.floorDiv(p.timestamp, TsdbEngine.DayNs)))
-          .toSet.size
-        commitAppend(rows.toDF(), txn = None, dirHint = Some(dirs))
-      }
-    if (committedVersion > 0 && points.size <= recentPutsMaxBatch)
-      derived.retain(committedVersion,
-        points.lazyZip(rows).map((p, r) => (p, r.seq)).toSeq,
-        points.iterator.map(pointBytes).sum,
-        recentPutsMaxCommits, recentPutsMaxBytes)
+    val stamped = points.lazyZip(rows).map((p, r) => (p, r.seq)).toSeq
+    // the subscription ring gets the commit's rows before subscribers
+    // hear of it (inline commits retain inside commitInline, ahead of the
+    // PostManifestWrite announcement): a push loop that found the
+    // version missing would replay it with Spark jobs
+    def retain(version: Long): Unit =
+      if (version > 0 && points.size <= recentPutsMaxBatch)
+        derived.retain(version, stamped, points.iterator.map(pointBytes).sum,
+          recentPutsMaxCommits, recentPutsMaxBytes)
+    if (points.size <= inlineMaxRows && points.forall(InlineRows.encodable)) {
+      // WAL shape for the wire PUSH/PUSHS path: the rows ride INSIDE
+      // the commit manifest — durable at the rename, NO Spark job, no
+      // data file. A serial putBatch of 500 rows paid ~330 ms of
+      // plan+job submission for a one-task parquet write (ProbeC10Ingest,
+      // SCALE.md r13); the inline commit pays serialization only.
+      // compactInline() folds accumulated blobs into the clustered
+      // layout, like the reference's memtable flush (`wal/wal.go`).
+      commitInline(stamped, retain)
+    } else {
+      // big/odd batches: staged clustered write. Size the shuffle to
+      // the batch's actual (metric, day) spread — a backfill spanning
+      // many days fans out (see commitAppend's AQE note)
+      val dirs = points.iterator
+        .map(p => (p.metric, Math.floorDiv(p.timestamp, TsdbEngine.DayNs)))
+        .toSet.size
+      retain(commitAppend(rows.toDF(), txn = None, dirHint = Some(dirs)))
+    }
     if (hooks.hasListeners(EventType.OnSeriesCreate))
       points.foreach { p =>
         val key = SeriesKey.of(p.metric, p.tags)
@@ -545,14 +548,16 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     * the small L0/inline ones. */
   @volatile var foldVacuumGraceMs: Long = 600000L
 
-  /** WAL-style commit: the rows ride in the manifest itself. */
-  private def commitInline(pts: Seq[(DataPoint, Long)]): Long = {
+  /** WAL-style commit: the rows ride in the manifest itself.
+    * `landed` runs with the new version after the log commit and before
+    * [[committed]] announces it. */
+  private def commitInline(pts: Seq[(DataPoint, Long)], landed: Long => Unit): Unit = {
     val blob = InlineRows.encode(pts)
     val metrics = pts.map(_._1.metric).distinct
     val dates = pts.map(p => dayStr(p._1.timestamp)).distinct
     val hwm = seqCounter.get()
-    val landed = log.commit(v => LogCommit(v, inline = Some(blob),
-      metrics = metrics, dates = dates, maxSeq = hwm))
+    landed(log.commit(v => LogCommit(v, inline = Some(blob),
+      metrics = metrics, dates = dates, maxSeq = hwm)).version)
     committed()
     if (snap.inline.size > inlineCompactThreshold) {
       if (snap.inline.size >= inlineStallThreshold) {
@@ -566,7 +571,6 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         finally foldLock.unlock()
       } else foldOnce(compactInlineImpl(writePath = true))
     }
-    landed.version
   }
 
   /** Decode a snapshot's live inline commits into one canonical frame

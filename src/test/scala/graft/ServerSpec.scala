@@ -316,7 +316,7 @@ class ServerSpec extends SparkSpec {
         Map("v" -> FieldValue.ofDouble(1.5), "n" -> FieldValue.ofLong(7))))
       val ack1 = Wire.readFrame(in)
       assert(ack1.cmd == Wire.CmdManipulate)
-      val a1 = Wire.dis(ack1.payload)
+      val a1 = new Wire.Reader(ack1.payload)
       assert(a1.readByte() == Wire.StatusOk && a1.readLong() == 1L)
 
       // PUSHS two points as ONE batch frame
@@ -328,7 +328,7 @@ class ServerSpec extends SparkSpec {
         }
       }
       Wire.writeFrame(out, Wire.CmdPushs, items)
-      val ack2 = Wire.dis(Wire.readFrame(in).payload)
+      val ack2 = new Wire.Reader(Wire.readFrame(in).payload)
       assert(ack2.readByte() == Wire.StatusOk && ack2.readLong() == 2L)
 
       // QUERY streams one frame per row + end trailer with total
@@ -355,7 +355,7 @@ class ServerSpec extends SparkSpec {
         frame = Wire.readFrame(in)
       }
       assert(frame.cmd == Wire.CmdQueryEnd)
-      val end = Wire.dis(frame.payload)
+      val end = new Wire.Reader(frame.payload)
       assert(end.readByte() == Wire.StatusDataEnd && end.readLong() == 2L)
       assert(cursor.nonEmpty, "LIMITed page must carry a next cursor")
     }
@@ -382,8 +382,8 @@ class ServerSpec extends SparkSpec {
         Wire.withDOS(o => Wire.writeString(o, "FETCH nope")))
       val err = Wire.readFrame(in)
       assert(err.cmd == Wire.CmdError)
-      val e = Wire.dis(err.payload)
-      assert(e.readShort() == 400 && Wire.readString(e).nonEmpty)
+      val e = new Wire.Reader(err.payload)
+      assert(e.readShort() == 400 && e.readString().nonEmpty)
     }
   }
 
@@ -401,7 +401,7 @@ class ServerSpec extends SparkSpec {
       val plen = in.readUnsignedShort()
       val payload = new Array[Byte](plen); in.readFully(payload)
       assert(ver == 1 && op == Wire.AuthResponseOp)
-      assert(Wire.dis(payload).readByte() == Wire.AuthError)
+      assert(new Wire.Reader(payload).readByte() == Wire.AuthError)
     }
 
     // good credentials: reads flow, writes are denied by role
@@ -410,7 +410,7 @@ class ServerSpec extends SparkSpec {
       in.readByte(); in.readByte()
       val plen = in.readUnsignedShort()
       val payload = new Array[Byte](plen); in.readFully(payload)
-      assert(Wire.dis(payload).readByte() == Wire.AuthOk)
+      assert(new Wire.Reader(payload).readByte() == Wire.AuthOk)
 
       Wire.writeFrame(out, Wire.CmdPush, Wire.encodePush(
         "m", Map.empty, 1L, Map("v" -> FieldValue.ofDouble(1.0))))
@@ -986,6 +986,80 @@ class ServerSpec extends SparkSpec {
         "the subscription ring answered for the restored log's version 2")
       s.close()
     } finally {
+      try sub.close() catch { case _: Exception => () }
+      srv.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("subscription ring: driver-side PUSHS reach a TCP subscriber with no Spark job, each once") {
+    import graft.nbql.{PushStatement, PushsStatement}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft_subjobs").toString
+    val eng = new TsdbEngine(spark, s"$dir/db")
+    val ex = new NbqlExecutor(eng)
+    val srv = new GraftTcpServer(ex, port = 0)
+    srv.start()
+    val sub = NbqlClient.connect("127.0.0.1", srv.boundPort)
+    def push(host: String, ts: Long, v: Double) =
+      PushStatement("ring.p", Map("host" -> host), Map("v" -> FieldValue.ofDouble(v)), Some(ts))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    try {
+      val s = sub.subscribe("ring.p", Map("host" -> "w00*"))
+      spark.sparkContext.addSparkListener(listener)
+      // 60 inline commits, below the fold threshold: each is announced to
+      // the push loop only once the subscription ring holds its rows
+      (0 until 60).foreach { i =>
+        assert(ex.run(PushsStatement(Seq(push("w001", 1000L + i, i.toDouble),
+          push("x1", 1000L + i, -1.0)))).isRight)
+      }
+      val got = (0 until 60).map(_ => s.next())
+      assert(got.map(_.item.fields("v")) == (0 until 60).map(i => FieldValue.ofDouble(i.toDouble)))
+      // the next update is a later sentinel: nothing was delivered twice
+      assert(ex.run(PushsStatement(Seq(push("w002", 99999L, 99.0)))).isRight)
+      assert(s.next().item.timestamp == 99999L)
+      Thread.sleep(500) // the listener bus delivers job events asynchronously
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran for ring-retained commits")
+      s.close()
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      try sub.close() catch { case _: Exception => () }
+      srv.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("TCP: stop() closes idle and subscribed connections at once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tcpstop").toString
+    val eng = new TsdbEngine(spark, s"$dir/db")
+    val srv = new GraftTcpServer(new NbqlExecutor(eng), port = 0)
+    srv.start()
+    val idle = new java.net.Socket("127.0.0.1", srv.boundPort)
+    val sub = NbqlClient.connect("127.0.0.1", srv.boundPort, None, 5000)
+    try {
+      idle.setSoTimeout(5000)
+      // one round trip: the idle connection's handler now waits on its next frame
+      Wire.writeFrame(idle.getOutputStream, Wire.CmdPush, Wire.encodePush(
+        "stop.m", Map.empty, 1L, Map("v" -> FieldValue.ofDouble(1.0))))
+      assert(Wire.readFrame(new DataInputStream(idle.getInputStream)).cmd == Wire.CmdManipulate)
+      val s = sub.subscribe("stop.*", Map.empty)
+      val t0 = System.nanoTime()
+      srv.stop()
+      // EOF or a reset, not the 5 s read timeout
+      val idleEnd = scala.util.Try(idle.getInputStream.read())
+      assert(idleEnd == scala.util.Success(-1) ||
+        idleEnd.failed.toOption.exists(e => e.isInstanceOf[java.io.IOException] &&
+          !e.isInstanceOf[java.net.SocketTimeoutException]), s"idle client saw $idleEnd")
+      val subEnd = scala.util.Try(s.next())
+      assert(subEnd.failed.toOption.exists(e => e.isInstanceOf[java.io.IOException] &&
+        !e.isInstanceOf[java.net.SocketTimeoutException]), s"subscriber saw $subEnd")
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 1000.0, f"connections outlived stop() by $ms%.0f ms")
+    } finally {
+      try idle.close() catch { case _: Exception => () }
       try sub.close() catch { case _: Exception => () }
       srv.stop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

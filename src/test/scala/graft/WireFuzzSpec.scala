@@ -3,6 +3,7 @@ package graft
 import graft.model.FieldValue
 import graft.nbql.NbqlExecutor
 import graft.server.{GraftTcpServer, Wire}
+import graft.nbql.PushsStatement
 import graft.tsdb.TsdbEngine
 import java.io.{DataInputStream, EOFException, IOException}
 import java.net.Socket
@@ -60,7 +61,7 @@ class WireFuzzSpec extends SparkSpec {
         "fuzz.live", Map("h" -> "a"), ts, Map("v" -> FieldValue.ofDouble(1.0))))
       val ack = Wire.readFrame(new DataInputStream(sock.getInputStream))
       assert(ack.cmd == Wire.CmdManipulate, "server must keep serving")
-      val a = Wire.dis(ack.payload)
+      val a = new Wire.Reader(ack.payload)
       assert(a.readByte() == Wire.StatusOk && a.readLong() == 1L)
     } finally sock.close()
   }
@@ -192,10 +193,10 @@ class WireFuzzSpec extends SparkSpec {
     // readFields: the block-length guard (valid-CRC + hostile length is
     // unreachable by the checksum — this is the guard's only defense)
     val hostileBlock = Wire.withDOS { o => o.writeInt(Int.MaxValue); o.write(Array[Byte](1, 2)) }
-    val e1 = intercept[IOException](Wire.readFields(Wire.dis(hostileBlock)))
+    val e1 = intercept[IOException](new Wire.Reader(hostileBlock).readFields())
     assert(e1.getMessage.contains("bad field block length"))
     val negBlock = Wire.withDOS(o => o.writeInt(-1))
-    val e2 = intercept[IOException](Wire.readFields(Wire.dis(negBlock)))
+    val e2 = intercept[IOException](new Wire.Reader(negBlock).readFields())
     assert(e2.getMessage.contains("bad field block length"))
     // a hostile string-value length INSIDE a correctly-sized block
     val inner = Wire.withDOS { b =>
@@ -203,14 +204,14 @@ class WireFuzzSpec extends SparkSpec {
       b.writeInt(Int.MaxValue); b.write("xy".getBytes("UTF-8"))
     }
     val block = Wire.withDOS { o => o.writeInt(inner.length); o.write(inner) }
-    val e3 = intercept[IOException](Wire.readFields(Wire.dis(block)))
+    val e3 = intercept[IOException](new Wire.Reader(block).readFields())
     assert(e3.getMessage.contains("bad string value length"))
     // readString / readTags on short input fail with EOF, never allocate
     // past the claimed 64 KiB cap (uint16 prefix bounds them by design)
-    intercept[EOFException](Wire.readString(Wire.dis(
-      Wire.withDOS(o => o.writeShort(0xFFFF)))))
-    intercept[EOFException](Wire.readTags(Wire.dis(
-      Wire.withDOS { o => o.writeShort(0xFFFF); Wire.writeString(o, "k") })))
+    intercept[EOFException](new Wire.Reader(
+      Wire.withDOS(o => o.writeShort(0xFFFF))).readString())
+    intercept[EOFException](new Wire.Reader(
+      Wire.withDOS { o => o.writeShort(0xFFFF); Wire.writeString(o, "k") }).readTags())
     // client-side part decoder: a hostile item count fails with EOF
     // instead of looping on allocations
     val hostileParts = Wire.withDOS { o =>
@@ -221,7 +222,70 @@ class WireFuzzSpec extends SparkSpec {
     // round-trip sanity: the guards must not reject LEGAL maximal shapes
     val legal = Wire.withDOS(o => Wire.writeFields(o,
       Map("s" -> FieldValue.ofString("x" * 70000))))
-    val back = Wire.readFields(Wire.dis(legal))
+    val back = new Wire.Reader(legal).readFields()
     assert(back("s").s.exists(_.length == 70000))
+  }
+
+  /** The hostile FieldValues blocks of the decoder units case. */
+  private val hostileBlocks: Seq[(Array[Byte], String)] = {
+    val inner = Wire.withDOS { b =>
+      b.writeShort(1); Wire.writeString(b, "k"); b.writeByte(3)
+      b.writeInt(Int.MaxValue); b.write("xy".getBytes("UTF-8"))
+    }
+    Seq(
+      Wire.withDOS { o => o.writeInt(Int.MaxValue); o.write(Array[Byte](1, 2)) } ->
+        "bad field block length",
+      Wire.withDOS(o => o.writeInt(-1)) -> "bad field block length",
+      Wire.withDOS { o => o.writeInt(inner.length); o.write(inner) } ->
+        "bad string value length")
+  }
+
+  private def decodePushs(payload: Array[Byte]): PushsStatement =
+    GraftTcpServer.decodePushs(payload)
+
+  test("cursor decoders refuse the hostile lengths inside a PUSHS point and a result part") {
+    hostileBlocks.foreach { case (block, msg) =>
+      val pushs = Wire.withDOS { o =>
+        o.writeInt(1); Wire.writeString(o, "cpu"); Wire.writeTags(o, Map("h" -> "a"))
+        o.writeLong(1000L); o.write(block)
+      }
+      val e1 = intercept[IOException](decodePushs(pushs))
+      assert(e1.getMessage.contains(msg))
+      val part = Wire.withDOS { o =>
+        o.writeByte(Wire.StatusDataRow); o.writeByte(0); Wire.writeString(o, "")
+        o.writeInt(1); o.writeLong(1L); Wire.writeString(o, "cpu")
+        Wire.writeTags(o, Map.empty); o.writeLong(1000L); o.write(block)
+      }
+      val e2 = intercept[IOException](Wire.decodeQueryResultParts(part))
+      assert(e2.getMessage.contains(msg))
+    }
+  }
+
+  test("truncating a PUSHS payload or a result part at every offset throws only IO errors") {
+    val fields = Map("v" -> FieldValue.ofDouble(3.14), "n" -> FieldValue.ofLong(-1L),
+      "s" -> FieldValue.ofString("h\u00e9llo"), "b" -> FieldValue.ofBool(true),
+      "z" -> FieldValue.NilValue)
+    val pushs = Wire.build { b =>
+      b.int32(3)
+      Seq(1L, 2L, 3L).foreach(ts => Wire.writePush(b, "cpu.load",
+        Map("host" -> "h1", "dc" -> "ams"), ts, fields))
+    }
+    val raw = Wire.encodeQueryResultPart(Wire.PointItem(5L, "cpu",
+      Map("h" -> "a"), 9L, fields, 0L, Nil, isAggregated = false), "CUR")
+    val agg = Wire.encodeQueryResultPart(Wire.PointItem(0L, "m", Map("h" -> "a"),
+      9L, Map.empty, 9L, Seq("sum_v" -> 1.0, "count_v" -> 2.0), isAggregated = true))
+    val cases: Seq[(Array[Byte], Array[Byte] => Any)] = Seq(
+      pushs -> (p => decodePushs(p)), raw -> (p => Wire.decodeQueryResultParts(p)),
+      agg -> (p => Wire.decodeQueryResultParts(p)))
+    cases.foreach { case (payload, decode) =>
+      decode(payload) // the whole payload decodes
+      (0 until payload.length).foreach { k =>
+        val r = scala.util.Try(decode(payload.take(k)))
+        assert(r.isFailure, s"a payload cut at $k of ${payload.length} decoded")
+        assert(r.failed.get.isInstanceOf[IOException],
+          s"cut at $k threw ${r.failed.get}, not an IOException")
+      }
+    }
+    assert(decodePushs(pushs).items.size == 3)
   }
 }
